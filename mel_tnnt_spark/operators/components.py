@@ -13,17 +13,20 @@ Logarithmic Rounds"). Each round:
     label(v) <- min(label(v), label(label(v)))      # pointer jumping
 on symmetrized edges, with localCheckpoint() per round to truncate
 lineage (SURVEY.md §4c) and an AQE-planned shuffle on the node key.
-Convergence = no label changed (a count aggregate, not a collect of
-data rows). The pointer-jumping step halves label-chain depth each
-round, so convergence is O(log diameter) rather than O(diameter) —
-a 4000-node path converges within 20 rounds (test-pinned) where plain
-propagation would need 4000.
+Convergence = no label changed: a sum over the round's change flags,
+observed on the round's own eager checkpoint (session.pin_observed),
+so a round costs no separate action. The pointer-jumping step halves
+label-chain depth each round, so convergence is O(log diameter)
+rather than O(diameter) — a 4000-node path converges within 20 rounds
+(test-pinned) where plain propagation would need 4000.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from mel_tnnt_spark.session import pin_observed
 
 
 def _driver_union_find(rows: list[tuple], spark, schema) -> DataFrame:
@@ -99,13 +102,12 @@ def connected_components(
             .groupBy("a")
             .agg(F.min("component").alias("neigh_component"))
         )
+        # least() skips nulls: a node without neighbours keeps its label
         propagated = labels.join(
             neigh_min, labels["node"] == neigh_min["a"], "left"
         ).select(
             "node",
-            F.least(
-                F.col("component"), F.coalesce("neigh_component", F.col("component"))
-            ).alias("component"),
+            F.least("component", "neigh_component").alias("component"),
             F.col("component").alias("_oc"),  # threaded for the change flag
         )
         # pointer jumping: component <- label(component). Every label is
@@ -117,22 +119,16 @@ def connected_components(
         hop = propagated.select(
             F.col("node").alias("_pn"), F.col("component").alias("_pc")
         )
-        new_labels = (
+        new_labels, (changed,) = pin_observed(
             propagated.join(hop, propagated["component"] == hop["_pn"], "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("component"), F.coalesce("_pc", F.col("component"))
-                ).alias("component"),
-                "_oc",
-            )
+            .select("node", F.least("component", "_pc").alias("component"), "_oc")
             .select(
                 "node",
                 "component",
                 (F.col("component") < F.col("_oc")).alias("_changed"),
-            )
-        ).localCheckpoint(eager=True)
-        changed = new_labels.agg(F.sum(F.col("_changed").cast("int")).alias("c")).collect()[0]["c"]
+            ),
+            F.sum(F.col("_changed").cast("int")),
+        )
         labels = new_labels.drop("_changed")
         if not changed:
             break

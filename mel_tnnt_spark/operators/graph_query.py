@@ -20,8 +20,7 @@ All pure DataFrame (zero UDFs), all oracle-gated:
   over an acyclic edge set (the tnnt:partOf hierarchy flatten):
   iterative DOUBLING (P <- P u P.P), so a depth-d hierarchy closes in
   ceil(log2 d) joins, not d — the components.py pointer-jumping
-  argument applied to reachability. localCheckpoint per round caps
-  the lineage exactly like components.connected_components.
+  argument applied to reachability.
 - `pagerank_micro` — PageRank with EXACT integer arithmetic: ranks are
   micro-units (1e12 == rank 1.0), the damping factor is the rational
   17/20, and every per-iteration op is integer div/sum — so the result
@@ -53,14 +52,86 @@ All pure DataFrame (zero UDFs), all oracle-gated:
 - `bgp_match` also accepts SPARQL property paths: a literal predicate
   ending in "+" becomes the transitive closure of that predicate's
   edges (set semantics) before joining.
+
+The four doubling loops (`reachability_pairs`, `transitive_closure`,
+`maintain_transitive_closure`'s delta, `shortest_paths`) are one
+helper, `_fixpoint`: a seed, a one-line step over `_compose`, and one
+eager localCheckpoint per round that observes (rows, value sum) in the
+same job — converged when that pair repeats, with no separate count.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import math
+import os
+import shutil
+
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from mel_tnnt_spark.session import pin_observed
+
 VAR_PREFIX = "?"
+_CLOSURE_COLS = ("node", "ancestor", "depth")
+# checkpoint cadence of pagerank_micro and deterministic_walks: every
+# iteration serializes them into barriers, never grows plans unbounded
+_CHECKPOINT_EVERY = 4
+
+
+def _edge_set(edges: DataFrame, src_col: str, dst_col: str, value_col=None):
+    """Distinct non-null (src, dst) edges, plus a unit path length in
+    `value_col` when given: the seed of every graph loop here."""
+    cols = [F.col(src_col).alias("src"), F.col(dst_col).alias("dst")]
+    if value_col:
+        cols.append(F.lit(1).cast("long").alias(value_col))
+    return (
+        edges.select(*cols)
+        .where(F.col("src").isNotNull() & F.col("dst").isNotNull())
+        .distinct()
+    )
+
+
+def _compose(a: DataFrame, b: DataFrame, value_col=None) -> DataFrame:
+    """Relational composition a.b over (src, dst[, value_col]): one
+    (s, d) row per a-edge (s, m) and b-edge (m, d), path lengths in
+    `value_col` added along the two legs."""
+    right = [F.col("src").alias("_mid"), F.col("dst").alias("_dst")]
+    out = [F.col("a.src").alias("src"), F.col("_dst").alias("dst")]
+    if value_col:
+        right.append(F.col(value_col).alias("_v"))
+        out.append((F.col(f"a.{value_col}") + F.col("_v")).alias(value_col))
+    return (
+        a.alias("a")
+        .join(b.select(*right), F.col("a.dst") == F.col("_mid"))
+        .select(*out)
+    )
+
+
+def _depth_rounds(max_depth: int) -> int:
+    # after k growing rounds doubling covers every path of length
+    # <= 2^k, so an input of depth <= max_depth stops growing within
+    # ceil(log2(max_depth)) + 1 rounds and one more round observes it;
+    # growth past that means a cycle or a deeper input than promised
+    return math.ceil(math.log2(max(2, max_depth))) + 2
+
+
+def _fixpoint(seed: DataFrame, step, max_rounds: int, value_col=None):
+    """state <- step(state) from `seed`, at most `max_rounds` times,
+    each state pinned by `pin_observed` with (rows, sum(value_col)).
+    Converged = that pair repeats: exact, because every step keeps the
+    last state's rows (a union) and only adds rows or lowers values
+    (distinct / min). An empty seed is returned at once: every step
+    here joins through the state. Returns (state, rows, converged)."""
+    metrics = [F.count(F.lit(1))] + ([F.sum(value_col)] if value_col else [])
+    state, seen = pin_observed(seed, *metrics)
+    if not seen[0]:
+        return state, 0, True
+    for _ in range(max_rounds):
+        state, now = pin_observed(step(state), *metrics)
+        if now == seen:
+            return state, now[0], True
+        seen = now
+    return state, seen[0], False
 
 
 def _pattern_legs(patterns):
@@ -119,9 +190,11 @@ def bgp_match(
 
     PROPERTY PATHS: a literal predicate ending in "+" (SPARQL
     one-or-more, e.g. "partOf+") turns that leg into the TRANSITIVE
-    CLOSURE of the base predicate's edges — iterative doubling over
-    the pred-filtered scan (set semantics for the reachability pairs,
-    matching SPARQL's path semantics), then joined like any other leg.
+    CLOSURE of the base predicate's edges — reachability_pairs over
+    the pred-filtered scan (set semantics, matching SPARQL's path
+    semantics), then joined like any other leg. `max_depth` bounds the
+    shortest path such a leg must cover; a longer one raises
+    ValueError rather than returning a truncated pair set.
 
     Scale shape: each pattern is one filtered projection of the
     triples scan — a literal pred reaches the parquet scan as a
@@ -175,13 +248,8 @@ def bgp_match(
         if out is None:
             out = leg
             continue
-        shared = sorted(set(out.columns) & set(leg.columns))
-        if not shared:
-            raise ValueError(
-                "bgp_match: disconnected pattern group (no shared variable) — "
-                "run the groups as separate matches instead of a cross product"
-            )
-        out = out.join(leg, shared)
+        # _pattern_legs' order guarantees a shared variable
+        out = out.join(leg, sorted(set(out.columns) & set(leg.columns)))
     return out
 
 
@@ -193,44 +261,25 @@ def reachability_pairs(
 ) -> DataFrame:
     """All DISTINCT (subj, obj) reachability pairs over a directed edge
     set — set semantics, CYCLE-SAFE (the SPARQL "one-or-more" path
-    evaluation): iterative doubling over distinct pairs, converging
-    when the pair count stops growing. The state space is finite
-    (<= n^2 pairs), so convergence needs no acyclicity assumption —
-    unlike transitive_closure, whose exact-depth contract makes cycles
-    divergent by construction. max_depth only bounds the path length
-    that must be covered (ceil(log2) + 1 doubling rounds); the
-    fixpoint itself always terminates: doubling adds no new pair only
-    at the full fixpoint, and the covered path length doubles per
-    round, so the loop runs at most ceil(log2(longest shortest
-    path)) <= log2(n) growing rounds regardless of max_depth."""
-    pairs = (
-        edges.select(F.col(src_col).alias("subj"), F.col(dst_col).alias("obj"))
-        .where(F.col("subj").isNotNull() & F.col("obj").isNotNull())
-        .distinct()
-        .localCheckpoint(eager=True)
+    evaluation): `_fixpoint` doubling over distinct pairs,
+    P <- P u P.P, until the pair set stops growing. The state space is
+    finite (<= n^2 pairs), so convergence needs no acyclicity
+    assumption — unlike transitive_closure, whose exact-depth contract
+    makes cycles divergent by construction. `max_depth` bounds the
+    length of the shortest path that must be covered: the loop gets
+    ceil(log2(max_depth)) + 1 growing rounds and raises ValueError if
+    the pairs still grow past them."""
+    pairs, _, converged = _fixpoint(
+        _edge_set(edges, src_col, dst_col),
+        lambda p: p.unionByName(_compose(p, p)).distinct(),
+        _depth_rounds(max_depth),
     )
-    del max_depth  # kept for signature symmetry; convergence is count-driven
-    n = pairs.count()
-    while True:
-        grown = (
-            pairs.alias("a")
-            .join(
-                pairs.select(
-                    F.col("subj").alias("_mid"), F.col("obj").alias("_obj2")
-                ),
-                F.col("a.obj") == F.col("_mid"),
-            )
-            .select(F.col("a.subj").alias("subj"), F.col("_obj2").alias("obj"))
+    if not converged:
+        raise ValueError(
+            f"reachability_pairs: still growing past max_depth={max_depth} — "
+            "raise max_depth"
         )
-        new_pairs = (
-            pairs.unionByName(grown).distinct().localCheckpoint(eager=True)
-        )
-        new_n = new_pairs.count()
-        pairs = new_pairs
-        if new_n == n:
-            break
-        n = new_n
-    return pairs
+    return pairs.toDF("subj", "obj")
 
 
 def transitive_closure(
@@ -244,60 +293,26 @@ def transitive_closure(
     The partOf-hierarchy flatten: fs path -> folder -> repo -> org
     chains become one row per (item, container-at-any-level).
 
-    Iterative doubling: P1 = E; P_{2k} = P_k u (P_k . P_k). A depth-d
+    `_fixpoint` doubling: P1 = E; P_{2k} = P_k u (P_k . P_k). A depth-d
     hierarchy converges in ceil(log2 d) self-joins — the reachability
     twin of components.py's pointer jumping (a 4000-deep chain needs 12
     rounds, not 4000). On an acyclic input every (node, ancestor) pair
     has a UNIQUE path, so the union needs only distinct(), no min();
-    a cycle would diverge, hence the max_depth guard raises rather
-    than looping forever. localCheckpoint per round truncates lineage
-    (the components.py discipline); the closure's output size is the
+    a cycle would diverge, hence the max_depth round bound raises
+    rather than looping forever. The closure's output size is the
     inherent O(n * depth) of the answer itself."""
-    paths = (
-        edges.select(
-            F.col(src_col).alias("node"),
-            F.col(dst_col).alias("ancestor"),
-            F.lit(1).cast("long").alias("depth"),
-        )
-        .where(F.col("node").isNotNull() & F.col("ancestor").isNotNull())
-        .distinct()
-        .localCheckpoint(eager=True)
+    paths, _, converged = _fixpoint(
+        _edge_set(edges, src_col, dst_col, "depth"),
+        lambda p: p.unionByName(_compose(p, p, "depth")).distinct(),
+        _depth_rounds(max_depth),
+        "depth",
     )
-    import math
-
-    # after k growth rounds the closure covers every depth <= 2^k, so
-    # an acyclic input of depth <= max_depth must stop growing within
-    # ceil(log2(max_depth)) + 1 rounds; one more growing round means a
-    # cycle or a deeper hierarchy than promised
-    max_rounds = max(1, math.ceil(math.log2(max(2, max_depth))) + 1)
-    n = paths.count()
-    for _ in range(max_rounds + 1):
-        grown = (
-            paths.alias("a")
-            .join(
-                paths.select(
-                    F.col("node").alias("_mid"),
-                    F.col("ancestor").alias("_anc2"),
-                    F.col("depth").alias("_d2"),
-                ).alias("b"),
-                F.col("a.ancestor") == F.col("_mid"),
-            )
-            .select(
-                F.col("a.node").alias("node"),
-                F.col("_anc2").alias("ancestor"),
-                (F.col("a.depth") + F.col("_d2")).alias("depth"),
-            )
+    if not converged:
+        raise ValueError(
+            f"transitive_closure: still growing past max_depth={max_depth} — "
+            "cyclic input or raise max_depth"
         )
-        new_paths = paths.unionByName(grown).distinct().localCheckpoint(eager=True)
-        new_n = new_paths.count()
-        paths = new_paths
-        if new_n == n:
-            return paths
-        n = new_n
-    raise ValueError(
-        f"transitive_closure: still growing past max_depth={max_depth} — "
-        "cyclic input or raise max_depth"
-    )
+    return paths.toDF(*_CLOSURE_COLS)
 
 
 def _closure_parts(state_path: str):
@@ -306,8 +321,6 @@ def _closure_parts(state_path: str):
     closure, `seg-<n>/` holds one fold's delta. Read = newest base u
     all segs (duplicates from a crash between compaction rename and
     seg cleanup are absorbed by distinct on read)."""
-    import os
-
     bases, segs = [], []
     if os.path.isdir(state_path):
         for d in os.listdir(state_path):
@@ -334,8 +347,6 @@ def read_transitive_closure(spark, state_path: str) -> DataFrame | None:
     """Current maintained closure: newest compacted base plus the
     append-log segments since it, distinct (absorbs the
     compaction-crash duplicate window). None when no state exists."""
-    import os
-
     base, segs, _ = _closure_parts(state_path)
     parts = ([base] if base else []) + segs
     if not parts:
@@ -367,13 +378,13 @@ def maintain_transitive_closure(
 
         N_{k+1} = N_k  u  N_k.C  u  C.N_k  u  N_k.N_k   (minus C)
 
-    to fixpoint — every new path decomposes into old-closure runs
+    with `_fixpoint` — every new path decomposes into old-closure runs
     alternating with >= 1 new edge, and each round doubles the number
     of new-edge segments a discovered path can contain, so the loop
     converges in ceil(log2(new-edge segments)) rounds. Joins are only
     delta x closure / delta x delta; the stored closure is never
     re-derived. Acyclic contract as transitive_closure (cycle ->
-    ValueError via max_depth growth guard).
+    ValueError via the same max_depth round bound).
 
     State is LSM-SHAPED like maintain_overlap_index (dedup.py): each
     fold appends ONLY its delta as `seg-<n>/` (O(delta) write — the
@@ -388,97 +399,54 @@ def maintain_transitive_closure(
     Idempotent replay for free: a replayed batch's paths are already
     rows of C, so the delta shrinks to empty and the fold writes
     nothing at all."""
-    import os
-    import shutil
-
-    fresh = (
-        edge_batch.select(
-            F.col(src_col).alias("node"),
-            F.col(dst_col).alias("ancestor"),
-            F.lit(1).cast("long").alias("depth"),
-        )
-        .where(F.col("node").isNotNull() & F.col("ancestor").isNotNull())
-        .distinct()
-    )
+    fresh = _edge_set(edge_batch, src_col, dst_col, "depth")
     base, segs, nxt = _closure_parts(state_path)
     stored = read_transitive_closure(spark, state_path)
     # pin the view ONCE: the delta loop probes the closure in ~3 joins
     # per round — without this, every probe re-reads base + segs from
     # parquet and re-runs the distinct
     closure = (
-        stored.localCheckpoint(eager=True)
+        stored.select(*_CLOSURE_COLS).toDF("src", "dst", "depth")
+        .localCheckpoint(eager=True)
         if stored is not None
         else fresh.limit(0)
     )
 
-    def _minus(a: DataFrame, b: DataFrame) -> DataFrame:
+    def _minus(a: DataFrame) -> DataFrame:
         # subtract on the FULL (node, ancestor, depth) triple: on a DAG
         # a pair can be reachable at several depths and the from-scratch
         # closure keeps every one — dropping by pair would lose the new
         # depths and break chained == scratch. left_anti IS that
         # subtract (same rows as the historical left-join +
         # null-filter, one fewer projected column and no post-filter).
-        return a.join(
-            b.select("node", "ancestor", "depth"),
-            ["node", "ancestor", "depth"],
-            "left_anti",
-        )
+        return a.join(closure, ["src", "dst", "depth"], "left_anti")
 
-    def _compose(a: DataFrame, b: DataFrame) -> DataFrame:
-        return (
-            a.alias("x")
-            .join(
-                b.select(
-                    F.col("node").alias("_mid"),
-                    F.col("ancestor").alias("_anc"),
-                    F.col("depth").alias("_d"),
-                ),
-                F.col("x.ancestor") == F.col("_mid"),
-            )
-            .select(
-                F.col("x.node").alias("node"),
-                F.col("_anc").alias("ancestor"),
-                (F.col("x.depth") + F.col("_d")).alias("depth"),
-            )
-        )
-
-    import math
-
-    delta = _minus(fresh, closure).localCheckpoint(eager=True)
-    n_delta = delta.count()
-    # same round bound as transitive_closure: each growing round
-    # doubles the number of new-edge segments a discovered path can
-    # contain, so an acyclic fold stabilizes within
-    # ceil(log2(max_depth)) + 1 rounds
-    rounds_left = max(1, math.ceil(math.log2(max(2, max_depth))) + 1)
-    while n_delta:
+    def _step(delta: DataFrame) -> DataFrame:
         # N.(C u N) == N.C u N.N — two joins instead of three per round
         # (one exchange + union arm saved; identical grown set)
         grown = (
-            _compose(delta, closure.unionByName(delta))
-            .unionByName(_compose(closure, delta))
+            _compose(delta, closure.unionByName(delta), "depth")
+            .unionByName(_compose(closure, delta, "depth"))
             .distinct()
         )
-        new_delta = (
-            _minus(grown, closure)
-            .unionByName(delta)
-            .distinct()
-            .localCheckpoint(eager=True)
+        return _minus(grown).unionByName(delta).distinct()
+
+    # same round bound as transitive_closure: each growing round doubles
+    # the number of new-edge segments a discovered path can contain
+    delta, n_delta, converged = _fixpoint(
+        _minus(fresh), _step, _depth_rounds(max_depth), "depth"
+    )
+    if not converged:
+        raise ValueError(
+            "maintain_transitive_closure: delta still growing past "
+            f"max_depth={max_depth} — cyclic input or raise max_depth"
         )
-        new_n = new_delta.count()
-        if new_n == n_delta:
-            break
-        delta, n_delta = new_delta, new_n
-        rounds_left -= 1
-        if rounds_left < 0:
-            raise ValueError(
-                "maintain_transitive_closure: delta still growing past "
-                f"max_depth={max_depth} — cyclic input or raise max_depth"
-            )
+    closure = closure.toDF(*_CLOSURE_COLS)
     if n_delta == 0:
         # replayed (or fully-known) batch: nothing to write — the
         # no-op IS the idempotency
         return closure
+    delta = delta.toDF(*_CLOSURE_COLS)
 
     def _staged_write(df: DataFrame, name: str) -> None:
         staging = os.path.join(state_path, f"__staging-{name}")
@@ -511,7 +479,6 @@ def pagerank_micro(
     src_col: str,
     dst_col: str,
     iterations: int = 3,
-    checkpoint_every: int = 4,
 ) -> DataFrame:
     """PageRank in exact micro-integer arithmetic: damping 17/20
     (=0.85 exactly), ranks in units of 1e-12 starting at 1.0 per node
@@ -533,9 +500,7 @@ def pagerank_micro(
     hidden)."""
     if iterations < 0:
         raise ValueError(f"pagerank_micro: iterations must be >= 0, got {iterations}")
-    e = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-    ).where(F.col("src").isNotNull() & F.col("dst").isNotNull()).distinct()
+    e = _edge_set(edges, src_col, dst_col)
     # Hoist the out-degree join OUT of the iteration loop (guide §2.4:
     # remove shuffles outright): the degree of an edge's source is
     # loop-invariant, so attach it to the edge list ONCE — each
@@ -546,7 +511,7 @@ def pagerank_micro(
     # an eager multi-hundred-MB edge checkpoint measurably DESTABILIZED
     # the query (block-manager churn: 7-34 s spread at sf1.0 vs
     # 8.2-15 s lazy, medians 13 vs 8.5). Long runs re-derive the
-    # reused exchanges once per checkpoint_every window — the cadence
+    # reused exchanges once per _CHECKPOINT_EVERY window — the cadence
     # bounds it.
     deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
     e_deg = e.join(deg, "src").select("src", "dst", "outdeg")
@@ -600,7 +565,7 @@ def pagerank_micro(
         # speedup 2.06x at 8M edges with eager per-iteration
         # checkpoints vs one fused multi-iteration job). Checkpoint
         # only every few iterations to cap plan depth on long runs.
-        if it % checkpoint_every == 0 and it < iterations:
+        if it % _CHECKPOINT_EVERY == 0 and it < iterations:
             inflow = inflow.localCheckpoint(eager=True)
     return nodes.join(inflow, "node", "left").select(
         "node",
@@ -627,47 +592,25 @@ def shortest_paths(
     round is lossless (any half of a <= max_hops shortest path is
     itself a shortest path of <= max_hops by subpath optimality).
     Cycles need no guard: the pruned state space is finite, the
-    groupBy-min converges. One groupBy(src, dst) shuffle per round,
-    localCheckpoint per round (the components.py discipline)."""
+    groupBy-min converges. One groupBy(src, dst) shuffle per round;
+    `_fixpoint` stops early once a round changes nothing."""
     if max_hops < 1:
         raise ValueError(f"shortest_paths: max_hops must be >= 1, got {max_hops}")
-    import math
 
-    d = (
-        edges.select(
-            F.col(src_col).alias("src"),
-            F.col(dst_col).alias("dst"),
-            F.lit(1).cast("long").alias("dist"),
-        )
-        .where(F.col("src").isNotNull() & F.col("dst").isNotNull())
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    rounds = math.ceil(math.log2(max_hops)) if max_hops > 1 else 0
-    for _ in range(rounds):
-        comp = (
-            d.alias("a")
-            .join(
-                d.select(
-                    F.col("src").alias("_mid"),
-                    F.col("dst").alias("_dst2"),
-                    F.col("dist").alias("_d2"),
-                ),
-                F.col("a.dst") == F.col("_mid"),
-            )
-            .select(
-                F.col("a.src").alias("src"),
-                F.col("_dst2").alias("dst"),
-                (F.col("a.dist") + F.col("_d2")).alias("dist"),
-            )
-        )
-        d = (
-            d.unionByName(comp)
+    def _step(d: DataFrame) -> DataFrame:
+        return (
+            d.unionByName(_compose(d, d, "dist"))
             .where(F.col("dist") <= max_hops)
             .groupBy("src", "dst")
             .agg(F.min("dist").alias("dist"))
-            .localCheckpoint(eager=True)
         )
+
+    d, _, _ = _fixpoint(
+        _edge_set(edges, src_col, dst_col, "dist"),
+        _step,
+        math.ceil(math.log2(max_hops)),
+        "dist",
+    )
     return d
 
 
@@ -676,7 +619,6 @@ def deterministic_walks(
     src_col: str,
     dst_col: str,
     walk_length: int,
-    checkpoint_every: int = 4,
 ) -> DataFrame:
     """DeepWalk-style random-walk corpus generation (Perozzi et al.
     2014) with DETERMINISTIC md5-derived step choices — the
@@ -699,25 +641,19 @@ def deterministic_walks(
     broadcastable outdeg attach. walk_length steps = walk_length
     equi-joins; frontier size only shrinks (dangling exits).
 
-    checkpoint_every: the frontier is referenced twice per step (next
-    step's input + the output union), so SOME materialization caps the
-    recompute fan-out — but eager-checkpointing EVERY step serializes
-    the walk into per-step barriers, the exact shape that cost
-    pagerank_micro 2.2x before its cadence fix (round-6 verdict #4
-    applied here). Between cadence points the union arms recompute at
-    most checkpoint_every-1 cheap equi-joins from the last checkpoint;
-    walks are bit-identical for any cadence."""
-    from pyspark.sql import Window
-
+    Checkpoint cadence: the frontier is referenced twice per step
+    (next step's input + the output union), so SOME materialization
+    caps the recompute fan-out — but eager-checkpointing EVERY step
+    serializes the walk into per-step barriers, the exact shape that
+    cost pagerank_micro 2.2x before its cadence fix (round-6 verdict
+    #4 applied here). Between cadence points the union arms recompute
+    at most _CHECKPOINT_EVERY-1 cheap equi-joins from the last
+    checkpoint; walks are bit-identical for any cadence."""
     if walk_length < 0:
         raise ValueError(
             f"deterministic_walks: walk_length must be >= 0, got {walk_length}"
         )
-    e = (
-        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-        .where(F.col("src").isNotNull() & F.col("dst").isNotNull())
-        .distinct()
-    )
+    e = _edge_set(edges, src_col, dst_col)
     adj = e.withColumn(
         "idx",
         F.row_number().over(Window.partitionBy("src").orderBy("dst")) - 1,
@@ -757,29 +693,18 @@ def deterministic_walks(
             ),
             ["_cur", "idx"],
         ).select("start", F.lit(k).alias("step"), "node")
-        if checkpoint_every >= 1 and k % checkpoint_every == 0 and k < walk_length:
+        if k % _CHECKPOINT_EVERY == 0 and k < walk_length:
             frontier = frontier.localCheckpoint(eager=True)
         out = out.unionByName(frontier)
     return out
 
 
-def triangle_count(
-    edges: DataFrame, a_col: str, b_col: str
-) -> DataFrame:
-    """Per-node triangle participation counts over an UNDIRECTED graph
-    given as (a, b) pairs (orientation/duplicates/self-loops cleaned
-    here). Returns (node, n_triangles) for nodes in >= 1 triangle.
-
-    Degree-ordered orientation (Suri & Vassilvitskii 2011, the MapReduce
-    triangle-count bound): orient each edge from its lower-(degree,
-    node) endpoint to the higher one. In that orientation every
-    triangle has exactly ONE vertex with two out-edges, so counting
-    closed wedges (u->v, u->w, {v,w} in E) counts each triangle exactly
-    once — and the wedge generation at each node is C(outdeg, 2) with
-    outdeg bounded by O(sqrt(m)), so a crawl-graph star (one host
-    linked by millions) costs sqrt-bounded wedges instead of
-    degree^2. The closing probe is an equi-join against the canonical
-    edge set on the (least, greatest) key — never a cartesian."""
+def _degree_ordered(edges: DataFrame, a_col: str, b_col: str):
+    """(canon, e): the canonical undirected edge set (lo < hi, no
+    self-loops, distinct, pinned), and the same edges with both
+    endpoint degrees (dlo, dhi) in the degree-ordered orientation of
+    triangle_count: `low_end` is the lower-(degree, id) endpoint,
+    `other_end` the other one."""
     canon = (
         edges.select(
             F.least(F.col(a_col), F.col(b_col)).alias("lo"),
@@ -799,19 +724,38 @@ def triangle_count(
         .groupBy("node")
         .agg(F.count(F.lit(1)).alias("deg"))
     )
-    oriented = (
+    lo_first = (F.col("dlo") < F.col("dhi")) | (
+        (F.col("dlo") == F.col("dhi")) & (F.col("lo") < F.col("hi"))
+    )
+    e = (
         canon.join(deg.select(F.col("node").alias("lo"), F.col("deg").alias("dlo")), "lo")
         .join(deg.select(F.col("node").alias("hi"), F.col("deg").alias("dhi")), "hi")
-        .select(
-            F.when(
-                (F.col("dlo") < F.col("dhi"))
-                | ((F.col("dlo") == F.col("dhi")) & (F.col("lo") < F.col("hi"))),
-                F.struct(F.col("lo").alias("src"), F.col("hi").alias("dst")),
-            )
-            .otherwise(F.struct(F.col("hi").alias("src"), F.col("lo").alias("dst")))
-            .alias("e")
-        )
-        .select("e.src", "e.dst")
+        .withColumn("low_end", F.when(lo_first, F.col("lo")).otherwise(F.col("hi")))
+        .withColumn("other_end", F.when(lo_first, F.col("hi")).otherwise(F.col("lo")))
+    )
+    return canon, e
+
+
+def triangle_count(
+    edges: DataFrame, a_col: str, b_col: str
+) -> DataFrame:
+    """Per-node triangle participation counts over an UNDIRECTED graph
+    given as (a, b) pairs (orientation/duplicates/self-loops cleaned
+    here). Returns (node, n_triangles) for nodes in >= 1 triangle.
+
+    Degree-ordered orientation (Suri & Vassilvitskii 2011, the MapReduce
+    triangle-count bound): orient each edge from its lower-(degree,
+    node) endpoint to the higher one. In that orientation every
+    triangle has exactly ONE vertex with two out-edges, so counting
+    closed wedges (u->v, u->w, {v,w} in E) counts each triangle exactly
+    once — and the wedge generation at each node is C(outdeg, 2) with
+    outdeg bounded by O(sqrt(m)), so a crawl-graph star (one host
+    linked by millions) costs sqrt-bounded wedges instead of
+    degree^2. The closing probe is an equi-join against the canonical
+    edge set on the (least, greatest) key — never a cartesian."""
+    canon, e = _degree_ordered(edges, a_col, b_col)
+    oriented = e.select(
+        F.col("low_end").alias("src"), F.col("other_end").alias("dst")
     )
     wedges = (
         oriented.alias("x")
@@ -891,48 +835,14 @@ def edge_neighborhood_jaccard(
     O(sum deg^2) — a crawl star contributes its leaves' tiny degrees,
     not hub-degree^2. The membership probe is an equi-join against
     the canonical edge set."""
-    canon = (
-        edges.select(
-            F.least(F.col(a_col), F.col(b_col)).alias("lo"),
-            F.greatest(F.col(a_col), F.col(b_col)).alias("hi"),
-        )
-        .where(
-            F.col("lo").isNotNull()
-            & F.col("hi").isNotNull()
-            & (F.col("lo") != F.col("hi"))
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    canon, e = _degree_ordered(edges, a_col, b_col)
     adj = canon.select(
-        F.col("lo").alias("node"), F.col("hi").alias("nb")
-    ).unionByName(canon.select(F.col("hi").alias("node"), F.col("lo").alias("nb")))
-    deg = adj.groupBy("node").agg(F.count(F.lit(1)).alias("deg"))
-    e = (
-        canon.join(deg.select(F.col("node").alias("lo"), F.col("deg").alias("dlo")), "lo")
-        .join(deg.select(F.col("node").alias("hi"), F.col("deg").alias("dhi")), "hi")
-        .withColumn(
-            "low_end",
-            F.when(
-                (F.col("dlo") < F.col("dhi"))
-                | ((F.col("dlo") == F.col("dhi")) & (F.col("lo") < F.col("hi"))),
-                F.col("lo"),
-            ).otherwise(F.col("hi")),
-        )
-        .withColumn(
-            "other_end",
-            F.when(F.col("low_end") == F.col("lo"), F.col("hi")).otherwise(
-                F.col("lo")
-            ),
-        )
-    )
+        F.col("lo").alias("low_end"), F.col("hi").alias("w")
+    ).unionByName(canon.select(F.col("hi").alias("low_end"), F.col("lo").alias("w")))
     # expand candidates from the low-degree endpoint, excluding the
     # edge partner itself (w == other endpoint is not a COMMON
     # neighbor candidate — it is not adjacent to itself)
-    cand = e.join(
-        adj.select(F.col("node").alias("low_end"), F.col("nb").alias("w")),
-        "low_end",
-    ).where(F.col("w") != F.col("other_end"))
+    cand = e.join(adj, "low_end").where(F.col("w") != F.col("other_end"))
     shared = (
         cand.join(
             canon.select(

@@ -16,7 +16,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
@@ -154,3 +154,16 @@ def local_dim(spark: SparkSession, rows, schema: str):
     return spark.createDataFrame(
         spark.sparkContext.parallelize(rows, 1), schema
     )
+
+
+def pin_observed(df: DataFrame, *metrics: Column) -> tuple[DataFrame, tuple]:
+    """`df.localCheckpoint(eager=True)` plus the values of the aggregate
+    `metrics` over the pinned rows, observed in the checkpoint's own
+    job: no second action (a `.count()` after the pin is two more
+    jobs)."""
+    obs = Observation()
+    pinned = df.observe(
+        obs, *[m.alias(f"_m{i}") for i, m in enumerate(metrics)]
+    ).localCheckpoint(eager=True)
+    got = obs.get
+    return pinned, tuple(got[f"_m{i}"] for i in range(len(metrics)))

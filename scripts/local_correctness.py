@@ -4,20 +4,25 @@ Runs EVERY `__spark_entry__.queries()` entry on Spark and its
 `oracle_sql()` twin on DuckDB over the same parquet tables — the same
 compare the driver's gate performs (row count + column names +
 order-insensitive normalized values) — and writes one JSON row per
-query to CORRECTNESS_LOCAL_r{N}.json. Unlike the driver's harness
-(which evaluates only the first 50 registered queries), this covers
-the full register, so the committed artifact is the reproducible
-evidence behind COVERAGE.md's "all queries green" claim.
+query to a JSON file (default `correctness_local.json`, untracked;
+pass `--out CORRECTNESS_LOCAL_r{N}.json` to write a round artifact).
+Unlike a gate that evaluates only the first 50 registered queries,
+this covers the full register, so a committed artifact is the
+reproducible evidence behind COVERAGE.md's "all queries green" claim.
 
 Usage:
-    python scripts/local_correctness.py [--sf-dir /root/testdata/sf0.01] \
-        [--out CORRECTNESS_LOCAL_r04.json]
+    SPARK_GRAFT_CPUS=4 python scripts/local_correctness.py \
+        [--sf-dir DIR] [--out correctness_local.json] \
+        [--queries q28,q109]
+
+Cores come from $SPARK_GRAFT_CPUS (local[*] when unset).
 """
 
 from __future__ import annotations
 
 import argparse
 import json
+import os
 import sys
 import time
 from pathlib import Path
@@ -36,7 +41,7 @@ def _duck(sql: str, sf_dir: str):
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.01")
-    ap.add_argument("--out", default=str(REPO / "CORRECTNESS_LOCAL_r04.json"))
+    ap.add_argument("--out", default=str(REPO / "correctness_local.json"))
     ap.add_argument(
         "--queries", default="",
         help="comma-separated subset to check (default: all registered)",
@@ -48,7 +53,9 @@ def main() -> int:
     import __spark_entry__ as e
 
     spark = (
-        SparkSession.builder.master("local[32]")
+        SparkSession.builder.master(
+            f"local[{os.environ.get('SPARK_GRAFT_CPUS', '*')}]"
+        )
         .appName("local-correctness")
         .config("spark.sql.shuffle.partitions", "32")
         .config("spark.driver.memory", "8g")

@@ -626,6 +626,18 @@ def test_bgp_property_path_one_or_more(spark):
     assert got2 == {("doc:1", "en"), ("doc:2", "fr")}
 
 
+def test_bgp_property_path_max_depth_bounds_the_leg(spark):
+    # a 40-edge chain: its longest path needs 6 doubling rounds, more
+    # than max_depth=4 allows, so the p+ leg raises instead of
+    # returning a truncated pair set
+    rows = [(f"n{i}", "next", f"n{i + 1}") for i in range(40)]
+    t = spark.createDataFrame(rows, "subj string, pred string, obj string")
+    with pytest.raises(ValueError, match="max_depth=4"):
+        bgp_match(t, [("?s", "next+", "?t")], max_depth=4)
+    got = {(r["s"], r["t"]) for r in bgp_match(t, [("?s", "next+", "?t")]).collect()}
+    assert got == {(f"n{i}", f"n{j}") for i in range(41) for j in range(i + 1, 41)}
+
+
 def _bfs_ref(edge_list, max_hops):
     from collections import defaultdict, deque
 
@@ -840,3 +852,78 @@ def test_edge_neighborhood_jaccard_matches_brute(spark):
     assert len(s) == 20 and all(
         r["n_shared"] == 0 and r["jaccard"] == 0.0 for r in s
     )
+
+
+# a ternary tree plus skip edges: a DAG with multi-depth pairs
+_LOOP_EDGES = [(i, (i - 1) // 3) for i in range(1, 40)] + [
+    (i, (i - 1) // 9) for i in range(10, 40, 7)
+]
+
+
+def _loop_case(spark, tmp_path, op):
+    """(call, reference rows) for one graph loop over _LOOP_EDGES."""
+    from mel_tnnt_spark.operators.components import connected_components
+    from mel_tnnt_spark.operators.graph_query import (
+        maintain_transitive_closure,
+        reachability_pairs,
+        shortest_paths,
+    )
+
+    def df(edge_list):
+        return spark.createDataFrame(edge_list, "child long, parent long")
+
+    closure = _closure_ref(_LOOP_EDGES)
+    if op == "transitive_closure":
+        return lambda: transitive_closure(df(_LOOP_EDGES), "child", "parent"), closure
+    if op == "reachability_pairs":
+        return (
+            lambda: reachability_pairs(df(_LOOP_EDGES), "child", "parent"),
+            {(n, a) for n, a, _ in closure},
+        )
+    if op == "shortest_paths":
+        return (
+            lambda: shortest_paths(df(_LOOP_EDGES), "child", "parent", 3),
+            {(s, d, k) for (s, d), k in _bfs_ref(_LOOP_EDGES, 3).items()},
+        )
+    if op == "maintain_transitive_closure":
+        state = str(tmp_path / "closure")
+        maintain_transitive_closure(spark, state, df(_LOOP_EDGES[:20]), "child", "parent")
+        return (
+            lambda: maintain_transitive_closure(
+                spark, state, df(_LOOP_EDGES[20:]), "child", "parent"
+            ),
+            closure,
+        )
+    # the tree is one component, labelled by its root 0
+    return (
+        lambda: connected_components(
+            df(_LOOP_EDGES), "child", "parent", driver_threshold=0
+        ),
+        {(n, 0) for n in range(40)},
+    )
+
+
+@pytest.mark.parametrize(
+    "op",
+    [
+        "transitive_closure",
+        "reachability_pairs",
+        "shortest_paths",
+        "maintain_transitive_closure",
+        "connected_components",
+    ],
+)
+def test_graph_loops_run_no_extra_actions(spark, tmp_path, monkeypatch, op):
+    """Convergence is read from each round's checkpoint job: a loop that
+    calls count() or collect() per round fails here."""
+    call, want = _loop_case(spark, tmp_path, op)
+
+    def _refuse(self, *args, **kwargs):
+        raise AssertionError(f"{op} ran an extra count/collect action")
+
+    cls = type(spark.range(1))
+    with monkeypatch.context() as m:
+        m.setattr(cls, "count", _refuse)
+        m.setattr(cls, "collect", _refuse)
+        out = call()
+    assert {tuple(r) for r in out.collect()} == want
