@@ -273,9 +273,9 @@ def maintain_domain_caps(
     excluded when computing prior counts (same own-tag anti-join
     discipline as maintain_span_index), so replaying the batch that
     crashed (or the most recent one) sees the exact pre-batch state,
-    reproduces the identical decisions, and rewrites an identical
-    content-addressed directory (staged+rename; a crash mid-write
-    leaves only __staging-). Replaying an OLDER batch after later
+    reproduces the identical decisions, and republishes an identical
+    content-addressed directory (`state.publish`; crash windows in
+    mel_tnnt_spark/state.py). Replaying an OLDER batch after later
     batches were applied is NOT supported: its prior counts would
     include the later batches' accepted rows, producing different
     decisions (a per-batch prior-count ledger, the
@@ -284,9 +284,9 @@ def maintain_domain_caps(
     Chained == scratch cap_per_group on the union whenever ids ascend
     with arrival — q98 gates that equivalence."""
     import os
-    import shutil
 
     from mel_tnnt_spark.operators.dedup import content_tag
+    from mel_tnnt_spark.state import entries, publish
 
     if cap < 1:
         raise ValueError(f"maintain_domain_caps: cap must be >= 1, got {cap}")
@@ -297,8 +297,8 @@ def maintain_domain_caps(
     log_dir = os.path.join(state_path, "accepted")
     prior_dirs = [
         os.path.join(log_dir, d)
-        for d in (os.listdir(log_dir) if os.path.isdir(log_dir) else [])
-        if d.startswith("batch=") and d != f"batch={tag}"
+        for d in entries(log_dir, "batch=")
+        if d != f"batch={tag}"
     ]
     if prior_dirs:
         prior = (
@@ -318,14 +318,7 @@ def maintain_domain_caps(
     accepted = ranked.where(
         F.col("rank_in_group") + F.col("_prior") <= cap
     ).select("id", "grp")
-    staging = os.path.join(log_dir, f"__staging-{tag}")
-    final = os.path.join(log_dir, f"batch={tag}")
-    if os.path.isdir(staging):
-        shutil.rmtree(staging)
-    accepted.write.mode("overwrite").parquet(staging)
-    if os.path.isdir(final):
-        shutil.rmtree(final)
-    os.rename(staging, final)
+    final = publish(accepted, log_dir, f"batch={tag}")
     acc = spark.read.parquet(final).withColumn("accepted", F.lit(True))
     return (
         base.join(acc, ["id", "grp"], "left")

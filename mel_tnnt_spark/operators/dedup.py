@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from mel_tnnt_spark.state import entries, pin, publish, sweep
+
 # portable 60-bit hash: conv(substr(md5(x),1,15),16,10)
 def _h(col_expr: str) -> str:
     return f"CAST(conv(substr(md5({col_expr}), 1, 15), 16, 10) AS BIGINT)"
@@ -662,7 +664,6 @@ FP_INDEX_VERSION = 2  # full-window winnowing minima, md5-60bit hash
 _OVERLAP_META = "_overlap_meta.json"
 _FP_SUBDIR = "fp"
 _FP_LOG_SUBDIR = "fp_log"
-_LOG_STAGING_PREFIX = "__staging-"
 DEFAULT_COMPACT_EVERY = 16
 
 
@@ -674,30 +675,23 @@ def _overlap_meta_check(index_path: str, n: int, window: int, n_buckets: int) ->
     every subsequent call; mismatch raises instead of corrupting.
     Also records the bucket layout (base table and append-log must
     share one bucket function); returns the pinned n_buckets."""
-    import json
     import os
 
-    mp = os.path.join(index_path, _OVERLAP_META)
-    if os.path.exists(mp):
-        with open(mp) as f:
-            meta = json.load(f)
-        got = (meta.get("n"), meta.get("window"), meta.get("fp_version"))
-        want = (n, window, FP_INDEX_VERSION)
-        if got != want:
-            raise ValueError(
-                f"overlap index at {index_path} was built with "
-                f"(n, window, fp_version)={got}; this call uses {want} — "
-                "mixed fingerprint definitions are incomparable. Rebuild "
-                "the index or call with the recorded parameters."
-            )
-        return int(meta.get("n_buckets", n_buckets))
-    os.makedirs(index_path, exist_ok=True)
-    with open(mp, "w") as f:
-        json.dump(
-            {"n": n, "window": window, "fp_version": FP_INDEX_VERSION,
-             "n_buckets": n_buckets}, f
+    meta = pin(
+        os.path.join(index_path, _OVERLAP_META),
+        {"n": n, "window": window, "fp_version": FP_INDEX_VERSION,
+         "n_buckets": n_buckets},
+    )
+    got = (meta.get("n"), meta.get("window"), meta.get("fp_version"))
+    want = (n, window, FP_INDEX_VERSION)
+    if got != want:
+        raise ValueError(
+            f"overlap index at {index_path} was built with "
+            f"(n, window, fp_version)={got}; this call uses {want} — "
+            "mixed fingerprint definitions are incomparable. Rebuild "
+            "the index or call with the recorded parameters."
         )
-    return n_buckets
+    return int(meta.get("n_buckets", n_buckets))
 
 
 def _migrate_overlap_index_v1(spark, index_path: str, n_buckets: int) -> None:
@@ -721,11 +715,7 @@ def _migrate_overlap_index_v1(spark, index_path: str, n_buckets: int) -> None:
     # read ONLY the old kb= dirs: a retry after a crash mid-migration
     # sees both layouts side by side, and a bare read of index_path
     # would mix the new fp/ subtree into the old table
-    old_dirs = [
-        os.path.join(index_path, d)
-        for d in sorted(os.listdir(index_path))
-        if d.startswith("kb=")
-    ]
+    old_dirs = [os.path.join(index_path, d) for d in entries(index_path, "kb=")]
     fp_path = os.path.join(index_path, _FP_SUBDIR)
     if old_dirs:
         old = (
@@ -777,14 +767,47 @@ def _batch_tag(bfp) -> str:
     return content_tag(bfp, F.col("id"), F.col("fingerprint"))
 
 
-def _log_batch_dirs(log_path: str) -> list[str]:
+def _fold_into_log(
+    spark, index_path: str, rows, tag: str, id_col: str, n_buckets: int,
+    compact_every: int,
+) -> None:
+    """Fold one batch's (fingerprint, id_col) rows into an LSM index:
+    sweep crashed appends, append `fp_log/batch=<tag>/kb=*` in the
+    base's bucket layout (skipped when a replay finds its entry
+    committed), then every `compact_every` entries MERGE the log into
+    the `fp/` base and drop the merged entries. Merge-then-delete: a
+    crash between them leaves rows readable in both, which the probes'
+    (fingerprint, id) dedup absorbs, and the next compaction re-merges
+    idempotently (keyed upsert) before deleting."""
     import os
+    import shutil
 
-    if not os.path.isdir(log_path):
-        return []
-    return sorted(
-        d for d in os.listdir(log_path) if d.startswith("batch=")
-    )
+    from mel_tnnt_spark.operators.merge_sink import _bucket_expr, merge_upsert
+
+    log_path = os.path.join(index_path, _FP_LOG_SUBDIR)
+    sweep(log_path)
+    if not os.path.isdir(os.path.join(log_path, f"batch={tag}")):
+        publish(
+            rows.withColumn("kb", _bucket_expr(("fingerprint",), n_buckets))
+            .repartition(F.col("kb")),
+            log_path, f"batch={tag}", partition_by="kb",
+        )
+    dirs = entries(log_path, "batch=")
+    if len(dirs) >= compact_every:
+        log_all = (
+            spark.read.option("basePath", log_path)
+            .parquet(*[os.path.join(log_path, d) for d in dirs])
+            .drop("kb", "batch")
+            .dropDuplicates(["fingerprint", id_col])
+        )
+        merge_upsert(
+            spark, os.path.join(index_path, _FP_SUBDIR), log_all,
+            keys=("fingerprint", id_col),
+            bucket_keys=("fingerprint",),
+            n_buckets=n_buckets,
+        )
+        for d in dirs:
+            shutil.rmtree(os.path.join(log_path, d), ignore_errors=True)
 
 
 def _read_log_pruned(
@@ -799,7 +822,7 @@ def _read_log_pruned(
 
     from mel_tnnt_spark.operators.merge_sink import _bucket_expr
 
-    dirs = _log_batch_dirs(log_path)
+    dirs = entries(log_path, "batch=")
     if not dirs:
         return None
     if touched is None:
@@ -833,7 +856,7 @@ def read_overlap_index(spark, index_path: str, id_col: str = "id"):
         from mel_tnnt_spark.operators.merge_sink import read_merged
 
         sides.append(read_merged(spark, fp_path).select("fingerprint", id_col))
-    dirs = _log_batch_dirs(log_path)
+    dirs = entries(log_path, "batch=")
     if dirs:
         sides.append(
             spark.read.option("basePath", log_path)
@@ -900,18 +923,15 @@ def maintain_overlap_index(
     rare-match probes skip row groups entirely.
 
     CRASH/REPLAY-SAFE, all windows:
-    - append: the batch's log dir name is an order-independent content
-      hash of its rows — a replayed batch finds its dir and skips the
-      write; a crash mid-write leaves only a `__staging-` dir, swept
-      on the next call. A replayed batch whose rows are already
-      readable would otherwise report itself as contamination, so the
-      index side anti-joins the batch's ids out before pairing and the
-      guard dedups on (fingerprint, id) — a retried call returns
-      exactly the original pairs.
-    - compaction: merge-then-delete; a crash between them leaves rows
-      readable in BOTH base and log, which the probe's
-      (fingerprint, id) dedup absorbs, and the next compaction
-      re-merges idempotently (keyed upsert) before deleting.
+    - append and compaction: `_fold_into_log`, over `state.publish`
+      (crash windows in mel_tnnt_spark/state.py). The batch's log dir
+      name is an order-independent content hash of its rows, so a
+      replayed batch finds its dir and skips the write. A replayed
+      batch whose rows are already readable would otherwise report
+      itself as contamination, so the index side anti-joins the
+      batch's ids out before pairing and the guard dedups on
+      (fingerprint, id) — a retried call returns exactly the original
+      pairs.
     - pairs are localCheckpoint-ed (not persisted) before the fold-in:
       eviction-triggered recompute from a mutated index would be
       silently wrong; truncated lineage makes it a deterministic error.
@@ -920,12 +940,10 @@ def maintain_overlap_index(
     bucket layout are pinned in index metadata; calls with a different
     definition raise (round-4 advice)."""
     import os
-    import shutil
 
     from mel_tnnt_spark.operators.merge_sink import (
         _bucket_expr,
         _recover,
-        merge_upsert,
         read_merged_pruned,
     )
 
@@ -934,10 +952,6 @@ def maintain_overlap_index(
     fp_path = os.path.join(index_path, _FP_SUBDIR)
     log_path = os.path.join(index_path, _FP_LOG_SUBDIR)
     _recover(fp_path)
-    if os.path.isdir(log_path):  # sweep crashed appends
-        for d in os.listdir(log_path):
-            if d.startswith(_LOG_STAGING_PREFIX):
-                shutil.rmtree(os.path.join(log_path, d), ignore_errors=True)
     bfp = winnowing_fingerprints(batch, id_col, text_col, n, window).persist()
     try:
         probe = bfp.select("fingerprint").distinct()
@@ -1014,39 +1028,10 @@ def maintain_overlap_index(
             )
 
         # fold-in: content-addressed append, O(batch), no rewrite
-        tag = _batch_tag(bfp)
-        dest = os.path.join(log_path, f"batch={tag}")
-        if not os.path.isdir(dest):
-            os.makedirs(log_path, exist_ok=True)
-            staging = os.path.join(log_path, f"{_LOG_STAGING_PREFIX}{tag}")
-            shutil.rmtree(staging, ignore_errors=True)
-            (
-                bfp.select("fingerprint", F.col("id").alias(id_col))
-                .withColumn("kb", _bucket_expr(("fingerprint",), n_buckets))
-                .repartition(F.col("kb"))
-                .write.mode("overwrite")
-                .partitionBy("kb")
-                .parquet(staging)
-            )
-            os.rename(staging, dest)
-
-        # amortized compaction: log -> base MERGE, then drop log dirs
-        dirs = _log_batch_dirs(log_path)
-        if len(dirs) >= compact_every:
-            log_all = (
-                spark.read.option("basePath", log_path)
-                .parquet(*[os.path.join(log_path, d) for d in dirs])
-                .drop("kb", "batch")
-                .dropDuplicates(["fingerprint", id_col])
-            )
-            merge_upsert(
-                spark, fp_path, log_all,
-                keys=("fingerprint", id_col),
-                bucket_keys=("fingerprint",),
-                n_buckets=n_buckets,
-            )
-            for d in dirs:
-                shutil.rmtree(os.path.join(log_path, d), ignore_errors=True)
+        _fold_into_log(
+            spark, index_path, bfp.select("fingerprint", F.col("id").alias(id_col)),
+            _batch_tag(bfp), id_col, n_buckets, compact_every,
+        )
     finally:
         bfp.unpersist()
     return pairs
@@ -1218,30 +1203,22 @@ def _span_meta_check(index_path: str, k: int, n_buckets: int) -> int:
     """Pin the span-gram definition (k, hash version) and bucket
     layout to the index, exactly like _overlap_meta_check: an index
     built with a different k would silently miss or over-excise."""
-    import json
     import os
 
-    mp = os.path.join(index_path, _SPAN_META)
-    if os.path.exists(mp):
-        with open(mp) as f:
-            meta = json.load(f)
-        got = (meta.get("k"), meta.get("span_version"))
-        want = (k, SPAN_INDEX_VERSION)
-        if got != want:
-            raise ValueError(
-                f"span index at {index_path} was built with "
-                f"(k, span_version)={got}; this call uses {want} — mixed "
-                "gram definitions are incomparable. Rebuild the index or "
-                "call with the recorded parameters."
-            )
-        return int(meta.get("n_buckets", n_buckets))
-    os.makedirs(index_path, exist_ok=True)
-    with open(mp, "w") as f:
-        json.dump(
-            {"k": k, "span_version": SPAN_INDEX_VERSION, "n_buckets": n_buckets},
-            f,
+    meta = pin(
+        os.path.join(index_path, _SPAN_META),
+        {"k": k, "span_version": SPAN_INDEX_VERSION, "n_buckets": n_buckets},
+    )
+    got = (meta.get("k"), meta.get("span_version"))
+    want = (k, SPAN_INDEX_VERSION)
+    if got != want:
+        raise ValueError(
+            f"span index at {index_path} was built with "
+            f"(k, span_version)={got}; this call uses {want} — mixed "
+            "gram definitions are incomparable. Rebuild the index or "
+            "call with the recorded parameters."
         )
-    return n_buckets
+    return int(meta.get("n_buckets", n_buckets))
 
 
 def maintain_span_index(
@@ -1284,29 +1261,18 @@ def maintain_span_index(
     everything). O(batch) per batch: probe = pruned base/log narrowed
     by a broadcast semi-join on the batch's distinct hashes; fold-in
     appends O(batch) bytes; compaction amortized. Crash/replay-safe
-    the same way: content-addressed append dirs (replay skips the
-    write), staging-dir sweep, merge-then-delete compaction absorbed
-    by the (fingerprint, id) dedup, and the rewritten batch is
+    the same way: the same `_fold_into_log` (crash windows in
+    mel_tnnt_spark/state.py), and the rewritten batch is
     localCheckpoint-ed BEFORE the fold-in so eviction can never
     recompute it against the mutated index."""
     import os
-    import shutil
 
-    from mel_tnnt_spark.operators.merge_sink import (
-        _bucket_expr,
-        _recover,
-        merge_upsert,
-        read_merged_pruned,
-    )
+    from mel_tnnt_spark.operators.merge_sink import _recover, read_merged_pruned
 
     n_buckets = _span_meta_check(index_path, k, n_buckets)
     fp_path = os.path.join(index_path, _FP_SUBDIR)
     log_path = os.path.join(index_path, _FP_LOG_SUBDIR)
     _recover(fp_path)
-    if os.path.isdir(log_path):  # sweep crashed appends
-        for d in os.listdir(log_path):
-            if d.startswith(_LOG_STAGING_PREFIX):
-                shutil.rmtree(os.path.join(log_path, d), ignore_errors=True)
     toks = _span_toks(batch, id_col, text_col).persist()
     occ = _span_occ(toks, k).persist()
     try:
@@ -1340,37 +1306,10 @@ def maintain_span_index(
         bfp = occ.groupBy(F.col("h").alias("fingerprint")).agg(
             F.min("id").alias("id")
         )
-        tag = content_tag(bfp, F.col("fingerprint"))
-        dest = os.path.join(log_path, f"batch={tag}")
-        if not os.path.isdir(dest):
-            os.makedirs(log_path, exist_ok=True)
-            staging = os.path.join(log_path, f"{_LOG_STAGING_PREFIX}{tag}")
-            shutil.rmtree(staging, ignore_errors=True)
-            (
-                bfp.withColumn("kb", _bucket_expr(("fingerprint",), n_buckets))
-                .repartition(F.col("kb"))
-                .write.mode("overwrite")
-                .partitionBy("kb")
-                .parquet(staging)
-            )
-            os.rename(staging, dest)
-
-        dirs = _log_batch_dirs(log_path)
-        if len(dirs) >= compact_every:
-            log_all = (
-                spark.read.option("basePath", log_path)
-                .parquet(*[os.path.join(log_path, d) for d in dirs])
-                .drop("kb", "batch")
-                .dropDuplicates(["fingerprint", "id"])
-            )
-            merge_upsert(
-                spark, fp_path, log_all,
-                keys=("fingerprint", "id"),
-                bucket_keys=("fingerprint",),
-                n_buckets=n_buckets,
-            )
-            for d in dirs:
-                shutil.rmtree(os.path.join(log_path, d), ignore_errors=True)
+        _fold_into_log(
+            spark, index_path, bfp, content_tag(bfp, F.col("fingerprint")),
+            "id", n_buckets, compact_every,
+        )
     finally:
         occ.unpersist()
         toks.unpersist()

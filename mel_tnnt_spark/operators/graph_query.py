@@ -70,6 +70,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from mel_tnnt_spark.session import pin_observed
+from mel_tnnt_spark.state import numbered, publish, sweep
 
 VAR_PREFIX = "?"
 _CLOSURE_COLS = ("node", "ancestor", "depth")
@@ -321,23 +322,8 @@ def _closure_parts(state_path: str):
     closure, `seg-<n>/` holds one fold's delta. Read = newest base u
     all segs (duplicates from a crash between compaction rename and
     seg cleanup are absorbed by distinct on read)."""
-    bases, segs = [], []
-    if os.path.isdir(state_path):
-        for d in os.listdir(state_path):
-            if d.startswith("__"):
-                continue
-            if d.startswith("base-v"):
-                try:
-                    bases.append(int(d[6:]))
-                except ValueError:
-                    pass
-            elif d.startswith("seg-"):
-                try:
-                    segs.append(int(d[4:]))
-                except ValueError:
-                    pass
-    bases.sort()
-    segs.sort()
+    bases = numbered(state_path, "base-v")
+    segs = numbered(state_path, "seg-")
     base = f"base-v{bases[-1]}" if bases else None
     nxt = max(bases[-1:] + segs[-1:] or [0]) + 1
     return base, [f"seg-{s}" for s in segs if not bases or s > bases[-1]], nxt
@@ -391,15 +377,18 @@ def maintain_transitive_closure(
     graph_bench probe of the v1 rewrite-the-closure layout measured
     late/early 1.50 from the O(closure) rewrite alone), and every
     `compact_every` folds the base+segs merge into a new `base-v<n>/`
-    (amortized O(closure / compact_every) per fold). Crash windows:
-    seg and base writes are staged-then-renamed; a crash between the
-    compaction rename and seg cleanup leaves duplicate rows that
-    distinct-on-read absorbs exactly.
+    (amortized O(closure / compact_every) per fold). Seg and base
+    writes are `state.publish` entries (crash windows in
+    mel_tnnt_spark/state.py); every fold first sweeps the staging a
+    killed write left, whose name a later compaction never reuses. A
+    crash between the compaction publish and seg cleanup leaves
+    duplicate rows that distinct-on-read absorbs exactly.
 
     Idempotent replay for free: a replayed batch's paths are already
     rows of C, so the delta shrinks to empty and the fold writes
     nothing at all."""
     fresh = _edge_set(edge_batch, src_col, dst_col, "depth")
+    sweep(state_path)
     base, segs, nxt = _closure_parts(state_path)
     stored = read_transitive_closure(spark, state_path)
     # pin the view ONCE: the delta loop probes the closure in ~3 joins
@@ -448,18 +437,7 @@ def maintain_transitive_closure(
         return closure
     delta = delta.toDF(*_CLOSURE_COLS)
 
-    def _staged_write(df: DataFrame, name: str) -> None:
-        staging = os.path.join(state_path, f"__staging-{name}")
-        if os.path.isdir(staging):
-            shutil.rmtree(staging)
-        df.write.mode("overwrite").parquet(staging)
-        final = os.path.join(state_path, name)
-        if os.path.isdir(final):
-            shutil.rmtree(final)
-        os.rename(staging, final)
-
-    os.makedirs(state_path, exist_ok=True)
-    _staged_write(delta, f"seg-{nxt}")
+    publish(delta, state_path, f"seg-{nxt}")
     # LAZY return: both inputs are checkpointed, and only the caller
     # who actually consumes the full closure pays for the union —
     # the fold itself writes O(delta)
@@ -468,7 +446,7 @@ def maintain_transitive_closure(
         # compaction: merge base + segs + this delta into a new base,
         # THEN drop the absorbed parts — leftover segs have numbers
         # <= the new base version, so reads exclude them exactly
-        _staged_write(updated.distinct(), f"base-v{nxt}")
+        publish(updated.distinct(), state_path, f"base-v{nxt}")
         for d in ([base] if base else []) + segs + [f"seg-{nxt}"]:
             shutil.rmtree(os.path.join(state_path, d), ignore_errors=True)
     return updated

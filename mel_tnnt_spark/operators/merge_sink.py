@@ -34,12 +34,13 @@ column = all upserts), remaining columns = target schema.
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from mel_tnnt_spark.state import entries, numbered, pin, read_json
 
 _STAGING_SUFFIX = "__staging"
 _OLD_SUFFIX = "__old"
@@ -50,38 +51,6 @@ DEFAULT_N_BUCKETS = 16  # sandbox scale; hundreds on a real cluster
 
 def _bucket_expr(keys: tuple[str, ...], n_buckets: int):
     return F.pmod(F.xxhash64(*[F.col(k) for k in keys]), F.lit(n_buckets)).cast("int")
-
-
-def _read_meta(target_path: str) -> dict | None:
-    p = os.path.join(target_path, _META_FILE)
-    if os.path.exists(p):
-        with open(p) as f:
-            return json.load(f)
-    return None
-
-
-def _write_meta(
-    target_path: str,
-    n_buckets: int,
-    keys: tuple[str, ...],
-    bucket_keys: tuple[str, ...],
-) -> None:
-    os.makedirs(target_path, exist_ok=True)
-    with open(os.path.join(target_path, _META_FILE), "w") as f:
-        json.dump(
-            {
-                "n_buckets": n_buckets,
-                "keys": list(keys),
-                "bucket_keys": list(bucket_keys),
-            },
-            f,
-        )
-
-
-def _bucket_dirs(path: str) -> list[str]:
-    if not os.path.isdir(path):
-        return []
-    return sorted(d for d in os.listdir(path) if d.startswith(f"{_BUCKET_COL}="))
 
 
 def _recover(target_path: str) -> None:
@@ -102,7 +71,7 @@ def _recover(target_path: str) -> None:
     if not os.path.isdir(old):
         return
     os.makedirs(target_path, exist_ok=True)
-    live_bucketed = bool(_bucket_dirs(target_path)) or os.path.exists(
+    live_bucketed = bool(entries(target_path, f"{_BUCKET_COL}=")) or os.path.exists(
         os.path.join(target_path, _META_FILE)
     )
     for entry in os.listdir(old):
@@ -143,7 +112,7 @@ def read_merged_pruned(
     come from the same bucket function/count this table's meta pins
     (a caller folding one batch into base + log layouts computes it
     once instead of running the probe collect per layout)."""
-    meta = _read_meta(target_path)
+    meta = read_json(os.path.join(target_path, _META_FILE))
     if meta is None:
         return read_merged(spark, target_path)
     n_buckets = int(meta["n_buckets"])
@@ -202,7 +171,7 @@ def merge_upsert(
 
     _recover(target_path)
 
-    meta = _read_meta(target_path)
+    meta = read_json(os.path.join(target_path, _META_FILE))
     if meta is not None:
         n_buckets = int(meta["n_buckets"])  # layout is fixed at creation
         if meta.get("keys") != list(keys):
@@ -252,7 +221,7 @@ def _merge_pinned(
 ) -> None:
     kb = _bucket_expr(bucket_keys, n_buckets)
     upserts = changes.where(F.col(op_col) == "upsert").drop(op_col)
-    existing_buckets = _bucket_dirs(target_path)
+    existing_buckets = entries(target_path, f"{_BUCKET_COL}=")
     legacy_flat = (
         os.path.isdir(target_path)
         and not existing_buckets
@@ -310,6 +279,13 @@ def _merge_pinned(
         .partitionBy(_BUCKET_COL)
         .parquet(staging)
     )
+    # the layout pin is written once, before the first promote makes
+    # buckets visible; a migration pins it inside the staged dir
+    pin(
+        os.path.join(staging if legacy_flat else target_path, _META_FILE),
+        {"n_buckets": n_buckets, "keys": list(keys),
+         "bucket_keys": list(bucket_keys)},
+    )
     if legacy_flat:
         # Migration promotes the WHOLE directory in one staged swap:
         # a per-bucket promote would leave the old flat part files at
@@ -319,15 +295,11 @@ def _merge_pinned(
         # look at the flat remainder). The whole-dir swap has the same
         # crash discipline as the original full-snapshot promote and
         # removes the flat layout atomically-enough.
-        _write_meta(staging, n_buckets, keys, bucket_keys)
         _promote_whole(staging, target_path)
     else:
         # promote every staged bucket PLUS every touched bucket that
         # staged empty (all its keys deleted -> live dir must go)
-        staged_ids = {
-            int(d.split("=", 1)[1]) for d in _bucket_dirs(staging)
-        }
-        _write_meta(target_path, n_buckets, keys, bucket_keys)
+        staged_ids = set(numbered(staging, f"{_BUCKET_COL}="))
         _promote_buckets(
             staging, target_path, sorted(staged_ids | set(touched_bucket_ids))
         )

@@ -214,28 +214,6 @@ def assign_shards(
     )
 
 
-def _read_pack_state(state_path: str) -> dict:
-    import json
-    import os
-
-    f = os.path.join(state_path, "_state.json")
-    if not os.path.isfile(f):
-        return {"total": 0, "applied": {}}
-    with open(f) as fh:
-        return json.load(fh)
-
-
-def _write_pack_state(state_path: str, state: dict) -> None:
-    import json
-    import os
-
-    os.makedirs(state_path, exist_ok=True)
-    tmp = os.path.join(state_path, "_state.json.tmp")
-    with open(tmp, "w") as fh:
-        json.dump(state, fh)
-    os.replace(tmp, os.path.join(state_path, "_state.json"))
-
-
 def maintain_pack_layout(
     spark,
     state_path: str,
@@ -261,13 +239,17 @@ def maintain_pack_layout(
     Replay-safe: the batch's content hash keys the ledger — a
     re-delivered batch reuses its ORIGINAL base offset and does not
     advance the total, so crash/replay returns bit-identical layout
-    rows (the state file itself is written via temp + os.replace,
-    never partially visible). Driver state is O(1) per applied batch;
+    rows (the state file is a `state.write_json` commit, never
+    partially visible). Driver state is O(1) per applied batch;
     output rows are localCheckpoint-ed so callers can consume them
     after the state advances."""
-    from mel_tnnt_spark.operators.dedup import content_tag
+    import os
 
-    state = _read_pack_state(state_path)
+    from mel_tnnt_spark.operators.dedup import content_tag
+    from mel_tnnt_spark.state import read_json, write_json
+
+    state_file = os.path.join(state_path, "_state.json")
+    state = read_json(state_file, {"total": 0, "applied": {}})
     tag = content_tag(
         batch, F.col(id_col), F.coalesce(F.col(text_col).cast("string"), F.lit(""))
     )
@@ -291,5 +273,5 @@ def maintain_pack_layout(
         batch_tokens = out.agg(F.sum("n_tokens")).first()[0] or 0
         state["applied"][tag] = base
         state["total"] = base + int(batch_tokens)
-        _write_pack_state(state_path, state)
+        write_json(state_file, state)
     return out

@@ -104,26 +104,17 @@ def maintain_weighted_sample(
     Folds are naturally idempotent: a replayed batch's rows either
     already sit in the reservoir or lost to keys that still beat them
     — a set-union top-k cannot double-count (identical rows dedup by
-    id before selection). Crash safety: each fold writes version n+1
-    staged-then-renamed with the last version retained, so a crash
-    mid-write leaves v=n intact and the replay recreates v=n+1
+    id before selection). Crash safety: each fold publishes version
+    n+1 through `state.publish` (crash windows in
+    mel_tnnt_spark/state.py) with the last version retained, so a
+    crash mid-write leaves v=n intact and the replay recreates v=n+1
     identically."""
     import os
     import shutil
 
-    def _versions() -> list[int]:
-        if not os.path.isdir(state_path):
-            return []
-        out = []
-        for d in os.listdir(state_path):
-            if d.startswith("v=") and not d.startswith("__"):
-                try:
-                    out.append(int(d[2:]))
-                except ValueError:
-                    pass
-        return sorted(out)
+    from mel_tnnt_spark.state import numbered, publish
 
-    vs = _versions()
+    vs = numbered(state_path, "v=")
     fresh = batch.select(
         F.col(id_col).alias("id"), F.col(weight_col).cast("double").alias("w")
     )
@@ -138,14 +129,7 @@ def maintain_weighted_sample(
     pool = pool.groupBy("id").agg(F.max("w").alias("w"))
     new = weighted_sample(pool, "id", "w", k).select("id", "w", "es_key")
     nxt = (vs[-1] + 1) if vs else 1
-    staging = os.path.join(state_path, f"__staging-v{nxt}")
-    if os.path.isdir(staging):
-        shutil.rmtree(staging)
-    new.select("id", "w").write.mode("overwrite").parquet(staging)
-    final = os.path.join(state_path, f"v={nxt}")
-    if os.path.isdir(final):
-        shutil.rmtree(final)
-    os.rename(staging, final)
+    publish(new.select("id", "w"), state_path, f"v={nxt}")
     for old in vs[:-1]:
         shutil.rmtree(os.path.join(state_path, f"v={old}"), ignore_errors=True)
     return new.localCheckpoint()

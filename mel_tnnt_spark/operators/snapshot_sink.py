@@ -16,8 +16,8 @@ missing half the way Iceberg actually does it:
   parent manifest except the buckets this merge touched. Reading a
   table = reading the manifest's directories; reading history =
   reading an OLD manifest (`read_snapshot(..., as_of=N)`).
-- THE COMMIT IS ONE POINTER SWAP: `_current` is replaced by an
-  os.rename of a temp file — atomic on POSIX. There is no
+- THE COMMIT IS ONE POINTER SWAP: `_current` is replaced by
+  `state.write_json` (temp file, then rename). There is no
   multi-directory promote window at all: a crash anywhere before the
   swap leaves orphan data/manifest files that are invisible to readers
   and overwritten by the replay; a crash after the swap IS the commit.
@@ -46,6 +46,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mel_tnnt_spark.operators.merge_sink import _bucket_expr
+from mel_tnnt_spark.state import numbered, write_json
 
 _BUCKET_COL = "kb"
 _VERSION_COL = "sv"  # reserved: version partition dir (data/sv=<sid>/)
@@ -258,11 +259,7 @@ def merge_snapshot(
             .partitionBy(_BUCKET_COL)
             .parquet(out)
         )
-        staged = {
-            int(d.split("=", 1)[1])
-            for d in os.listdir(out)
-            if d.startswith(f"{_BUCKET_COL}=")
-        }
+        staged = set(numbered(out, f"{_BUCKET_COL}="))
         buckets = dict(live)
         for b in touched:
             if b in staged:
@@ -278,14 +275,9 @@ def merge_snapshot(
             "schema": [list(ct) for ct in schema],
             "buckets": buckets,
         }
-        os.makedirs(os.path.join(table, _SNAPS), exist_ok=True)
-        with open(_manifest_path(table, sid), "w") as f:
-            json.dump(man, f)
+        write_json(_manifest_path(table, sid), man)
         # THE commit: one atomic pointer swap
-        tmp = os.path.join(table, f"{_CURRENT}.tmp")
-        with open(tmp, "w") as f:
-            f.write(str(sid))
-        os.rename(tmp, os.path.join(table, _CURRENT))
+        write_json(os.path.join(table, _CURRENT), sid)
         return sid
     finally:
         changes.unpersist()

@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from mel_tnnt_spark.datagen import CODE_FILES_SCHEMA
 from mel_tnnt_spark.operators import linking, mentions, metadata, summaries, triples
+from mel_tnnt_spark.state import publish
 
 
 def read_code_files_stream(spark: SparkSession, source_dir: str) -> DataFrame:
@@ -121,8 +122,9 @@ def _replay_protected_stream(
     BY THE QUERY ID read from the checkpoint — batch ids restart at 0
     for every fresh checkpoint, so an un-namespaced marker would
     silently drop the early batches of any later stream maintaining
-    the same table. Markers are written AFTER apply_fn's merge
-    commits; the remaining window — a crash between the merge's last
+    the same table. Markers are written AFTER apply_fn commits (for
+    the `state.publish` writers, the commit and its crash windows are
+    in mel_tnnt_spark/state.py); the remaining window — a crash between the merge's last
     bucket promote and the marker write — re-applies one batch (the
     merge sink's _recover repairs the half-promoted table first; a
     real Iceberg MERGE commits data and ancestry in one snapshot and
@@ -288,17 +290,15 @@ def stream_maintain_overlap_index(
     skip re-applies after restarts, and BOTH effects are replay-safe
     on their own — maintain_overlap_index returns the original pairs
     on a replayed batch (content-addressed append log + batch-id
-    anti-join, test-pinned), and the pairs write overwrites a
-    directory named by an order-independent content hash of the
-    batch, so a crash between the index fold-in and the marker write
-    re-creates the identical pairs directory rather than duplicating
-    it. Stream==batch equality is pinned in tests/test_streaming.py."""
+    anti-join, test-pinned), and the pairs are a `state.publish` entry
+    named by an order-independent content hash of the batch (crash
+    windows in mel_tnnt_spark/state.py), so a crash between the index
+    fold-in and the marker write re-creates the identical pairs
+    directory rather than duplicating it. Stream==batch equality is
+    pinned in tests/test_streaming.py."""
     from mel_tnnt_spark.operators.dedup import maintain_overlap_index
 
     def apply(batch_df: DataFrame) -> None:
-        import os
-        import shutil
-
         from mel_tnnt_spark.operators.dedup import content_tag
 
         spark = batch_df.sparkSession
@@ -311,18 +311,7 @@ def stream_maintain_overlap_index(
             n=n, window=window, min_shared=min_shared, max_df=max_df,
             n_buckets=n_buckets,
         )
-        # Stage-then-rename, mirroring the fold-in log's crash
-        # discipline: a crash mid-write leaves only a __staging- dir
-        # (invisible to read_overlap_pair_log's batch=* glob), never a
-        # partial batch= directory.
-        final = f"{pairs_path}/batch={tag}"
-        staging = f"{pairs_path}/__staging-{tag}"
-        if os.path.isdir(staging):
-            shutil.rmtree(staging)
-        pairs.write.mode("overwrite").parquet(staging)
-        if os.path.isdir(final):
-            shutil.rmtree(final)
-        os.rename(staging, final)
+        publish(pairs, pairs_path, f"batch={tag}")
 
     return _replay_protected_stream(
         doc_stream, index_path, checkpoint_dir, apply, once
@@ -353,16 +342,14 @@ def stream_excise_spans(
     batch (the index stores (gram, batch-min doc id) rows and the
     probe anti-joins the batch's own ids out, so the batch's earlier
     fold-in is invisible to its own replay; the fold-in itself is a
-    content-addressed no-op), and the output directory is
-    content-addressed and staged+renamed.
+    content-addressed no-op), and the output directory is a
+    content-addressed `state.publish` entry (crash windows in
+    mel_tnnt_spark/state.py).
     Stream == chained-batch equality is pinned in
     tests/test_streaming.py."""
     from mel_tnnt_spark.operators.dedup import content_tag, maintain_span_index
 
     def apply(batch_df: DataFrame) -> None:
-        import os
-        import shutil
-
         batch_df = batch_df.dropna(subset=[id_col])
         tag = content_tag(
             batch_df, F.col(id_col), F.coalesce(F.col(text_col), F.lit(""))
@@ -371,14 +358,7 @@ def stream_excise_spans(
             batch_df.sparkSession, index_path, batch_df, id_col, text_col,
             k=k, n_buckets=n_buckets,
         )
-        final = f"{out_path}/batch={tag}"
-        staging = f"{out_path}/__staging-{tag}"
-        if os.path.isdir(staging):
-            shutil.rmtree(staging)
-        out.write.mode("overwrite").parquet(staging)
-        if os.path.isdir(final):
-            shutil.rmtree(final)
-        os.rename(staging, final)
+        publish(out, out_path, f"batch={tag}")
 
     return _replay_protected_stream(
         doc_stream, index_path, checkpoint_dir, apply, once
@@ -413,16 +393,14 @@ def stream_pack_layout(
     idempotency as stream_excise_spans: applied-batch markers skip
     re-applies after restarts, and both effects are replay-safe alone
     (maintain_pack_layout reuses a replayed batch's ORIGINAL base
-    offset without advancing the total; the output directory is
-    content-addressed and staged+renamed). Stream == chained-batch
+    offset without advancing the total; the output directory is a
+    content-addressed `state.publish` entry, crash windows in
+    mel_tnnt_spark/state.py). Stream == chained-batch
     equality is pinned in tests/test_streaming.py."""
     from mel_tnnt_spark.operators.dedup import content_tag
     from mel_tnnt_spark.operators.packing import maintain_pack_layout
 
     def apply(batch_df: DataFrame) -> None:
-        import os
-        import shutil
-
         batch_df = batch_df.dropna(subset=[id_col])
         tag = content_tag(
             batch_df,
@@ -433,14 +411,7 @@ def stream_pack_layout(
             batch_df.sparkSession, state_path, batch_df, id_col, text_col,
             capacity=capacity,
         )
-        final = f"{out_path}/batch={tag}"
-        staging = f"{out_path}/__staging-{tag}"
-        if os.path.isdir(staging):
-            shutil.rmtree(staging)
-        out.write.mode("overwrite").parquet(staging)
-        if os.path.isdir(final):
-            shutil.rmtree(final)
-        os.rename(staging, final)
+        publish(out, out_path, f"batch={tag}")
 
     return _replay_protected_stream(
         doc_stream, state_path, checkpoint_dir, apply, once
@@ -465,15 +436,13 @@ def stream_domain_caps(
     Same two-layer idempotency as the other maintained streams:
     applied-batch markers skip re-applies, and both effects are
     replay-safe alone (the operator excludes its own content-addressed
-    log dir when computing prior counts; the decision write is
-    content-addressed and staged+renamed)."""
+    log dir when computing prior counts; the decision write is a
+    content-addressed `state.publish` entry, crash windows in
+    mel_tnnt_spark/state.py)."""
     from mel_tnnt_spark.operators.curation import maintain_domain_caps
     from mel_tnnt_spark.operators.dedup import content_tag
 
     def apply(batch_df: DataFrame) -> None:
-        import os
-        import shutil
-
         batch_df = batch_df.dropna(subset=[id_col])
         tag = content_tag(
             batch_df, F.col(id_col), F.coalesce(F.col(group_col), F.lit(""))
@@ -482,14 +451,7 @@ def stream_domain_caps(
             batch_df.sparkSession, state_path, batch_df, group_col, id_col,
             cap=cap,
         )
-        final = f"{out_path}/batch={tag}"
-        staging = f"{out_path}/__staging-{tag}"
-        if os.path.isdir(staging):
-            shutil.rmtree(staging)
-        out.write.mode("overwrite").parquet(staging)
-        if os.path.isdir(final):
-            shutil.rmtree(final)
-        os.rename(staging, final)
+        publish(out, out_path, f"batch={tag}")
 
     return _replay_protected_stream(
         doc_stream, state_path, checkpoint_dir, apply, once

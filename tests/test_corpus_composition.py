@@ -191,11 +191,10 @@ def test_assign_shards_validation(spark):
 
 
 def test_maintain_pack_layout_chained_equals_scratch_and_replay(spark, tmp_path):
-    from mel_tnnt_spark.operators.packing import (
-        _read_pack_state,
-        maintain_pack_layout,
-        pack_sequences,
-    )
+    import os
+
+    from mel_tnnt_spark.operators.packing import maintain_pack_layout, pack_sequences
+    from mel_tnnt_spark.state import read_json
 
     batches = [
         [(1, "a b c"), (2, "d e")],
@@ -213,7 +212,7 @@ def test_maintain_pack_layout_chained_equals_scratch_and_replay(spark, tmp_path)
         "id", "text", capacity=4,
     ).collect()]
     assert sorted(chained) == sorted(scratch)
-    total_before = _read_pack_state(state)["total"]
+    total_before = read_json(os.path.join(state, "_state.json"))["total"]
     assert total_before == sum(
         len(t.split()) for _, t in (r for bb in batches for r in bb)
     )
@@ -223,7 +222,7 @@ def test_maintain_pack_layout_chained_equals_scratch_and_replay(spark, tmp_path)
                 maintain_pack_layout(spark, state, b2, "id", "text", capacity=4).collect()]
     orig_b2 = [c for c in chained if c[0] in (10, 11)]
     assert sorted(replayed) == sorted(orig_b2)
-    assert _read_pack_state(state)["total"] == total_before
+    assert read_json(os.path.join(state, "_state.json"))["total"] == total_before
 
 
 def test_stream_pack_layout_equals_scratch_and_restart_noop(spark, tmp_path):

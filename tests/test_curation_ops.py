@@ -1075,11 +1075,11 @@ def test_overlap_index_log_compaction_and_crash_window(spark, tmp_path):
     from mel_tnnt_spark.operators.dedup import (
         _FP_LOG_SUBDIR,
         _FP_SUBDIR,
-        _log_batch_dirs,
         maintain_overlap_index,
         read_overlap_index,
     )
     from mel_tnnt_spark.operators.merge_sink import merge_upsert
+    from mel_tnnt_spark.state import entries
 
     para = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
     idx = str(tmp_path / "lsm")
@@ -1090,13 +1090,13 @@ def test_overlap_index_log_compaction_and_crash_window(spark, tmp_path):
         spark, idx, mk([(1, para + " origin"), (2, "wholly unrelated words here")]),
         "id", "text", min_shared=1, max_df=None, compact_every=2,
     )
-    assert len(_log_batch_dirs(log_path)) == 1  # appended, not compacted
+    assert len(entries(log_path, "batch=")) == 1  # appended, not compacted
     p2 = maintain_overlap_index(
         spark, idx, mk([(10, "stolen " + para)]),
         "id", "text", min_shared=1, max_df=None, compact_every=2,
     )
     assert {(r[0], r[1]) for r in p2.select("corpus_id", "batch_id").collect()} == {(1, 10)}
-    assert len(_log_batch_dirs(log_path)) == 0  # compacted into base
+    assert len(entries(log_path, "batch=")) == 0  # compacted into base
     n_logical = read_overlap_index(spark, idx).count()
 
     # crash window: re-merge the base rows AND copy them back into a
@@ -1523,6 +1523,7 @@ def test_overlap_index_compaction_killed_between_merge_and_delete(spark, tmp_pat
     import shutil as real_shutil
 
     from mel_tnnt_spark.operators import dedup as dd
+    from mel_tnnt_spark.state import entries
 
     para = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
     mk = lambda rows: spark.createDataFrame(rows, "id bigint, text string")
@@ -1558,7 +1559,7 @@ def test_overlap_index_compaction_killed_between_merge_and_delete(spark, tmp_pat
         monkeypatch.setattr("shutil.rmtree", orig_rmtree)
     assert killed["n"] == 1
     # crash state: base merged AND log dirs still present
-    assert len(dd._log_batch_dirs(log_path)) == 2
+    assert len(entries(log_path, "batch=")) == 2
     assert os.path.isdir(os.path.join(idx, dd._FP_SUBDIR))
 
     # replay (what the stream scaffold does on restart): exact pairs
@@ -1567,7 +1568,7 @@ def test_overlap_index_compaction_killed_between_merge_and_delete(spark, tmp_pat
         "id", "text", min_shared=1, max_df=None, compact_every=2,
     )
     got = {(r["corpus_id"], r["batch_id"], r["shared"]) for r in p_replay.collect()}
-    assert len(dd._log_batch_dirs(log_path)) == 0  # compaction completed
+    assert len(entries(log_path, "batch=")) == 0  # compaction completed
 
     idx2 = str(tmp_path / "lsm_clean")
     dd.maintain_overlap_index(
