@@ -3,7 +3,8 @@
 `queries()` exposes one entry per implemented operator family from
 SURVEY.md §2 (plus the training-data curation operators), each with a
 DuckDB-runnable `oracle_sql()` twin. Column names and rounding are
-pinned identically on both sides.
+pinned identically on both sides. Both return the register in
+registration order (the order of the `@_q` definitions below).
 
 Naming: q<nn>_<survey-op-id>_<what>.
 """
@@ -156,6 +157,9 @@ _Q: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 
 
 def _q(name: str, sql: str | None = None):
+    if name in _Q:
+        raise ValueError(f"query {name!r} is already registered")
+
     def deco(fn):
         _Q[name] = fn
         if sql is not None:
@@ -163,6 +167,14 @@ def _q(name: str, sql: str | None = None):
         return fn
 
     return deco
+
+
+def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    return dict(_Q)
+
+
+def oracle_sql() -> dict[str, str]:
+    return dict(_SQL)
 
 
 _STOPLIST_SQL = ",".join(f"'{w}'" for w in STOPWORDS)
@@ -4716,345 +4728,3 @@ def q115(spark, sf_dir):
         )
     )
     return edge_neighborhood_jaccard(edges, "a", "b")
-
-
-# ---------------------------------------------------------------------------
-# Registration order (round-5 certify-on-change rotation): the
-# driver's correctness harness evaluates only the FIRST 50 registered
-# queries. queries() therefore yields, in definition order within
-# each tier:
-#   (a) queries NEVER driver-certified (no green row in any
-#       CORRECTNESS_r*.json) — always first;
-#   (b) certified queries whose CODE PATH changed since the round that
-#       certified them — a green row from round R says nothing about
-#       code committed after R (VERDICT r4 #2: the r4 shingle refactor
-#       changed the code under q18/q19/q35, whose only driver rows
-#       were r03). "Code path changed" is derived from git: the
-#       mel_tnnt_spark files changed since the certifying round's
-#       marker commit, expanded through the package's import closure,
-#       matched against the modules each query function imports — plus
-#       a direct source-text compare of the query function itself
-#       against the marker commit's __spark_entry__.py;
-#   (c) stable certified queries.
-# Queries pushed past slot 50 keep their existing green rows; the
-# policy is documented in COVERAGE.md. The retest tier is ordered
-# OLDEST certifying round first, so when a churny round re-tiers more
-# certified queries than the window holds, the spill past slot 50 is
-# the least-stale rows (newest green), each still green in the
-# committed full-register CORRECTNESS_LOCAL artifact, and they lead
-# the retest tier next round. The derivation is best-effort:
-# any git/parse failure degrades to "nothing touched" (tier (a) still
-# leads), never to an import error in the driver.
-
-_R03_DRIVER_CERTIFIED = frozenset({
-    "q01_a1_pricing_summary", "q02_j1_broadcast_join_agg",
-    "q03_j1_multijoin_revenue_by_nation", "q04_w3_latest_event_per_user",
-    "q05_a13_time_span_per_type", "q06_a9_value_buckets",
-    "q07_j5_customers_without_orders", "q08_so2_shared_vocabulary",
-    "q09_j4_duplicate_orderkeys", "q10_a2_keyword_counts",
-    "q11_a3_pattern_match_counts", "q12_j6_containment_mentions",
-    "q13_a8_stats_per_lang", "q14_a5_rollup_lang_source",
-    "q15_w2_pagination", "q16_w4_topk_docs", "q17_dd_exact_dedup",
-    "q18_dd_ngram_jaccard_pairs", "q19_dd_minhash_signatures",
-    "q20_dd_simhash", "q21_sim_cosine_topk", "q22_sim_bucketed_ann",
-    "q23_ts_lang_id", "q24_ts_quality_score", "q25_ts_fingerprint",
-    "q26_ts_token_count", "q28_cc_embedding_graph", "q30_a8_mode_quantity_per_flag",
-    "q31_p9_json_path", "q32_f16_wildcard_search", "q33_s4_regex_scan",
-    "q34_m15_deterministic_sample", "q35_dd_lsh_pairs",
-    "q36_j6_large_vocab_containment", "q37_j2_lookup_with_fallback",
-    "q38_a8_multimode_chars_per_lang", "q39_p2_only_startfrom",
-    "q40_j10_group_by_folder", "q41_s13_xml_metadata",
-    "q42_p10_recursive_key_search", "q43_f15_deep_merge",
-    "q44_sim_multiprobe_ann", "q45_sim_ivf_ann", "q46_w_session_windows",
-    "q47_w_analytic_running_revenue", "q48_asof_join_last_purchase",
-    "q49_range_join_clicks_in_window", "q50_hypertable_rollup",
-    "q51_count_min_sketch", "q52_m12_pos_dep_tokens",
-})
-
-
-# Queries whose LATEST green driver row is in CORRECTNESS_r04.json
-# (the r04 window: q53+ plus the first 20 rotated-out r03 names).
-_R04_DRIVER_CERTIFIED = frozenset({
-    "q01_a1_pricing_summary", "q02_j1_broadcast_join_agg",
-    "q03_j1_multijoin_revenue_by_nation", "q04_w3_latest_event_per_user",
-    "q05_a13_time_span_per_type", "q06_a9_value_buckets",
-    "q07_j5_customers_without_orders", "q08_so2_shared_vocabulary",
-    "q09_j4_duplicate_orderkeys", "q10_a2_keyword_counts",
-    "q11_a3_pattern_match_counts", "q12_j6_containment_mentions",
-    "q13_a8_stats_per_lang", "q14_a5_rollup_lang_source",
-    "q15_w2_pagination", "q16_w4_topk_docs",
-    "q30_a8_mode_quantity_per_flag", "q36_j6_large_vocab_containment",
-    "q37_j2_lookup_with_fallback", "q39_p2_only_startfrom",
-    "q53_m13_coref_chains", "q54_stream_first_seen_batch",
-    "q55_multimodal_image_decode", "q56_s2_general_metadata",
-    "q57_f1_nfkd_ascii_fold", "q58_s9_lang_extract",
-    "q59_a14_csv_cells", "q60_w5_w6_mention_stage",
-    "q61_j8_entity_linking", "q62_dd_simhash_pairs",
-    "q63_f17_summary_filters", "q64_multimodal_audio_decode",
-    "q65_multimodal_frame_sample", "q66_a6_aggregated_summary",
-    "q67_m14_archive_members", "q68_cc_incremental_maintenance",
-    "q69_multimodal_resize", "q70_curation_pipeline",
-    "q71_hll_registers", "q72_bm25_ranking", "q73_winnowing_overlap",
-    "q74_cc_size_histogram", "q75_m_nltk_category_rescan",
-    "q76_a14_csv_ner_merge_order", "q77_dd_cluster_survivors",
-    "q78_ts_pii_scrub", "q79_ts_repetition_metrics",
-    "q80_dd_cross_corpus_overlap", "q81_curation_decision",
-    "q82_ts_quality_classifier",
-})
-
-
-# Queries whose LATEST green driver row is in CORRECTNESS_r05.json
-# (the r05 window: 50/50 green — q83/q84 plus the rotation's retest
-# and stable tiers as of round 5).
-_R05_DRIVER_CERTIFIED = frozenset({
-    "q01_a1_pricing_summary", "q02_j1_broadcast_join_agg",
-    "q03_j1_multijoin_revenue_by_nation", "q04_w3_latest_event_per_user",
-    "q05_a13_time_span_per_type", "q06_a9_value_buckets",
-    "q07_j5_customers_without_orders", "q08_so2_shared_vocabulary",
-    "q09_j4_duplicate_orderkeys", "q10_a2_keyword_counts",
-    "q11_a3_pattern_match_counts", "q12_j6_containment_mentions",
-    "q13_a8_stats_per_lang", "q14_a5_rollup_lang_source", "q15_w2_pagination",
-    "q16_w4_topk_docs", "q17_dd_exact_dedup", "q18_dd_ngram_jaccard_pairs",
-    "q19_dd_minhash_signatures", "q20_dd_simhash", "q23_ts_lang_id",
-    "q24_ts_quality_score", "q25_ts_fingerprint", "q26_ts_token_count",
-    "q28_cc_embedding_graph", "q30_a8_mode_quantity_per_flag",
-    "q35_dd_lsh_pairs", "q36_j6_large_vocab_containment",
-    "q37_j2_lookup_with_fallback", "q39_p2_only_startfrom",
-    "q50_hypertable_rollup", "q51_count_min_sketch",
-    "q60_w5_w6_mention_stage", "q61_j8_entity_linking",
-    "q62_dd_simhash_pairs", "q63_f17_summary_filters",
-    "q66_a6_aggregated_summary", "q70_curation_pipeline", "q72_bm25_ranking",
-    "q73_winnowing_overlap", "q75_m_nltk_category_rescan",
-    "q76_a14_csv_ner_merge_order", "q77_dd_cluster_survivors",
-    "q78_ts_pii_scrub", "q79_ts_repetition_metrics",
-    "q80_dd_cross_corpus_overlap", "q81_curation_decision",
-    "q82_ts_quality_classifier", "q83_dd_span_excision",
-    "q84_dd_overlap_index_chained",
-})
-
-# Queries whose LATEST green driver row is in CORRECTNESS_r06.json
-# (the r06 window: 50/50 green — the round-6 fresh tier q85-q115
-# plus the retest tier as of round 6).
-_R06_DRIVER_CERTIFIED = frozenset({
-    "q100_cur_top_fraction", "q101_s2_profile_columns",
-    "q102_kg_bgp_match", "q103_kg_transitive_closure",
-    "q104_kg_pagerank", "q105_kg_triangle_count",
-    "q106_kg_closure_chained", "q107_kg_random_walks",
-    "q108_sim_random_projection", "q109_kg_property_path",
-    "q110_kg_bounded_shortest_paths", "q111_s2_exact_quantiles",
-    "q112_cur_temperature_mixture", "q113_contrastive_triplets",
-    "q114_kg_khop_aggregate", "q115_kg_edge_jaccard",
-    "q17_dd_exact_dedup", "q18_dd_ngram_jaccard_pairs",
-    "q19_dd_minhash_signatures", "q20_dd_simhash",
-    "q21_sim_cosine_topk", "q22_sim_bucketed_ann",
-    "q23_ts_lang_id", "q24_ts_quality_score",
-    "q25_ts_fingerprint", "q26_ts_token_count",
-    "q28_cc_embedding_graph", "q34_m15_deterministic_sample",
-    "q35_dd_lsh_pairs", "q37_j2_lookup_with_fallback",
-    "q44_sim_multiprobe_ann", "q45_sim_ivf_ann",
-    "q56_s2_general_metadata", "q61_j8_entity_linking",
-    "q62_dd_simhash_pairs", "q85_ts_classifier_training",
-    "q86_dd_span_index_chained", "q87_pack_sequence_layout",
-    "q88_pack_assembled_windows", "q89_cur_domain_cap",
-    "q90_cur_token_budget", "q91_cur_mixture_sample",
-    "q92_dd_semantic_dedup", "q93_pack_shard_assignment",
-    "q94_pack_incremental_layout", "q95_ts_lm_fluency",
-    "q96_weighted_sample", "q97_cur_epoch_mixture",
-    "q98_cur_domain_cap_chained", "q99_weighted_sample_chained",
-})
-
-# Marker commits: the artifact-only commit the driver wrote at the END
-# of each round — the certified rows were produced on this code state
-# (the marker adds only CORRECTNESS/BENCH/VERDICT files on top of it).
-_ROUND_MARKERS = {
-    "r03": "cbfaa54", "r04": "f34ea97", "r05": "3c7f0a3", "r06": "e69292d",
-}
-
-
-def _cert_round(name: str) -> str | None:
-    if name in _R06_DRIVER_CERTIFIED:
-        return "r06"
-    if name in _R05_DRIVER_CERTIFIED:
-        return "r05"
-    if name in _R04_DRIVER_CERTIFIED:
-        return "r04"
-    if name in _R03_DRIVER_CERTIFIED:
-        return "r03"
-    return None
-
-
-def _module_file(pkg_root, m: str) -> str | None:
-    """Repo-relative file for a dotted mel_tnnt_spark module name:
-    `<mod>.py` when it exists, else `<mod>/__init__.py` (so changes to
-    package __init__ re-exports propagate through the closure)."""
-    f = m.replace(".", "/") + ".py"
-    if (pkg_root / f).exists():
-        return f
-    init = m.replace(".", "/") + "/__init__.py"
-    if (pkg_root / init).exists():
-        return init
-    return None
-
-
-def _package_import_closure(changed: set[str]) -> set[str]:
-    """Expand a set of changed mel_tnnt_spark module files to every
-    package module that (transitively) imports one of them, by parsing
-    the package's import statements. File paths are repo-relative."""
-    import ast
-
-    pkg_root = Path(__file__).resolve().parent
-    deps: dict[str, set[str]] = {}  # module file -> files it imports
-    for p in (pkg_root / "mel_tnnt_spark").rglob("*.py"):
-        rel = str(p.relative_to(pkg_root))
-        imported: set[str] = set()
-        try:
-            tree = ast.parse(p.read_text())
-        except SyntaxError:
-            continue
-        for node in ast.walk(tree):
-            mods: list[str] = []
-            if isinstance(node, ast.ImportFrom) and node.module:
-                mods.append(node.module)
-                # `from mel_tnnt_spark.operators import dedup`
-                mods += [f"{node.module}.{a.name}" for a in node.names]
-            elif isinstance(node, ast.Import):
-                mods += [a.name for a in node.names]
-            for m in mods:
-                if m.startswith("mel_tnnt_spark"):
-                    f = _module_file(pkg_root, m)
-                    if f:
-                        imported.add(f)
-        deps[rel] = imported
-    # fixed-point: a module is dirty if it imports a dirty module
-    dirty = set(changed)
-    while True:
-        grew = {
-            f for f, imps in deps.items() if f not in dirty and imps & dirty
-        }
-        if not grew:
-            return dirty
-        dirty |= grew
-
-
-def _query_imports(fn) -> set[str]:
-    """mel_tnnt_spark module files a query function's body imports."""
-    import ast
-    import inspect
-    import textwrap
-
-    pkg_root = Path(__file__).resolve().parent
-    out: set[str] = set()
-    try:
-        tree = ast.parse(textwrap.dedent(inspect.getsource(fn)))
-    except (OSError, SyntaxError):
-        return out
-    for node in ast.walk(tree):
-        mods: list[str] = []
-        if isinstance(node, ast.ImportFrom) and node.module:
-            mods.append(node.module)
-            mods += [f"{node.module}.{a.name}" for a in node.names]
-        elif isinstance(node, ast.Import):
-            mods += [a.name for a in node.names]
-        for m in mods:
-            if m.startswith("mel_tnnt_spark"):
-                f = _module_file(pkg_root, m)
-                if f:
-                    out.add(f)
-    return out
-
-
-def _fn_sources(entry_text: str) -> dict[str, str]:
-    """Source segment of each top-level function in an
-    __spark_entry__.py text, keyed by function name."""
-    import ast
-
-    out: dict[str, str] = {}
-    try:
-        tree = ast.parse(entry_text)
-    except SyntaxError:
-        return out
-    for node in tree.body:
-        if isinstance(node, ast.FunctionDef):
-            seg = ast.get_source_segment(entry_text, node)
-            if seg:
-                out[node.name] = seg
-    return out
-
-
-def _touched_since_certification() -> set[str]:
-    """Names of certified queries whose code path changed after the
-    round that certified them. Best-effort: empty set on any failure."""
-    import subprocess
-
-    pkg_root = Path(__file__).resolve().parent
-    touched: set[str] = set()
-    try:
-        cur_fns = _fn_sources((pkg_root / "__spark_entry__.py").read_text())
-        for rnd, marker in _ROUND_MARKERS.items():
-            names = [n for n in _Q if _cert_round(n) == rnd]
-            if not names:
-                continue
-            diff = subprocess.run(
-                ["git", "diff", "--name-only", marker, "--",
-                 "mel_tnnt_spark"],
-                cwd=pkg_root, capture_output=True, text=True, timeout=30,
-            )
-            if diff.returncode != 0:
-                continue
-            changed = {
-                ln.strip() for ln in diff.stdout.splitlines()
-                if ln.strip().endswith(".py")
-            }
-            dirty = _package_import_closure(changed) if changed else set()
-            old_entry = subprocess.run(
-                ["git", "show", f"{marker}:__spark_entry__.py"],
-                cwd=pkg_root, capture_output=True, text=True, timeout=30,
-            )
-            old_fns = (
-                _fn_sources(old_entry.stdout)
-                if old_entry.returncode == 0 else {}
-            )
-            for n in names:
-                fn = _Q[n]
-                if dirty & _query_imports(fn):
-                    touched.add(n)
-                elif old_fns and old_fns.get(fn.__name__) != cur_fns.get(
-                    fn.__name__
-                ):
-                    touched.add(n)
-    except Exception:
-        return set()
-    return touched
-
-
-_TOUCHED_CACHE: list[set[str]] = []
-
-
-def _rotated(names):
-    if not _TOUCHED_CACHE:
-        _TOUCHED_CACHE.append(_touched_since_certification())
-    touched = _TOUCHED_CACHE[0]
-    fresh = [n for n in names if _cert_round(n) is None]
-    # retest tier ordered OLDEST certifying round first: when
-    # fresh+retest outgrow the 50-slot driver window (a churny round
-    # touching shared modules re-tiers many certified queries), the
-    # spill is the LEAST-stale query — its green row is the newest in
-    # the tier, and the committed CORRECTNESS_LOCAL artifact (full
-    # register, current code) is the compensating control until the
-    # next round's window picks it up first.
-    # sorted() is stable: within a certifying round, registration
-    # order is preserved
-    retest = sorted(
-        (n for n in names if _cert_round(n) and n in touched),
-        key=_cert_round,
-    )
-    stable = [n for n in names if _cert_round(n) and n not in touched]
-    return fresh + retest + stable
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {n: _Q[n] for n in _rotated(_Q)}
-
-
-def oracle_sql() -> dict[str, str]:
-    return {n: _SQL[n] for n in _rotated(_Q) if n in _SQL}

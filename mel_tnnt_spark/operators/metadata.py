@@ -12,6 +12,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, DataType, MapType, StructType
 
 from mel_tnnt_spark.config import EXTENSION_MAPPINGS, MIME_TYPES
 from mel_tnnt_spark.functions.text import clean_text_udf, preprocess_text_col
@@ -182,6 +183,14 @@ def profile_columns(df: DataFrame, columns: list[str] | None = None) -> DataFram
     return one.select(F.explode(per_col).alias("p")).select("p.*")
 
 
+def _has_map(t: DataType) -> bool:
+    if isinstance(t, ArrayType):
+        return _has_map(t.elementType)
+    if isinstance(t, StructType):
+        return any(_has_map(f.dataType) for f in t.fields)
+    return isinstance(t, MapType)
+
+
 def exact_quantiles(
     df: DataFrame, value_col: str, quantiles: list[float], n_buckets: int = 1024
 ) -> DataFrame:
@@ -208,14 +217,15 @@ def exact_quantiles(
     distinct value can sub-bucket its rows ARBITRARILY (every row
     carries the same value, so whichever row lands on the target rank
     emits the identical answer) — sub-bucket by a DETERMINISTIC
-    per-row hash of the input row (xxhash64 over every input column),
-    result-invariant by construction. The hash replaced
+    per-row hash of the input row (xxhash64 over every input column
+    whose type holds no map: Spark cannot hash maps), result-invariant
+    by construction. The hash replaced
     monotonically_increasing_id (round-6 ADVICE): the ranking branch
     and the totals branch evaluate the sub-bucket expression
     independently, and a non-deterministic id could assign a row to
     different sub-buckets per branch under task retry or partition
-    changes, skipping/duplicating global ranks. Identical full rows
-    share a sub-bucket (hash collision by value), which at worst
+    changes, skipping/duplicating global ranks. Rows equal on hashed
+    columns share a sub-bucket (hash collision by value), which at worst
     weakens the split back to the unsplit case — never the answer.
     Mixed buckets keep the plain in-bucket window."""
     for q in quantiles:
@@ -225,7 +235,9 @@ def exact_quantiles(
         raise ValueError("exact_quantiles: need at least one quantile")
     base = df.where(F.col(value_col).isNotNull()).select(
         F.col(value_col).cast("double").alias("_v"),
-        F.xxhash64(*[F.col(c) for c in df.columns]).alias("_rk"),
+        F.xxhash64(
+            *[F.col(f.name) for f in df.schema.fields if not _has_map(f.dataType)]
+        ).alias("_rk"),
     )
     bounds = base.agg(
         F.min("_v").alias("lo"),

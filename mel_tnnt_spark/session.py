@@ -106,7 +106,11 @@ def get_spark(
         # them in the bytecode interpreter (~10x slower). Standard
         # Spark practice is to lift that cap (set the same flag in
         # spark.executor.extraJavaOptions on a real cluster — local
-        # mode executes in the driver JVM).
+        # mode executes in the driver JVM). This setting only applies
+        # when this process launches the JVM (plain `python`): under
+        # spark-submit the driver JVM is already running and drops it
+        # silently, so pass `--driver-java-options
+        # -XX:-DontCompileHugeMethods` to spark-submit instead.
         .config(
             "spark.driver.extraJavaOptions",
             os.environ.get(

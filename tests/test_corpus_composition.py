@@ -589,6 +589,32 @@ def test_exact_quantiles_matches_sorted_reference(spark):
         exact_quantiles(df, "x", [])
 
 
+def test_exact_quantiles_map_column_matches_sorted_reference(spark):
+    """A map column (top-level or nested in a struct) is left out of the
+    tie-split hash instead of failing analysis with HASH_MAP_TYPE."""
+    import math
+
+    from mel_tnnt_spark.operators.metadata import exact_quantiles
+
+    df = spark.range(100).select(
+        (F.col("id") % 5).cast("double").alias("x"),
+        F.create_map(F.lit("k"), F.col("id")).alias("m"),
+        F.struct(F.create_map(F.col("id"), F.lit("v")).alias("m")).alias("s"),
+        F.col("id"),
+    )
+    qs = [0.0, 0.25, 0.5, 0.9, 1.0]
+    got = {
+        r["q"]: (r["rank"], r["value"])
+        for r in exact_quantiles(df, "x", qs, n_buckets=4).collect()
+    }
+    s = sorted(float(i % 5) for i in range(100))
+    want = {
+        q: (math.floor(q * (len(s) - 1)) + 1, s[math.floor(q * (len(s) - 1))])
+        for q in qs
+    }
+    assert got == want
+
+
 def test_contrastive_triplets_deterministic_reference(spark):
     import hashlib
 

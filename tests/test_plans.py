@@ -3,6 +3,7 @@ pushdown reaches the scan, no row-at-a-time Python UDFs, dims broadcast."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from mel_tnnt_spark.plans.analyze import formatted_plan, plan_flags
@@ -151,105 +152,48 @@ def test_plans_audit_covers_every_registered_query():
     assert not extra, f"PLANS.md has rows for unregistered queries {extra}"
 
 
-def test_rotation_keeps_uncertified_queries_in_driver_window():
-    """The driver's correctness harness evaluates only the FIRST 50
-    registered queries; queries() rotates (a) never-driver-certified
-    names first, then (b) certified names whose code path changed
-    since their certifying round (VERDICT r4 #2: a green row from
-    round R says nothing about code committed after R), then (c) the
-    stable rest. This guard fails if tiers (a)+(b) ever exceed the
-    window, and pins basic contract hygiene: every query has an
-    oracle, names are unique and well-formed."""
+def test_register_contract(monkeypatch):
+    """queries() is a plain read of the register: registration order,
+    no subprocess, no start-up cost; every query has an oracle and a
+    well-formed name."""
     import re
+    import subprocess
+    import time
 
     import __spark_entry__ as e
 
+    started = []
+
+    def no_subprocess(*args, **kwargs):
+        started.append(args)
+        raise OSError("the query register started a subprocess")
+
+    monkeypatch.setattr(subprocess, "run", no_subprocess)
+    monkeypatch.setattr(subprocess, "Popen", no_subprocess)
+    t0 = time.perf_counter()
     names = list(e.queries())
-    touched = e._TOUCHED_CACHE[0] if e._TOUCHED_CACHE else set()
-    fresh = [n for n in names if e._cert_round(n) is None]
-    retest = sorted(
-        (n for n in names if e._cert_round(n) and n in touched),
-        key=e._cert_round,
-    )
-    assert names[: len(fresh)] == fresh, "never-certified must lead"
-    assert names[len(fresh) : len(fresh) + len(retest)] == retest, (
-        "code-path-touched certified queries must precede stable ones, "
-        "oldest certifying round first"
-    )
-    # fresh queries must ALL land in the driver's 50-slot window — a
-    # query with no green row anywhere is a hard gap. The retest tier
-    # may spill PAST slot 50 in a churny round (shared-module edits
-    # re-tier many certified queries at once); the spill must be small,
-    # made of the LEAST-stale rows (newest certifying round — the
-    # oldest-first ordering above guarantees it), and every spilled
-    # query must be green in the committed full-register
-    # CORRECTNESS_LOCAL artifact (the compensating control until the
-    # next round's window, where spilled queries lead the retest tier).
-    assert len(fresh) <= 50, f"{len(fresh)} fresh queries overflow the window"
-    spill = max(0, len(fresh) + len(retest) - 50)
-    # the binding constraint is NEXT-round catch-up: spilled queries
-    # lead the next retest tier, so they certify next round as long as
-    # spill + next round's fresh tier fits the 50-slot window. The
-    # largest fresh tier any round has produced is 31 (round 6's
-    # q85-q115); cap the spill at 16 to leave margin under that worst
-    # case (16 + 31 = 47 <= 50). EXCEPTION — infrastructure churn: an
-    # optimization round editing shared modules (session.py is in
-    # every query's import closure) legitimately re-tiers most of the
-    # register at once; then the window takes the STALEST 50 and the
-    # spill may be the whole least-stale tier, still bounded by the
-    # green-local-row requirement below (full-register artifact on
-    # current code) and by fresh == 0 (nothing uncertified waits).
-    infra_churn = len(retest) >= 50 and not fresh
-    assert spill <= 16 or infra_churn, (
-        f"{len(fresh)} fresh + {len(retest)} touched spill {spill} past the "
-        "driver window — too much churn for one round, split it"
-    )
-    if spill:
-        import json
-        import re
-        from pathlib import Path
-
-        spilled = retest[len(retest) - spill:]
-        newest = max(e._cert_round(n) for n in retest)
-        assert all(e._cert_round(n) == newest for n in spilled), (
-            f"spilled queries {spilled} are not the least-stale tier"
-        )
-        repo = Path(e.__file__).resolve().parent
-        arts = sorted(
-            repo.glob("CORRECTNESS_LOCAL_r*.json"),
-            key=lambda p: int(re.search(r"_r(\d+)", p.stem).group(1)),
-        )
-        local = json.loads(arts[-1].read_text())
-        bad = [n for n in spilled if not local.get(n, {}).get("hash_match")]
-        assert not bad, f"spilled queries lack green local rows: {bad}"
+    assert time.perf_counter() - t0 < 1.0
+    assert not started, f"the query register started {started}"
+    assert names == list(e._Q)
     assert set(e.oracle_sql()) == set(names), "every query needs an oracle"
+    assert list(e.oracle_sql()) == names
     assert all(re.fullmatch(r"q\d{2,3}_\w+", n) for n in names)
-    assert len(set(names)) == len(names)
 
 
-def test_rotation_touch_derivation_flags_changed_dedup_path():
-    """The certify-on-change derivation must flag the queries whose
-    implementation modules changed since their certifying round — the
-    exact miss VERDICT r4 #2 called out. Ground truth tracks the
-    newest certifications (updated round 7): dedup.py and
-    merge_sink.py changed in round 7, so the dedup family and q50
-    (rollup -> merge_sink importer, the r5 closure example) must be
-    flagged; q01/q14 are pure-SQL entries whose function bodies and
-    import closures are untouched since their certifying round, so
-    they must NOT be — the derivation is change-driven, not
-    pessimistic."""
+def test_register_rejects_duplicate_name():
+    """A second @_q with a registered name raises instead of silently
+    replacing the first query and its oracle."""
     import __spark_entry__ as e
 
-    touched = e._touched_since_certification()
-    for n in ("q18_dd_ngram_jaccard_pairs", "q19_dd_minhash_signatures",
-              "q35_dd_lsh_pairs", "q82_ts_quality_classifier",
-              "q50_hypertable_rollup"):
-        assert n in touched, f"{n} changed since certification, not flagged"
-    for n in ("q01_a1_pricing_summary", "q14_a5_rollup_lang_source"):
-        assert n not in touched, f"{n} untouched yet flagged"
-    # sanity: derivation is grounded — it never flags a query whose
-    # cert round has no marker commit, and returns a subset of names
-    assert touched <= set(e._Q)
+    name = "q999_duplicate_probe"
+    e._q(name, "SELECT 1")(lambda spark, sf_dir: None)
+    try:
+        with pytest.raises(ValueError, match=name):
+            e._q(name, "SELECT 2")(lambda spark, sf_dir: None)
+        assert e.oracle_sql()[name] == "SELECT 1"
+    finally:
+        e._Q.pop(name, None)
+        e._SQL.pop(name, None)
 
 
 def test_config_dims_are_local_relations(spark):
@@ -302,72 +246,3 @@ def test_local_correctness_artifact_matches_register():
         f"missing={sorted(reg - rows)} extra={sorted(rows - reg)} — "
         "re-run scripts/local_correctness.py"
     )
-
-
-def test_driver_window_economy_every_query_fresh_or_untouched():
-    """Certify-on-change economy invariant (VERDICT r5 #8): every
-    registered query's newest green driver row is <=2 rounds old OR
-    the query is provably untouched since its certifying round — a
-    growing stable tail is re-certified rarely BY DESIGN, and this
-    pins that the design's precondition (untouched-ness) actually
-    holds for every aged-out row. Additionally, everything needing
-    recertification (never-certified or touched) must sit inside the
-    driver's 50-slot window."""
-    import re
-    from pathlib import Path
-
-    import __spark_entry__ as e
-
-    repo = Path(e.__file__).resolve().parent
-    rounds = [
-        int(re.search(r"_r(\d+)", p.stem).group(1))
-        for p in repo.glob("CORRECTNESS_r*.json")
-    ]
-    cur = max(rounds) + 1  # the round the next driver run will stamp
-    touched = e._touched_since_certification()
-    order = list(e.queries())
-    window = set(order[:50])
-    retest_rounds = sorted(
-        {e._cert_round(n) for n in order if e._cert_round(n) and n in touched}
-    )
-    newest_retest = retest_rounds[-1] if retest_rounds else None
-    spilled_touched = [
-        n for n in order[50:] if e._cert_round(n) and n in touched
-    ]
-    for n in order:
-        cert = e._cert_round(n)
-        if cert is None:
-            assert n in window, (
-                f"{n} never certified yet rotated out of the driver window"
-            )
-        elif n in touched and n not in window:
-            # spill policy (see the rotation test): only the
-            # least-stale retest rows may wait one round — few of them
-            # in a normal round (<=16), up to the whole newest tier in
-            # an infrastructure-churn round — each green in the
-            # committed local artifact (checked below)
-            n_retest = sum(
-                1 for m in order if e._cert_round(m) and m in touched
-            )
-            infra_churn = n_retest >= 50
-            assert cert == newest_retest and (
-                len(spilled_touched) <= 16 or infra_churn
-            ), f"{n} (cert={cert}) spilled past the window out of order"
-        elif n not in touched:
-            age = cur - int(cert[1:])
-            assert age <= 2 or n not in touched, (n, cert, age)
-    for n in order[50:]:
-        assert e._cert_round(n) is not None
-    if spilled_touched:
-        import json
-
-        arts = sorted(
-            repo.glob("CORRECTNESS_LOCAL_r*.json"),
-            key=lambda p: int(re.search(r"_r(\d+)", p.stem).group(1)),
-        )
-        local = json.loads(arts[-1].read_text())
-        bad = [
-            n for n in spilled_touched
-            if not local.get(n, {}).get("hash_match")
-        ]
-        assert not bad, f"spilled queries lack green local rows: {bad}"
