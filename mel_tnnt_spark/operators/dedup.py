@@ -677,6 +677,11 @@ def _overlap_meta_check(index_path: str, n: int, window: int, n_buckets: int) ->
     share one bucket function); returns the pinned n_buckets."""
     import os
 
+    if entries(index_path, "kb="):
+        raise ValueError(
+            f"overlap index at {index_path} has the pre-`fp/` layout (kb= "
+            "dirs at its root); rebuild the index"
+        )
     meta = pin(
         os.path.join(index_path, _OVERLAP_META),
         {"n": n, "window": window, "fp_version": FP_INDEX_VERSION,
@@ -692,45 +697,6 @@ def _overlap_meta_check(index_path: str, n: int, window: int, n_buckets: int) ->
             "the index or call with the recorded parameters."
         )
     return int(meta.get("n_buckets", n_buckets))
-
-
-def _migrate_overlap_index_v1(spark, index_path: str, n_buckets: int) -> None:
-    """One-time layout migration (documented O(table), like the merge
-    sink's legacy-flat path): a pre-round-5 index is a merge table AT
-    index_path keyed (id, fingerprint) — bucketed on the PAIR hash, so
-    a fingerprint probe cannot prune. Rewrite it under index_path/fp
-    keyed (fingerprint, id) and bucketed on (fingerprint,) alone.
-    Assumes the old index was built with the current fingerprint
-    definition (there is no way to tell from the data; the new meta
-    pins it from here on)."""
-    import os
-    import shutil
-
-    from mel_tnnt_spark.operators.merge_sink import _META_FILE, _recover, merge_upsert
-
-    old_meta = os.path.join(index_path, _META_FILE)
-    if not os.path.exists(old_meta):
-        return
-    _recover(index_path)
-    # read ONLY the old kb= dirs: a retry after a crash mid-migration
-    # sees both layouts side by side, and a bare read of index_path
-    # would mix the new fp/ subtree into the old table
-    old_dirs = [os.path.join(index_path, d) for d in entries(index_path, "kb=")]
-    fp_path = os.path.join(index_path, _FP_SUBDIR)
-    if old_dirs:
-        old = (
-            spark.read.option("basePath", index_path).parquet(*old_dirs).drop("kb")
-        )
-        id_col = [c for c in old.columns if c != "fingerprint"][0]
-        rows = old.select("fingerprint", id_col).localCheckpoint(eager=True)
-        merge_upsert(
-            spark, fp_path, rows, keys=("fingerprint", id_col),
-            bucket_keys=("fingerprint",), n_buckets=n_buckets,
-        )
-    for entry in os.listdir(index_path):
-        if entry.startswith("kb=") or entry == _META_FILE:
-            p = os.path.join(index_path, entry)
-            shutil.rmtree(p) if os.path.isdir(p) else os.remove(p)
 
 
 def content_tag(df, *cols) -> str:
@@ -775,14 +741,19 @@ def _fold_into_log(
     sweep crashed appends, append `fp_log/batch=<tag>/kb=*` in the
     base's bucket layout (skipped when a replay finds its entry
     committed), then every `compact_every` entries MERGE the log into
-    the `fp/` base and drop the merged entries. Merge-then-delete: a
-    crash between them leaves rows readable in both, which the probes'
+    the `fp/` base (keeping only its current snapshot) and drop the
+    merged entries. Merge-then-delete: a crash between them leaves
+    rows readable in both, which the probes'
     (fingerprint, id) dedup absorbs, and the next compaction re-merges
     idempotently (keyed upsert) before deleting."""
     import os
     import shutil
 
-    from mel_tnnt_spark.operators.merge_sink import _bucket_expr, merge_upsert
+    from mel_tnnt_spark.operators.merge_sink import (
+        _bucket_expr,
+        expire_snapshots,
+        merge_upsert,
+    )
 
     log_path = os.path.join(index_path, _FP_LOG_SUBDIR)
     sweep(log_path)
@@ -800,12 +771,14 @@ def _fold_into_log(
             .drop("kb", "batch")
             .dropDuplicates(["fingerprint", id_col])
         )
+        fp_path = os.path.join(index_path, _FP_SUBDIR)
         merge_upsert(
-            spark, os.path.join(index_path, _FP_SUBDIR), log_all,
+            spark, fp_path, log_all,
             keys=("fingerprint", id_col),
             bucket_keys=("fingerprint",),
             n_buckets=n_buckets,
         )
+        expire_snapshots(fp_path, keep_last=1)
         for d in dirs:
             shutil.rmtree(os.path.join(log_path, d), ignore_errors=True)
 
@@ -849,12 +822,12 @@ def read_overlap_index(spark, index_path: str, id_col: str = "id"):
     the index holds nothing yet."""
     import os
 
+    from mel_tnnt_spark.operators.merge_sink import current_snapshot, read_merged
+
     fp_path = os.path.join(index_path, _FP_SUBDIR)
     log_path = os.path.join(index_path, _FP_LOG_SUBDIR)
     sides = []
-    if os.path.isdir(fp_path):
-        from mel_tnnt_spark.operators.merge_sink import read_merged
-
+    if current_snapshot(fp_path) is not None:
         sides.append(read_merged(spark, fp_path).select("fingerprint", id_col))
     dirs = entries(log_path, "batch=")
     if dirs:
@@ -943,15 +916,13 @@ def maintain_overlap_index(
 
     from mel_tnnt_spark.operators.merge_sink import (
         _bucket_expr,
-        _recover,
+        current_snapshot,
         read_merged_pruned,
     )
 
     n_buckets = _overlap_meta_check(index_path, n, window, n_buckets)
-    _migrate_overlap_index_v1(spark, index_path, n_buckets)
     fp_path = os.path.join(index_path, _FP_SUBDIR)
     log_path = os.path.join(index_path, _FP_LOG_SUBDIR)
-    _recover(fp_path)
     bfp = winnowing_fingerprints(batch, id_col, text_col, n, window).persist()
     try:
         probe = bfp.select("fingerprint").distinct()
@@ -965,7 +936,7 @@ def maintain_overlap_index(
             ).distinct().collect()
         }
         sides = []
-        if os.path.isdir(fp_path):
+        if current_snapshot(fp_path) is not None:
             sides.append(
                 read_merged_pruned(spark, fp_path, probe, touched_buckets=touched)
                 .withColumnRenamed(id_col, "id")
@@ -1267,18 +1238,17 @@ def maintain_span_index(
     recompute it against the mutated index."""
     import os
 
-    from mel_tnnt_spark.operators.merge_sink import _recover, read_merged_pruned
+    from mel_tnnt_spark.operators.merge_sink import current_snapshot, read_merged_pruned
 
     n_buckets = _span_meta_check(index_path, k, n_buckets)
     fp_path = os.path.join(index_path, _FP_SUBDIR)
     log_path = os.path.join(index_path, _FP_LOG_SUBDIR)
-    _recover(fp_path)
     toks = _span_toks(batch, id_col, text_col).persist()
     occ = _span_occ(toks, k).persist()
     try:
         probe = occ.select(F.col("h").alias("fingerprint")).distinct()
         sides = []
-        if os.path.isdir(fp_path):
+        if current_snapshot(fp_path) is not None:
             sides.append(read_merged_pruned(spark, fp_path, probe))
         log_side = _read_log_pruned(spark, log_path, probe, n_buckets)
         if log_side is not None:

@@ -3,30 +3,34 @@
 The reference mutates per-document records in CouchDB (insert/update/
 delete by doc key, code/MEL/__init__.py:2365-2423 and the CouchDB
 Dataset plumbing). The lakehouse-native equivalent is Iceberg
-`MERGE INTO target USING changes ON keys` — this module implements
-those semantics over the sandbox's parquet stand-in with the same
-commit discipline AND the same cost model Iceberg gives you:
+`MERGE INTO target USING changes ON keys`; this module implements those
+semantics over parquet with Iceberg's commit design and cost model
+(https://iceberg.apache.org/spec/):
 
-- the target is laid out in key-hash bucket partitions
-  (`kb=pmod(xxhash64(keys), n_buckets)`), recorded once in
-  `_merge_meta.json`;
-- a merge computes the set of buckets its change keys land in, reads
-  ONLY those bucket partitions (partition pruning), anti-joins the
-  touched keys out, unions the upserts back, and rewrites ONLY the
-  touched bucket directories — I/O is O(|touched buckets|), not
-  O(|table|), so an incremental rollup refresh stays incremental;
-- each touched bucket is promoted atomically-enough via the staged
-  rename dance (live -> __old, staging -> live, drop __old). A crash
-  in any window is repaired on the next run (restore __old entries,
-  rebuild staging from scratch); replaying the same merge is
-  idempotent. This is Iceberg's write-then-commit-pointer model scaled
-  down to a filesystem, at bucket granularity.
+- the table is laid out in key-hash buckets
+  (`kb=pmod(xxhash64(bucket_keys), n_buckets)`);
+- DATA FILES ARE IMMUTABLE. Merge N reads only the buckets its change
+  keys hash into, anti-joins the touched keys out, unions the upserts
+  back and writes those buckets' new versions under `data/v<N>/kb=<b>/`.
+  I/O is O(|touched buckets|), not O(|table|);
+- a MANIFEST per snapshot (`snaps/s<N>.json`) records the keys,
+  bucket_keys, n_buckets, the schema and the bucket -> version map,
+  copied forward from the parent except the buckets this merge touched;
+- THE COMMIT IS ONE POINTER SWAP: `_current` is replaced by
+  `state.write_json`. A kill before the swap leaves orphan data and
+  manifest files that readers never see and the replay overwrites; a
+  kill after it is the commit. Replaying a merge is idempotent.
+
+On top of that: time travel (`read_merged(..., as_of=N)`), schema
+evolution (a merge may add columns; older rows read NULL) and
+`expire_snapshots`, which drops old manifests and every bucket version
+no retained manifest references.
 
 Scale notes: no driver collect beyond the <= n_buckets touched-bucket
-ids; the anti-join broadcasts the change keys in the common
-small-batch case. On a real deployment, swap `merge_upsert` for
+ids. On a real deployment, swap `merge_upsert` for
 `spark.sql("MERGE INTO ...")` against an Iceberg table partitioned by
-`bucket(n, keys)`; call sites are agnostic.
+`bucket(n, keys)` and `as_of` for `VERSION AS OF`; call sites are
+agnostic.
 
 Change-row contract: `op` column in {'upsert','delete'} (absent op
 column = all upserts), remaining columns = target schema.
@@ -39,13 +43,17 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
-from mel_tnnt_spark.state import entries, numbered, pin, read_json
+from mel_tnnt_spark.state import numbered, read_json, write_json
 
-_STAGING_SUFFIX = "__staging"
-_OLD_SUFFIX = "__old"
-_META_FILE = "_merge_meta.json"
 _BUCKET_COL = "kb"
+_CURRENT = "_current"
+_SNAPS = "snaps"
+_DATA = "data"
+# everything the sink itself writes at a table root (".tmp": a kill
+# inside the pointer's write_json)
+_OWN = {_CURRENT, _CURRENT + ".tmp", _SNAPS, _DATA}
 DEFAULT_N_BUCKETS = 16  # sandbox scale; hundreds on a real cluster
 
 
@@ -53,42 +61,71 @@ def _bucket_expr(keys: tuple[str, ...], n_buckets: int):
     return F.pmod(F.xxhash64(*[F.col(k) for k in keys]), F.lit(n_buckets)).cast("int")
 
 
-def _recover(target_path: str) -> None:
-    """Repair any crash window before reading.
-
-    - Per-bucket promote crash: a kb= entry under __old whose live twin
-      is missing is restored (the rename-away happened but the staged
-      replacement never landed); entries whose live twin exists were
-      already promoted — dropped.
-    - Whole-dir (migration) promote crash BETWEEN renames: the live dir
-      is missing entirely — restore every old entry.
-    - Whole-dir promote crash AFTER staging->live: the live dir is a
-      healthy bucketed table and __old holds the superseded FLAT
-      files; restoring those into the bucketed dir would recreate the
-      invisible-mixed-layout data-loss bug, so non-bucket entries are
-      only restored when the live table is NOT already bucketed."""
-    old = target_path + _OLD_SUFFIX
-    if not os.path.isdir(old):
-        return
-    os.makedirs(target_path, exist_ok=True)
-    live_bucketed = bool(entries(target_path, f"{_BUCKET_COL}=")) or os.path.exists(
-        os.path.join(target_path, _META_FILE)
-    )
-    for entry in os.listdir(old):
-        live = os.path.join(target_path, entry)
-        stale = os.path.join(old, entry)
-        if os.path.exists(live):
-            continue  # already promoted
-        if entry.startswith(f"{_BUCKET_COL}=") or not live_bucketed:
-            os.rename(stale, live)
-    shutil.rmtree(old, ignore_errors=True)
+def _manifest_path(table: str, sid: int) -> str:
+    return os.path.join(table, _SNAPS, f"s{sid}.json")
 
 
-def read_merged(spark: SparkSession, target_path: str) -> DataFrame:
-    """Read a merge-maintained table without the internal bucket
-    column. Works for both the bucketed and (legacy) flat layouts."""
-    df = spark.read.parquet(target_path)
-    return df.drop(_BUCKET_COL) if _BUCKET_COL in df.columns else df
+def current_snapshot(table: str) -> int | None:
+    """Snapshot id the commit pointer names; None while nothing is
+    committed (no directory, or only the orphans of a killed first
+    merge). Raises on a root the sink did not write, so a foreign or
+    pre-manifest layout is never merged or read as an empty table."""
+    if os.path.exists(table):
+        foreign = sorted(set(os.listdir(table)) - _OWN) if os.path.isdir(table) else [table]
+        if foreign:
+            raise ValueError(
+                f"merge sink: {table} is not a merge-sink table (it holds "
+                f"{foreign[:5]}); refusing to treat it as empty. Rebuild it "
+                "or point the sink at a new path."
+            )
+    return read_json(os.path.join(table, _CURRENT))
+
+
+def snapshots(table: str) -> list[dict]:
+    """The retained committed manifests, oldest first: the history."""
+    out, sid = [], current_snapshot(table)
+    while sid is not None and os.path.exists(_manifest_path(table, sid)):
+        out.append(read_json(_manifest_path(table, sid)))
+        sid = out[-1]["parent_id"]
+    return out[::-1]
+
+
+def _manifest(table: str, as_of: int | None = None) -> dict:
+    """The committed manifest of snapshot `as_of` (default: current)."""
+    cur = current_snapshot(table)
+    if cur is None:
+        raise ValueError(f"merge sink: {table} has no committed snapshot")
+    sid = cur if as_of is None else as_of
+    if sid > cur or not os.path.exists(_manifest_path(table, sid)):
+        have = [m["snapshot_id"] for m in snapshots(table)]
+        raise ValueError(
+            f"merge sink: snapshot {sid} of {table} does not exist or was "
+            f"expired; retained: {have}"
+        )
+    return read_json(_manifest_path(table, sid))
+
+
+def _read(spark: SparkSession, table: str, buckets: dict, schema: StructType) -> DataFrame:
+    """The given bucket versions read with `schema` (columns a file
+    lacks read NULL). Each path is a bucket dir, so no partition column
+    is inferred and no footer is read for schema inference."""
+    if not buckets:
+        return spark.createDataFrame([], schema)
+    paths = [
+        os.path.join(table, _DATA, d, f"{_BUCKET_COL}={b}")
+        for b, d in sorted(buckets.items(), key=lambda kv: int(kv[0]))
+    ]
+    return spark.read.schema(schema).parquet(*paths)
+
+
+def read_merged(
+    spark: SparkSession, target_path: str, as_of: int | None = None
+) -> DataFrame:
+    """The table as of snapshot `as_of` (default: current), with that
+    snapshot's schema. Raises when nothing is committed, or the snapshot
+    was never committed or has been expired."""
+    man = _manifest(target_path, as_of)
+    return _read(spark, target_path, man["buckets"], StructType.fromJson(man["schema"]))
 
 
 def read_merged_pruned(
@@ -105,36 +142,26 @@ def read_merged_pruned(
     bucket-mates); the caller's join does the exact filtering.
 
     The probe must contain the table's bucket_keys columns. Bounded
-    driver collect: at most n_buckets distinct bucket ids. Falls back
-    to the full read for legacy flat layouts (no meta).
+    driver collect: at most n_buckets distinct bucket ids.
 
     touched_buckets: pre-computed bucket-id set for the probe — MUST
-    come from the same bucket function/count this table's meta pins
-    (a caller folding one batch into base + log layouts computes it
-    once instead of running the probe collect per layout)."""
-    meta = read_json(os.path.join(target_path, _META_FILE))
-    if meta is None:
-        return read_merged(spark, target_path)
-    n_buckets = int(meta["n_buckets"])
-    bkeys = tuple(meta.get("bucket_keys", meta["keys"]))
-    kb = _bucket_expr(bkeys, n_buckets)
-    touched = (
-        touched_buckets
-        if touched_buckets is not None
-        else {r[0] for r in probe.select(kb.alias("_b")).distinct().collect()}
-    )
-    live = [
-        os.path.join(target_path, f"{_BUCKET_COL}={b}")
-        for b in sorted(touched)
-        if os.path.isdir(os.path.join(target_path, f"{_BUCKET_COL}={b}"))
-    ]
-    if not live:
-        return read_merged(spark, target_path).limit(0)
-    return (
-        spark.read.option("basePath", target_path)
-        .parquet(*live)
-        .drop(_BUCKET_COL)
-    )
+    come from the same bucket function/count this table's manifest
+    records (a caller folding one batch into base + log layouts
+    computes it once instead of running the probe collect per layout)."""
+    man = _manifest(target_path)
+    if touched_buckets is None:
+        kb = _bucket_expr(tuple(man["bucket_keys"]), int(man["n_buckets"]))
+        touched_buckets = {r[0] for r in probe.select(kb.alias("_b")).distinct().collect()}
+    live = {b: d for b, d in man["buckets"].items() if int(b) in touched_buckets}
+    return _read(spark, target_path, live, StructType.fromJson(man["schema"]))
+
+
+def _align(df: DataFrame, schema: StructType) -> DataFrame:
+    return df.select(*[
+        (F.col(f.name) if f.name in df.columns else F.lit(None))
+        .cast(f.dataType).alias(f.name)
+        for f in schema.fields
+    ])
 
 
 def merge_upsert(
@@ -145,11 +172,14 @@ def merge_upsert(
     op_col: str | None = "op",
     n_buckets: int = DEFAULT_N_BUCKETS,
     bucket_keys: tuple[str, ...] | None = None,
-) -> None:
-    """MERGE changes into the bucketed parquet table at target_path:
-    matched + upsert -> replaced by the change row; matched + delete ->
-    removed; unmatched upsert -> inserted. Reads and rewrites ONLY the
-    key-hash buckets the change batch touches.
+) -> int:
+    """MERGE changes into the bucketed parquet table at target_path and
+    commit a new snapshot; returns its id. Matched + upsert -> replaced
+    by the change row; matched + delete -> removed; unmatched upsert ->
+    inserted. Reads and writes ONLY the key-hash buckets the change
+    batch touches. New non-key columns extend the schema (older rows
+    read NULL); previously known columns missing from `changes` are
+    NULL-filled, never dropped.
 
     bucket_keys: optional PREFIX dimension to lay the table out on — a
     subset of `keys` (default: all of them). An index keyed
@@ -157,7 +187,8 @@ def merge_upsert(
     prune to the buckets a probe's fingerprints hash into
     (read_merged_pruned) — the Iceberg `bucket(n, fingerprint)` layout.
     Merge cost is unchanged: a change row's bucket is still a pure
-    function of its key columns."""
+    function of its key columns. The layout is fixed by the first
+    merge."""
     op_col = op_col or "op"
     if op_col not in changes.columns:
         changes = changes.withColumn(op_col, F.lit("upsert"))
@@ -169,23 +200,39 @@ def merge_upsert(
             "bucket and the touched-bucket rewrite would lose rows"
         )
 
-    _recover(target_path)
-
-    meta = read_json(os.path.join(target_path, _META_FILE))
-    if meta is not None:
-        n_buckets = int(meta["n_buckets"])  # layout is fixed at creation
-        if meta.get("keys") != list(keys):
+    parent_sid = current_snapshot(target_path)
+    parent = _manifest(target_path) if parent_sid is not None else None
+    change_schema = StructType([
+        StructField(f.name, f.dataType) for f in changes.schema.fields if f.name != op_col
+    ])
+    if parent is None:
+        schema = change_schema
+    else:
+        n_buckets = int(parent["n_buckets"])
+        if parent["keys"] != list(keys):
             raise ValueError(
                 f"merge_upsert: table at {target_path} is bucketed by keys "
-                f"{meta.get('keys')}, merge called with {list(keys)} — bucket "
+                f"{parent['keys']}, merge called with {list(keys)} — bucket "
                 "pruning would read the wrong partitions"
             )
-        if meta.get("bucket_keys", meta.get("keys")) != list(bucket_keys):
+        if parent["bucket_keys"] != list(bucket_keys):
             raise ValueError(
                 f"merge_upsert: table at {target_path} is laid out on "
-                f"bucket_keys {meta.get('bucket_keys', meta.get('keys'))}, "
-                f"merge called with {list(bucket_keys)}"
+                f"bucket_keys {parent['bucket_keys']}, merge called with "
+                f"{list(bucket_keys)}"
             )
+        # schema evolution: the parent's columns and types win
+        schema = StructType.fromJson(parent["schema"])
+        for f in change_schema.fields:
+            if f.name not in schema.fieldNames():
+                schema = schema.add(f)
+    if not set(keys) <= set(change_schema.fieldNames()):
+        raise ValueError(f"merge_upsert: changes lack key columns {list(keys)}")
+    if _BUCKET_COL in schema.fieldNames():
+        raise ValueError(
+            f"merge_upsert: column name {_BUCKET_COL!r} is reserved for the "
+            "bucket layout"
+        )
 
     # Iceberg MERGE rejects a source row matching multiple times; the
     # mirror condition here is multiple change rows for one key, which
@@ -197,149 +244,84 @@ def merge_upsert(
             "dedupe the batch to one operation per key first"
         )
 
-    # Pin the changes plan: it feeds the dup check, the touched-bucket
-    # collect, AND the staged write — three actions that must see ONE
-    # consistent snapshot (a non-deterministic/mutable-source plan could
-    # otherwise stage buckets the promote loop never picked up).
+    # Pin the changes plan: it feeds the touched-bucket collect AND the
+    # write, two actions that must see ONE consistent snapshot (a
+    # non-deterministic/mutable-source plan could otherwise write
+    # buckets the manifest never picks up).
     changes = changes.persist()
     try:
-        _merge_pinned(
-            spark, target_path, changes, keys, op_col, n_buckets, bucket_keys
+        kb = _bucket_expr(bucket_keys, n_buckets)
+        # bounded collect: at most n_buckets distinct bucket ids
+        touched = {r[0] for r in changes.select(kb.alias("_b")).distinct().collect()}
+        live = dict(parent["buckets"]) if parent is not None else {}
+        upserts = _align(changes.where(F.col(op_col) == "upsert"), schema)
+        live_touched = {b: d for b, d in live.items() if int(b) in touched}
+        merged = upserts
+        if live_touched:
+            merged = (
+                _read(spark, target_path, live_touched, schema)
+                .join(changes.select(*keys).distinct(), list(keys), "left_anti")
+                .unionByName(upserts)
+            )
+
+        sid = 0 if parent_sid is None else parent_sid + 1
+        version = f"v{sid}"
+        out = os.path.join(target_path, _DATA, version)
+        shutil.rmtree(out, ignore_errors=True)  # a killed attempt's orphan
+        (
+            merged.withColumn(_BUCKET_COL, kb)
+            # repartition ON the bucket column before partitionBy:
+            # without it the write inherits the scan partitioning of
+            # everything the merge read, so every task holding rows of
+            # a bucket emits a file into it — file count COMPOUNDS
+            # across merges (measured: 512 -> 3255 files in 14 batches
+            # on a 64-bucket table). One shuffle of the touched rows
+            # buys exactly one file per touched bucket, forever.
+            .repartition(F.col(_BUCKET_COL))
+            .write.mode("overwrite")
+            .partitionBy(_BUCKET_COL)
+            .parquet(out)
         )
+        # a touched bucket that wrote no rows had every key deleted
+        buckets = {b: d for b, d in live.items() if int(b) not in touched}
+        buckets.update({str(b): version for b in numbered(out, f"{_BUCKET_COL}=")})
+        write_json(_manifest_path(target_path, sid), {
+            "snapshot_id": sid,
+            "parent_id": parent_sid,
+            "keys": list(keys),
+            "bucket_keys": list(bucket_keys),
+            "n_buckets": n_buckets,
+            "schema": schema.jsonValue(),
+            "buckets": buckets,
+        })
+        write_json(os.path.join(target_path, _CURRENT), sid)  # THE commit
+        return sid
     finally:
         changes.unpersist()
 
 
-def _merge_pinned(
-    spark: SparkSession,
-    target_path: str,
-    changes: DataFrame,
-    keys: tuple[str, ...],
-    op_col: str,
-    n_buckets: int,
-    bucket_keys: tuple[str, ...],
-) -> None:
-    kb = _bucket_expr(bucket_keys, n_buckets)
-    upserts = changes.where(F.col(op_col) == "upsert").drop(op_col)
-    existing_buckets = entries(target_path, f"{_BUCKET_COL}=")
-    legacy_flat = (
-        os.path.isdir(target_path)
-        and not existing_buckets
-        and any(not e.startswith("_") for e in os.listdir(target_path))
-    )
-
-    if legacy_flat:
-        # one-time migration of a pre-bucketed table: full rewrite into
-        # the bucketed layout (documented O(table) cost, happens once)
-        current = spark.read.parquet(target_path)
-        touched = changes.select(*keys).distinct()
-        merged = current.join(touched, list(keys), "left_anti").unionByName(upserts)
-        touched_bucket_ids = set(range(n_buckets))
-    elif existing_buckets:
-        # bounded collect: at most n_buckets distinct bucket ids
-        touched_bucket_ids = {
-            r[0] for r in changes.select(kb.alias("_b")).distinct().collect()
-        }
-        live_touched = [
-            os.path.join(target_path, f"{_BUCKET_COL}={b}")
-            for b in sorted(touched_bucket_ids)
-            if f"{_BUCKET_COL}={b}" in set(existing_buckets)
-        ]
-        if live_touched:
-            current = (
-                spark.read.option("basePath", target_path)
-                .parquet(*live_touched)
-                .drop(_BUCKET_COL)
-            )
-            touched = changes.select(*keys).distinct()
-            survivors = current.join(touched, list(keys), "left_anti")
-            merged = survivors.unionByName(upserts)
-        else:
-            merged = upserts
-    else:
-        merged = upserts
-        touched_bucket_ids = {
-            r[0] for r in changes.select(kb.alias("_b")).distinct().collect()
-        }
-
-    staging = target_path + _STAGING_SUFFIX
-    shutil.rmtree(staging, ignore_errors=True)
-    (
-        merged.withColumn(_BUCKET_COL, _bucket_expr(bucket_keys, n_buckets))
-        # repartition ON the bucket column before partitionBy: without
-        # it the write inherits the scan partitioning of everything the
-        # merge read, so every task holding rows of a bucket emits a
-        # file into it — file count COMPOUNDS across merges (measured:
-        # 512 -> 3255 files in 14 batches on a 64-bucket table) and
-        # per-merge latency grows with footer reads. One shuffle of the
-        # touched rows buys exactly one file per touched bucket,
-        # forever.
-        .repartition(F.col(_BUCKET_COL))
-        .write.mode("overwrite")
-        .partitionBy(_BUCKET_COL)
-        .parquet(staging)
-    )
-    # the layout pin is written once, before the first promote makes
-    # buckets visible; a migration pins it inside the staged dir
-    pin(
-        os.path.join(staging if legacy_flat else target_path, _META_FILE),
-        {"n_buckets": n_buckets, "keys": list(keys),
-         "bucket_keys": list(bucket_keys)},
-    )
-    if legacy_flat:
-        # Migration promotes the WHOLE directory in one staged swap:
-        # a per-bucket promote would leave the old flat part files at
-        # the target root — invisible to partition-discovery reads and
-        # silently LOST on a crash-mid-migration replay (the rerun
-        # would see kb= dirs, take the incremental path, and never
-        # look at the flat remainder). The whole-dir swap has the same
-        # crash discipline as the original full-snapshot promote and
-        # removes the flat layout atomically-enough.
-        _promote_whole(staging, target_path)
-    else:
-        # promote every staged bucket PLUS every touched bucket that
-        # staged empty (all its keys deleted -> live dir must go)
-        staged_ids = set(numbered(staging, f"{_BUCKET_COL}="))
-        _promote_buckets(
-            staging, target_path, sorted(staged_ids | set(touched_bucket_ids))
-        )
-    shutil.rmtree(staging, ignore_errors=True)
-
-
-def _promote_whole(staging: str, target_path: str) -> None:
-    """Full-snapshot staged swap (migration path): live -> __old,
-    staging -> live, drop __old. The only non-atomic window is between
-    the renames; _recover() restores __old entries on the next run and
-    the rerun rebuilds staging from scratch."""
-    old = target_path + _OLD_SUFFIX
-    if os.path.exists(old):
-        shutil.rmtree(old)
-    if os.path.exists(target_path):
-        os.rename(target_path, old)
-    os.rename(staging, target_path)
-    if os.path.exists(old):
-        shutil.rmtree(old)
-
-
-def _promote_buckets(staging: str, target_path: str, bucket_ids: list[int]) -> None:
-    """Per-bucket staged swap: for each touched bucket, rename live ->
-    __old, staged -> live, drop __old. A staged bucket with no rows
-    (all keys deleted) simply removes the live bucket. Crash windows
-    are repaired by _recover() on the next merge; rebuilding staging
-    from scratch makes replays idempotent."""
-    old_root = target_path + _OLD_SUFFIX
-    for b in bucket_ids:
-        name = f"{_BUCKET_COL}={b}"
-        live = os.path.join(target_path, name)
-        staged = os.path.join(staging, name)
-        old = os.path.join(old_root, name)
-        if os.path.exists(live):
-            os.makedirs(old_root, exist_ok=True)
-            if os.path.exists(old):
-                shutil.rmtree(old)
-            os.rename(live, old)
-        if os.path.exists(staged):
-            os.rename(staged, live)
-        if os.path.exists(old):
-            shutil.rmtree(old)
-    shutil.rmtree(old_root, ignore_errors=True)
+def expire_snapshots(table: str, keep_last: int = 2) -> list[int]:
+    """Keep the newest `keep_last` committed manifests (the current one
+    always), delete the rest and every bucket version no kept manifest
+    references — Iceberg's expire_snapshots plus orphan-file cleanup.
+    Returns the expired snapshot ids. A kill part-way leaves only
+    unreferenced files behind, which the next call deletes."""
+    hist = snapshots(table)
+    keep = hist[-max(keep_last, 1):]
+    names = {os.path.basename(_manifest_path(table, m["snapshot_id"])) for m in keep}
+    sdir = os.path.join(table, _SNAPS)
+    for name in os.listdir(sdir) if os.path.isdir(sdir) else []:
+        if name not in names:
+            os.remove(os.path.join(sdir, name))  # expired, orphan or temp
+    refs: dict[str, set[int]] = {}
+    for m in keep:
+        for b, d in m["buckets"].items():
+            refs.setdefault(d, set()).add(int(b))
+    ddir = os.path.join(table, _DATA)
+    for d in os.listdir(ddir) if os.path.isdir(ddir) else []:
+        if d not in refs:
+            shutil.rmtree(os.path.join(ddir, d), ignore_errors=True)
+            continue
+        for b in set(numbered(os.path.join(ddir, d), f"{_BUCKET_COL}=")) - refs[d]:
+            shutil.rmtree(os.path.join(ddir, d, f"{_BUCKET_COL}={b}"), ignore_errors=True)
+    return [m["snapshot_id"] for m in hist[:len(hist) - len(keep)]]

@@ -54,13 +54,16 @@ def maintain_rollup(
     """Incremental refresh: merge the batch's partial rollup into the
     stored table. Only buckets present in the batch are recomputed
     (stored + delta re-aggregated); everything else is untouched."""
-    import os
-
-    from mel_tnnt_spark.operators.merge_sink import merge_upsert, read_merged
+    from mel_tnnt_spark.operators.merge_sink import (
+        current_snapshot,
+        expire_snapshots,
+        merge_upsert,
+        read_merged,
+    )
 
     keys = ("bucket_start", *dims)
     delta = time_rollup(batch, ts, dims, value, bucket)
-    if os.path.exists(rollup_path):
+    if current_snapshot(rollup_path) is not None:
         stored = read_merged(spark, rollup_path)
         affected = stored.join(delta.select(*keys).distinct(), list(keys), "inner")
         merged = (
@@ -71,3 +74,4 @@ def maintain_rollup(
     else:
         merged = delta
     merge_upsert(spark, rollup_path, merged, keys=keys)
+    expire_snapshots(rollup_path, keep_last=1)  # no history kept

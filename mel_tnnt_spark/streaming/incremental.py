@@ -82,21 +82,14 @@ def run_incremental(
         # with the SAME batch_id, so overwrite that batch's partition
         # (dynamic mode) instead of appending — a batch that committed
         # the write but crashed before the checkpoint advanced is simply
-        # rewritten, never duplicated. NOTE: foreachBatch executes under
-        # a CLONED SparkSession, so the conf must be set on
-        # batch_df.sparkSession (the outer session's conf is ignored).
-        sess = batch_df.sparkSession
-        prev = sess.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        sess.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            (
-                trip.withColumn("batch_id", F.lit(str(batch_id)))
-                .write.mode("overwrite")
-                .partitionBy("batch_id")
-                .parquet(output_dir)
-            )
-        finally:
-            sess.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        # rewritten, never duplicated.
+        (
+            trip.withColumn("batch_id", F.lit(str(batch_id)))
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("batch_id")
+            .parquet(output_dir)
+        )
 
     writer = (
         ments.writeStream.foreachBatch(process_batch)
@@ -124,12 +117,14 @@ def _replay_protected_stream(
     silently drop the early batches of any later stream maintaining
     the same table. Markers are written AFTER apply_fn commits (for
     the `state.publish` writers, the commit and its crash windows are
-    in mel_tnnt_spark/state.py); the remaining window — a crash between the merge's last
-    bucket promote and the marker write — re-applies one batch (the
-    merge sink's _recover repairs the half-promoted table first; a
-    real Iceberg MERGE commits data and ancestry in one snapshot and
-    closes the window entirely). Empty batches are skipped without a
-    marker (re-skipping is free)."""
+    in mel_tnnt_spark/state.py; for the merge sink, its one pointer
+    swap). The remaining window is a kill after that commit and before
+    the marker write: the restart applies the batch a second time.
+    That is harmless for idempotent writers (component labels,
+    content-addressed publishes), but stream_maintain_rollup's merge
+    adds, so that one batch is counted twice (a real Iceberg MERGE
+    commits data and ancestry in one snapshot and closes the window).
+    Empty batches are skipped without a marker (re-skipping is free)."""
     import hashlib
     import json as _json
     import os
@@ -228,22 +223,24 @@ def stream_maintain_components(
     equal from-scratch CC over all edges) is pinned in
     tests/test_streaming.py.
 
-    Robustness: the label table is crash-REPAIRED before it is read
-    (a delta computed from a half-promoted table would corrupt the
-    labeling permanently, unlike the benign one-batch re-apply), and
-    null-endpoint edges are dropped (externally-sourced edge streams
-    can carry them; a null would poison the union-find and wedge the
-    stream on one bad row)."""
-    import os
-
+    Robustness: a kill inside a merge leaves the label table at its
+    last committed snapshot (the sink's one pointer swap), so the delta
+    is always computed from a whole labeling; only the last snapshot
+    is kept. Null-endpoint edges are dropped (externally-sourced edge
+    streams can carry them; a null would poison the union-find and
+    wedge the stream on one bad row)."""
     from mel_tnnt_spark.operators.components import incremental_components
-    from mel_tnnt_spark.operators.merge_sink import _recover, merge_upsert, read_merged
+    from mel_tnnt_spark.operators.merge_sink import (
+        current_snapshot,
+        expire_snapshots,
+        merge_upsert,
+        read_merged,
+    )
 
     def apply(batch_df: DataFrame) -> None:
         spark = batch_df.sparkSession
         batch_df = batch_df.dropna(subset=[src, dst])
-        _recover(labels_path)  # repair any crashed merge BEFORE reading
-        if os.path.isdir(labels_path):
+        if current_snapshot(labels_path) is not None:
             labels = read_merged(spark, labels_path)
         else:  # first batch: empty labeling with the edge key type
             labels = spark.createDataFrame(
@@ -256,6 +253,7 @@ def stream_maintain_components(
             labels, batch_df, src=src, dst=dst, changed_only=True
         )
         merge_upsert(spark, labels_path, delta, keys=("node",))
+        expire_snapshots(labels_path, keep_last=1)
 
     return _replay_protected_stream(
         edge_stream, labels_path, checkpoint_dir, apply, once

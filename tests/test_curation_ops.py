@@ -1012,54 +1012,22 @@ def test_overlap_index_meta_pins_fingerprint_definition(spark, tmp_path):
     maintain_overlap_index(spark, idx, b, "id", "text", n=3, window=4)
 
 
-def test_overlap_index_v1_layout_migrates_and_pairs_match(spark, tmp_path):
-    """A pre-round-5 index — a merge table AT index_path keyed
-    (id, fingerprint), bucketed on the pair hash — is migrated once to
-    the fingerprint-bucketed layout under index_path/fp; the next
-    batch's pairs equal the from-scratch answer and the old kb= dirs
-    are gone (no mixed layout left behind)."""
+def test_overlap_index_pre_fp_layout_raises(spark, tmp_path):
+    """An index from before the `fp/` base (a merge table's kb= dirs at
+    the index root) is refused, not read as an empty index."""
     import os
 
-    from mel_tnnt_spark.operators.dedup import (
-        maintain_overlap_index,
-        overlap_pairs_against,
-        winnowing_fingerprints,
-    )
-    from mel_tnnt_spark.operators.merge_sink import merge_upsert
+    import pytest
 
-    para = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    corpus = spark.createDataFrame(
-        [(1, para + " first doc trailer one"),
-         (2, "unrelated text about nothing in particular at all today")],
-        "id bigint, text string",
-    )
-    idx = str(tmp_path / "v1idx")
-    # build the OLD layout exactly as round-4 code did: fingerprints
-    # merged at index_path, keys=(id, fingerprint), bucketed on both
-    cfp = winnowing_fingerprints(corpus, "id", "text", n=3, window=4)
-    merge_upsert(spark, idx, cfp.select("id", "fingerprint"),
-                 keys=("id", "fingerprint"))
-    assert any(d.startswith("kb=") for d in os.listdir(idx))
+    from mel_tnnt_spark.operators.dedup import maintain_overlap_index
 
-    batch = spark.createDataFrame(
-        [(10, "second wave opener then " + para)], "id bigint, text string"
-    )
-    pairs = maintain_overlap_index(
-        spark, idx, batch, "id", "text", min_shared=1, max_df=None
-    )
-    got = {(r["corpus_id"], r["batch_id"]) for r in pairs.collect()}
-    want = {
-        (r["corpus_id"], r["batch_id"])
-        for r in overlap_pairs_against(
-            cfp, batch, "id", "text", min_shared=1, max_df=None
-        ).collect()
-    }
-    assert got == want == {(1, 10)}
-    # old layout fully replaced: no kb= dirs or merge meta at the root,
-    # fingerprint-bucketed table lives under fp/
-    assert not any(d.startswith("kb=") for d in os.listdir(idx))
-    assert not os.path.exists(os.path.join(idx, "_merge_meta.json"))
-    assert os.path.isdir(os.path.join(idx, "fp"))
+    idx = str(tmp_path / "old")
+    spark.createDataFrame([(1, 7)], "id bigint, fingerprint bigint").write.parquet(
+        os.path.join(idx, "kb=0"))
+    b = spark.createDataFrame([(2, "alpha beta gamma delta epsilon")], "id bigint, text string")
+    with pytest.raises(ValueError, match="pre-`fp/` layout"):
+        maintain_overlap_index(spark, idx, b, "id", "text")
+    assert os.listdir(idx) == ["kb=0"]
 
 
 def test_overlap_index_log_compaction_and_crash_window(spark, tmp_path):
@@ -1101,10 +1069,10 @@ def test_overlap_index_log_compaction_and_crash_window(spark, tmp_path):
 
     # crash window: re-merge the base rows AND copy them back into a
     # log dir (rows now readable twice) — the next batch must still
-    # produce exact pairs and exact shared counts
-    # materialize first: the merge below replaces the very files this
-    # lazy plan would re-read
-    base_rows = read_overlap_index(spark, idx).localCheckpoint(eager=True)
+    # produce exact pairs and exact shared counts. The plan stays lazy:
+    # the merge below writes new bucket versions and never rewrites the
+    # files this plan re-reads
+    base_rows = read_overlap_index(spark, idx)
     merge_upsert(
         spark, os.path.join(idx, _FP_SUBDIR), base_rows,
         keys=("fingerprint", "id"), bucket_keys=("fingerprint",),

@@ -225,6 +225,7 @@ def test_rollup_incremental_equals_scratch(spark, tmp_path):
     """Hypertable rollup: maintaining the stored rollup batch-by-batch
     (only touched buckets refreshed through the MERGE sink) ends
     byte-equal to a from-scratch rollup of the full history."""
+    from mel_tnnt_spark.operators.merge_sink import read_merged
     from mel_tnnt_spark.operators.rollup import maintain_rollup, time_rollup
 
     ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet").cache()
@@ -238,7 +239,7 @@ def test_rollup_incremental_equals_scratch(spark, tmp_path):
 
     got = {
         (r["bucket_start"], r["event_type"]): (r["n_events"], round(r["total_value"], 6))
-        for r in spark.read.parquet(path).collect()
+        for r in read_merged(spark, path).collect()
     }
     want = {
         (r["bucket_start"], r["event_type"]): (r["n_events"], round(r["total_value"], 6))

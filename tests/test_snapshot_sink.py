@@ -1,21 +1,23 @@
-"""Snapshot-capable MERGE sink (operators/snapshot_sink.py): time
-travel, atomic pointer commit, schema evolution, expiry — the Iceberg
-behaviors the rename-based merge_sink stand-in doesn't cover
-(VERDICT r5 "what's missing" #2)."""
+"""The merge sink's snapshot design (operators/merge_sink.py): time
+travel, the atomic pointer commit, schema evolution, expiry, bounded
+storage for the callers that keep no history, and the refusal to read
+a foreign layout as an empty table."""
 
 from __future__ import annotations
 
 import os
+import re
 
 import pytest
 
-from mel_tnnt_spark.operators.snapshot_sink import (
+from mel_tnnt_spark.operators.merge_sink import (
     current_snapshot,
     expire_snapshots,
-    merge_snapshot,
-    read_snapshot,
+    merge_upsert,
+    read_merged,
     snapshots,
 )
+from tests.conftest import SF_DIR
 
 
 def _rows(spark, df):
@@ -23,19 +25,19 @@ def _rows(spark, df):
 
 
 def _state(spark, table, as_of=None):
-    return _rows(spark, read_snapshot(spark, table, as_of=as_of))
+    return _rows(spark, read_merged(spark, table, as_of=as_of))
 
 
 def test_time_travel_reproduces_every_historical_state(spark, tmp_path):
     t = str(tmp_path / "snap")
-    s0 = merge_snapshot(
+    s0 = merge_upsert(
         spark,
         t,
         spark.createDataFrame([(1, "a"), (2, "b")], "id long, v string"),
         keys=("id",),
         n_buckets=4,
     )
-    s1 = merge_snapshot(
+    s1 = merge_upsert(
         spark,
         t,
         spark.createDataFrame(
@@ -43,7 +45,7 @@ def test_time_travel_reproduces_every_historical_state(spark, tmp_path):
         ),
         keys=("id",),
     )
-    s2 = merge_snapshot(
+    s2 = merge_upsert(
         spark,
         t,
         spark.createDataFrame([(1, None, "delete")], "id long, v string, op string"),
@@ -59,31 +61,31 @@ def test_time_travel_reproduces_every_historical_state(spark, tmp_path):
 
 def test_schema_evolution_add_column_and_old_snapshot_schema(spark, tmp_path):
     t = str(tmp_path / "snap")
-    merge_snapshot(
+    merge_upsert(
         spark, t,
         spark.createDataFrame([(1, "a")], "id long, v string"),
         keys=("id",), n_buckets=4,
     )
     # merge 1 ADDS a column; the old row reads NULL for it
-    merge_snapshot(
+    merge_upsert(
         spark, t,
         spark.createDataFrame([(2, "b", 0.9)], "id long, v string, score double"),
         keys=("id",),
     )
-    cur = read_snapshot(spark, t)
+    cur = read_merged(spark, t)
     assert cur.columns == ["id", "v", "score"]
     assert _rows(spark, cur) == {(1, "a", None), (2, "b", 0.9)}
     # time travel returns the OLD schema — the added column must not leak
-    old = read_snapshot(spark, t, as_of=0)
+    old = read_merged(spark, t, as_of=0)
     assert old.columns == ["id", "v"]
     assert _rows(spark, old) == {(1, "a")}
     # a later merge missing the added column NULL-fills, never drops
-    merge_snapshot(
+    merge_upsert(
         spark, t,
         spark.createDataFrame([(3, "c")], "id long, v string"),
         keys=("id",),
     )
-    assert _rows(spark, read_snapshot(spark, t)) == {
+    assert _rows(spark, read_merged(spark, t)) == {
         (1, "a", None), (2, "b", 0.9), (3, "c", None),
     }
 
@@ -93,7 +95,7 @@ def test_commit_is_pointer_swap_crash_before_is_invisible(spark, tmp_path, monke
     pointer swap: readers still see the old snapshot; the replayed
     merge commits the identical state."""
     t = str(tmp_path / "snap")
-    merge_snapshot(
+    merge_upsert(
         spark, t,
         spark.createDataFrame([(1, "a")], "id long, v string"),
         keys=("id",), n_buckets=4,
@@ -109,14 +111,14 @@ def test_commit_is_pointer_swap_crash_before_is_invisible(spark, tmp_path, monke
     monkeypatch.setattr(os, "rename", dying_rename)
     ch = spark.createDataFrame([(2, "b")], "id long, v string")
     with pytest.raises(RuntimeError, match="injected kill"):
-        merge_snapshot(spark, t, ch, keys=("id",))
+        merge_upsert(spark, t, ch, keys=("id",))
     monkeypatch.setattr(os, "rename", real_rename)
 
     # crash window: orphan data + manifest exist, pointer untouched
     assert current_snapshot(t) == 0
     assert _state(spark, t) == {(1, "a")}
     # replay commits; state is exactly the once-applied result
-    sid = merge_snapshot(spark, t, ch, keys=("id",))
+    sid = merge_upsert(spark, t, ch, keys=("id",))
     assert sid == 1 and current_snapshot(t) == 1
     assert _state(spark, t) == {(1, "a"), (2, "b")}
 
@@ -124,7 +126,7 @@ def test_commit_is_pointer_swap_crash_before_is_invisible(spark, tmp_path, monke
 def test_expire_snapshots_drops_history_keeps_current(spark, tmp_path):
     t = str(tmp_path / "snap")
     for i in range(4):
-        merge_snapshot(
+        merge_upsert(
             spark, t,
             spark.createDataFrame([(i, f"v{i}")], "id long, v string"),
             keys=("id",), n_buckets=4,
@@ -133,7 +135,7 @@ def test_expire_snapshots_drops_history_keeps_current(spark, tmp_path):
     assert expired == [0, 1]
     assert [m["snapshot_id"] for m in snapshots(t)] == [2, 3]
     with pytest.raises(ValueError, match="expired"):
-        read_snapshot(spark, t, as_of=0)
+        read_merged(spark, t, as_of=0)
     # retained snapshots still read exactly, orphan data dirs swept
     assert _state(spark, t, as_of=2) == {(0, "v0"), (1, "v1"), (2, "v2")}
     assert _state(spark, t) == {(0, "v0"), (1, "v1"), (2, "v2"), (3, "v3")}
@@ -146,12 +148,12 @@ def test_expire_snapshots_drops_history_keeps_current(spark, tmp_path):
 
 def test_delete_empties_bucket_and_duplicate_keys_raise(spark, tmp_path):
     t = str(tmp_path / "snap")
-    merge_snapshot(
+    merge_upsert(
         spark, t,
         spark.createDataFrame([(1, "a")], "id long, v string"),
         keys=("id",), n_buckets=2,
     )
-    merge_snapshot(
+    merge_upsert(
         spark, t,
         spark.createDataFrame([(1, None, "delete")], "id long, v string, op string"),
         keys=("id",),
@@ -159,8 +161,110 @@ def test_delete_empties_bucket_and_duplicate_keys_raise(spark, tmp_path):
     assert _state(spark, t) == set()
     assert _state(spark, t, as_of=0) == {(1, "a")}
     with pytest.raises(ValueError, match="multiple change rows"):
-        merge_snapshot(
+        merge_upsert(
             spark, t,
             spark.createDataFrame([(5, "x"), (5, "y")], "id long, v string"),
             keys=("id",),
         )
+
+
+def _rollup_rows(df):
+    return {
+        (r["bucket_start"], r["event_type"], r["n_events"], round(r["total_value"], 6))
+        for r in df.collect()
+    }
+
+
+def _bucket_dirs_on_disk(t):
+    data = os.path.join(t, "data")
+    return {
+        (v, b) for v in os.listdir(data)
+        for b in os.listdir(os.path.join(data, v)) if b.startswith("kb=")
+    }
+
+
+def test_maintain_rollup_keeps_one_version_per_bucket(spark, tmp_path):
+    """The callers that keep no history expire right after their merge:
+    after each of 4 maintain_rollup calls the table holds one manifest
+    and exactly the bucket versions it references, and the rows equal a
+    from-scratch rollup of the history so far."""
+    from pyspark.sql import functions as F
+
+    from mel_tnnt_spark.operators.rollup import maintain_rollup, time_rollup
+
+    ev = spark.read.parquet(f"{SF_DIR}/events.parquet")
+    t = str(tmp_path / "rollup")
+    for i in range(4):
+        maintain_rollup(spark, t, ev.where(F.col("event_id") % 4 == i))
+        man = snapshots(t)
+        assert [m["snapshot_id"] for m in man] == [i]
+        assert os.listdir(os.path.join(t, "snaps")) == [f"s{i}.json"]
+        assert _bucket_dirs_on_disk(t) == {
+            (v, f"kb={b}") for b, v in man[0]["buckets"].items()
+        }
+        assert set(os.listdir(os.path.join(t, "data"))) == set(man[0]["buckets"].values())
+        want = time_rollup(ev.where(F.col("event_id") % 4 <= i))
+        assert _rollup_rows(read_merged(spark, t)) == _rollup_rows(want)
+
+
+def _pre_change_buckets(spark, t):
+    spark.createDataFrame([(1, "a")], "k int, v string").write.parquet(
+        os.path.join(t, "kb=0"))
+    with open(os.path.join(t, "_merge_meta.json"), "w") as f:
+        f.write('{"n_buckets": 4, "keys": ["k"], "bucket_keys": ["k"]}')
+
+
+def _flat_part_files(spark, t):
+    spark.createDataFrame([(1, "a")], "k int, v string").write.parquet(t)
+
+
+@pytest.mark.parametrize("layout", [_pre_change_buckets, _flat_part_files],
+                         ids=["pre_change_buckets", "flat_part_files"])
+def test_foreign_layout_raises_instead_of_reading_as_empty(spark, tmp_path, layout):
+    """A root holding anything the sink did not write is refused on
+    merge and read, naming the path, and its files are left alone;
+    merging it as an empty table would silently lose its rows."""
+    from mel_tnnt_spark.operators.merge_sink import read_merged_pruned
+
+    t = str(tmp_path / "old")
+    layout(spark, t)
+    before = sorted(os.listdir(t))
+    ch = spark.createDataFrame([(2, "b")], "k int, v string")
+    with pytest.raises(ValueError, match=re.escape(f"{t} is not a merge-sink table")):
+        merge_upsert(spark, t, ch, keys=("k",))
+    with pytest.raises(ValueError, match=re.escape(f"{t} is not a merge-sink table")):
+        read_merged(spark, t)
+    with pytest.raises(ValueError, match=re.escape(f"{t} is not a merge-sink table")):
+        read_merged_pruned(spark, t, ch.select("k"))
+    assert sorted(os.listdir(t)) == before
+
+
+def test_orphans_of_killed_first_merge_read_as_no_table(spark, tmp_path, monkeypatch):
+    """A kill before the first pointer swap leaves version data and a
+    manifest but no pointer: that is "no table yet". Reads say so, and
+    a caller's committed-snapshot check (maintain_rollup) builds the
+    table fresh over the orphans."""
+    from mel_tnnt_spark.operators.rollup import maintain_rollup, time_rollup
+
+    ev = spark.read.parquet(f"{SF_DIR}/events.parquet")
+    t = str(tmp_path / "rollup")
+    real = os.rename
+
+    def dying(src, dst, *a, **kw):
+        if os.path.basename(src) == "_current.tmp":
+            raise RuntimeError("injected kill before the pointer swap")
+        return real(src, dst, *a, **kw)
+
+    monkeypatch.setattr(os, "rename", dying)
+    with pytest.raises(RuntimeError, match="injected kill"):
+        maintain_rollup(spark, t, ev)
+    monkeypatch.undo()
+    assert os.listdir(os.path.join(t, "data")) == ["v0"]
+    assert current_snapshot(t) is None and snapshots(t) == []
+    with pytest.raises(ValueError, match="no committed snapshot"):
+        read_merged(spark, t)
+
+    half = ev.where(ev.event_id % 2 == 0)
+    maintain_rollup(spark, t, half)
+    assert current_snapshot(t) == 0
+    assert _rollup_rows(read_merged(spark, t)) == _rollup_rows(time_rollup(half))

@@ -232,8 +232,22 @@ def test_enrichment_spark_stage(spark):
 # ---------------------------------------------------------------------------
 
 def _read_kv(spark, path):
+    from mel_tnnt_spark.operators.merge_sink import read_merged
+
     return {
-        (r["k"],): (r["v"],) for r in spark.read.parquet(path).collect()
+        (r["k"],): (r["v"],) for r in read_merged(spark, path).collect()
+    }
+
+
+def _bucket_dirs(target):
+    """{bucket: dir} of the current snapshot's bucket versions."""
+    import os
+
+    from mel_tnnt_spark.operators.merge_sink import snapshots
+
+    return {
+        int(b): os.path.join(target, "data", v, f"kb={b}")
+        for b, v in snapshots(target)[-1]["buckets"].items()
     }
 
 
@@ -253,57 +267,39 @@ def test_merge_upsert_insert_update_delete(spark, tmp_path):
     assert _read_kv(spark, target) == {(1,): ("a",), (2,): ("B",), (4,): ("d",)}
 
 
-def test_merge_upsert_crash_replay(spark, tmp_path):
-    """A crash after staging but before promote leaves the live table
-    intact; rerunning the same merge completes it (Iceberg commit-
-    pointer model scaled down)."""
+def test_merge_upsert_crash_replay(spark, tmp_path, monkeypatch):
+    """A kill after the new bucket versions and the manifest are written
+    but before the pointer swap leaves the live table intact; rerunning
+    the same merge completes it (Iceberg's commit-pointer model)."""
     import os
 
-    from mel_tnnt_spark.operators import merge_sink
-    from mel_tnnt_spark.operators.merge_sink import merge_upsert
+    import pytest as _pytest
+
+    from mel_tnnt_spark.operators.merge_sink import current_snapshot, merge_upsert
 
     target = str(tmp_path / "tbl2")
     base = spark.createDataFrame([(1, "a")], "k int, v string")
     merge_upsert(spark, target, base, keys=("k",))
 
     changes = spark.createDataFrame([(1, "A2", "upsert")], "k int, v string, op string")
-    # simulate crash: build staging exactly like merge_upsert, skip promote
-    staged = merge_sink.read_merged(spark, target).join(
-        changes.select("k").distinct(), ["k"], "left_anti"
-    ).unionByName(changes.drop("op"))
-    staging = target + merge_sink._STAGING_SUFFIX
-    staged.write.mode("overwrite").parquet(staging)
-    assert os.path.exists(staging)
+    real = os.rename
+
+    def dying(src, dst, *a, **kw):
+        if os.path.basename(src) == "_current.tmp":
+            raise RuntimeError("injected kill before the pointer swap")
+        return real(src, dst, *a, **kw)
+
+    monkeypatch.setattr(os, "rename", dying)
+    with _pytest.raises(RuntimeError, match="injected kill"):
+        merge_upsert(spark, target, changes, keys=("k",))
+    monkeypatch.undo()
+    assert os.path.isdir(os.path.join(target, "data", "v1"))  # orphan written
+    assert current_snapshot(target) == 0
     assert _read_kv(spark, target) == {(1,): ("a",)}  # live untouched
 
-    merge_upsert(spark, target, changes, keys=("k",))  # replay
+    assert merge_upsert(spark, target, changes, keys=("k",)) == 1  # replay
     assert _read_kv(spark, target) == {(1,): ("A2",)}
-    assert not os.path.exists(staging)
-    assert not os.path.exists(target + merge_sink._OLD_SUFFIX)
-
-
-def test_merge_upsert_crash_between_renames(spark, tmp_path):
-    """The worst crash window: live dir renamed to __old but staging
-    not yet promoted. A rerun must restore __old first and merge
-    against the REAL table — not treat the target as empty."""
-    import os
-
-    from mel_tnnt_spark.operators import merge_sink
-    from mel_tnnt_spark.operators.merge_sink import merge_upsert
-
-    target = str(tmp_path / "tbl3")
-    base = spark.createDataFrame([(1, "a"), (2, "b")], "k int, v string")
-    merge_upsert(spark, target, base, keys=("k",))
-
-    # simulate the mid-promote crash: live -> __old done, promote not
-    os.rename(target, target + merge_sink._OLD_SUFFIX)
-    assert not os.path.exists(target)
-
-    changes = spark.createDataFrame([(2, "B2", "upsert")], "k int, v string, op string")
-    merge_upsert(spark, target, changes, keys=("k",))
-    # row 1 (untouched by the change batch) must survive the recovery
-    assert _read_kv(spark, target) == {(1,): ("a",), (2,): ("B2",)}
-    assert not os.path.exists(target + merge_sink._OLD_SUFFIX)
+    assert current_snapshot(target) == 1
 
 
 def test_merge_upsert_rejects_duplicate_change_keys(spark, tmp_path):
@@ -349,16 +345,14 @@ def test_merge_upsert_rewrites_only_touched_buckets(spark, tmp_path):
         [(i, f"v{i}") for i in range(64)], "k int, v string"
     )
     merge_upsert(spark, target, base, keys=("k",), n_buckets=8)
-    dirs = sorted(d for d in os.listdir(target) if d.startswith("kb="))
-    assert len(dirs) > 3  # keys actually spread over buckets
+    assert len(_bucket_dirs(target)) > 3  # keys actually spread over buckets
 
     def snapshot():
         snap = {}
-        for d in dirs:
-            for f in os.listdir(os.path.join(target, d)):
-                p = os.path.join(target, d, f)
-                st = os.stat(p)
-                snap[p] = (st.st_size, st.st_mtime_ns)
+        for b, d in _bucket_dirs(target).items():
+            for f in os.listdir(d):
+                st = os.stat(os.path.join(d, f))
+                snap[(b, os.path.join(d, f))] = (st.st_size, st.st_mtime_ns)
         return snap
 
     before = snapshot()
@@ -367,64 +361,13 @@ def test_merge_upsert_rewrites_only_touched_buckets(spark, tmp_path):
     after = snapshot()
 
     changed_dirs = {
-        os.path.basename(os.path.dirname(p))
-        for p in (set(before) ^ set(after))
+        b
+        for b, p in (set(before) ^ set(after))
         | {p for p in before.keys() & after.keys() if before[p] != after[p]}
     }
     assert len(changed_dirs) == 1, f"rewrote {changed_dirs}, expected exactly one bucket"
     got = {r["k"]: r["v"] for r in read_merged(spark, target).collect()}
     assert got[3] == "V3" and got[5] == "v5" and len(got) == 64
-
-
-def test_merge_upsert_legacy_migration_crash_replay(spark, tmp_path):
-    """The confirmed round-3 review bug: migrating a legacy FLAT table
-    must never leave flat part files invisible next to kb= dirs. The
-    whole-dir staged swap guarantees every crash window replays to the
-    full table: (b) crash between the two renames -> flat table is
-    restored and migration reruns; (c) crash after staging promoted ->
-    the superseded flat files under __old are dropped, NOT restored
-    into the bucketed dir."""
-    import os
-    import shutil
-
-    from mel_tnnt_spark.operators import merge_sink
-    from mel_tnnt_spark.operators.merge_sink import merge_upsert, read_merged
-
-    # legacy flat table, 12 rows (simulating a round-2 layout)
-    target = str(tmp_path / "legacy")
-    rows = [(i, f"v{i}") for i in range(12)]
-    spark.createDataFrame(rows, "k int, v string").coalesce(1).write.parquet(target)
-
-    # crash window (b): live renamed away, staged bucketed dir exists
-    ch = spark.createDataFrame([(3, "V3", "upsert")], "k int, v string, op string")
-    os.rename(target, target + merge_sink._OLD_SUFFIX)
-    os.makedirs(target + merge_sink._STAGING_SUFFIX, exist_ok=True)
-
-    merge_upsert(spark, target, ch, keys=("k",), n_buckets=4)
-    got = {r["k"]: r["v"] for r in read_merged(spark, target).collect()}
-    assert len(got) == 12 and got[3] == "V3" and got[11] == "v11"
-    assert len([d for d in os.listdir(target) if d.startswith("kb=")]) > 1
-    # no flat part files left beside the bucket dirs
-    assert not [
-        f for f in os.listdir(target)
-        if f.endswith(".parquet") and os.path.isfile(os.path.join(target, f))
-    ]
-
-    # crash window (c): healthy bucketed table + stale flat __old
-    stale = target + merge_sink._OLD_SUFFIX
-    os.makedirs(stale)
-    spark.createDataFrame([(99, "GHOST")], "k int, v string").coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(stale + "/tmpflat")
-    for f in os.listdir(stale + "/tmpflat"):
-        shutil.move(os.path.join(stale, "tmpflat", f), os.path.join(stale, f))
-    shutil.rmtree(stale + "/tmpflat")
-
-    ch2 = spark.createDataFrame([(5, "V5", "upsert")], "k int, v string, op string")
-    merge_upsert(spark, target, ch2, keys=("k",))
-    got2 = {r["k"]: r["v"] for r in read_merged(spark, target).collect()}
-    assert 99 not in got2 and got2[5] == "V5" and len(got2) == 12
-    assert not os.path.exists(stale)
 
 
 # ---------------------------------------------------------------------------
@@ -555,7 +498,7 @@ def test_merge_upsert_bucket_keys_layout_and_pruned_read(spark, tmp_path):
         spark, target, base, keys=("fingerprint", "doc_id"),
         bucket_keys=("fingerprint",), n_buckets=8,
     )
-    assert len([d for d in os.listdir(target) if d.startswith("kb=")]) > 3
+    assert len(_bucket_dirs(target)) > 3
 
     probe_fps = [rows[0][0], rows[7][0]]
     probe = spark.createDataFrame([(f,) for f in probe_fps], "fingerprint bigint")
@@ -626,8 +569,6 @@ def test_merge_upsert_file_count_bounded_across_merges(spark, tmp_path):
         rows = [(step * 200 + i, f"s{step}") for i in range(200)]
         ch = spark.createDataFrame(rows, "k int, v string")
         merge_upsert(spark, target, ch, keys=("k",), n_buckets=8)
-    for d in os.listdir(target):
-        if d.startswith("kb="):
-            files = [f for f in os.listdir(os.path.join(target, d))
-                     if f.endswith(".parquet")]
-            assert len(files) == 1, f"{d} holds {len(files)} files"
+    for d in _bucket_dirs(target).values():
+        files = [f for f in os.listdir(d) if f.endswith(".parquet")]
+        assert len(files) == 1, f"{d} holds {len(files)} files"

@@ -25,16 +25,17 @@ from mel_tnnt_spark.state import (
 PKG = Path(__file__).resolve().parent.parent / "mel_tnnt_spark"
 
 
-def _kill_rename(monkeypatch, prefix: str) -> dict:
-    """Make the next publish of an entry named `prefix...` die after its
-    staging dir is written and before the rename. Returns a record of
-    the kill."""
+def _kill_rename(monkeypatch, src_prefix: str) -> dict:
+    """Make the next rename of a file or dir named `src_prefix...` die
+    after it is written and before the rename: a publish's staging dir
+    (`__staging-<entry>`) or the merge sink's pointer swap
+    (`_current.tmp`). Returns a record of the kill."""
     real = os.rename
     killed = {}
 
     def dying(src, dst, *a, **kw):
-        if os.path.basename(src).startswith("__staging-" + prefix):
-            killed["staged"] = os.path.isdir(src)
+        if os.path.basename(src).startswith(src_prefix):
+            killed["staged"] = os.path.exists(src)
             raise RuntimeError("injected kill before the rename")
         return real(src, dst, *a, **kw)
 
@@ -54,7 +55,7 @@ def test_publish_killed_before_rename_is_invisible_and_retry_commits(
 ):
     root = str(tmp_path / "log")
     df = spark.createDataFrame([(1, "a"), (2, "b")], "id long, v string")
-    killed = _kill_rename(monkeypatch, "batch=")
+    killed = _kill_rename(monkeypatch, "__staging-batch=")
     with pytest.raises(RuntimeError, match="injected kill"):
         publish(df, root, "batch=t1")
     monkeypatch.undo()
@@ -102,17 +103,9 @@ def test_pin_returns_stored_meta_and_write_json_is_atomic(tmp_path, monkeypatch)
 
 
 def test_only_state_module_renames_or_spells_staging():
-    """The staging prefix and the commit rename live in state.py alone.
-    The one exception is merge_sink's per-bucket promote (`_recover`,
-    `_promote_whole`, `_promote_buckets`, and its `__staging` dir
-    suffix constant), which moves whole bucket directories between a
-    live table and its `__old` twin."""
-    allowed = {
-        ("operators/merge_sink.py", "_recover"),
-        ("operators/merge_sink.py", "_promote_whole"),
-        ("operators/merge_sink.py", "_promote_buckets"),
-        ("operators/merge_sink.py", "<module>"),
-    }
+    """The staging prefix and the commit rename live in state.py alone;
+    the merge sink commits through `state.write_json` too."""
+    allowed = set()
     found = []
     for path in sorted(PKG.rglob("*.py")):
         rel = path.relative_to(PKG).as_posix()
@@ -143,7 +136,7 @@ def test_only_state_module_renames_or_spells_staging():
     assert [f for f in found if f[:2] not in allowed] == []
 
 
-# -- every maintained operator, killed between staging and rename ------
+# -- every maintained operator, killed between its write and rename ---
 
 
 def _closure(compact_every):
@@ -205,22 +198,31 @@ _TEXT_BATCHES = [
     [(20, _RUN + " again and again " + _RUN)],
 ]
 
+_MERGE_BATCHES = [[(1, "a"), (2, "b")], [(2, "B"), (3, "c")], [(1, "A"), (4, "d")]]
+
+# case -> (fold, basename prefix of the killed rename, batches, index of
+# the killed fold)
 _CASES = {
-    "closure_seg": (_closure(8), "seg-", [_CHAIN[:4], _CHAIN[4:8], _CHAIN[8:]]),
+    "closure_seg": (_closure(8), "__staging-seg-",
+                    [_CHAIN[:4], _CHAIN[4:8], _CHAIN[8:]], 1),
     "closure_compaction": (
-        _closure(2), "base-v", [_CHAIN[:4], _CHAIN[4:8], _CHAIN[8:]]),
-    "weighted_sample": (_sample, "v=", [
+        _closure(2), "__staging-base-v", [_CHAIN[:4], _CHAIN[4:8], _CHAIN[8:]], 1),
+    "weighted_sample": (_sample, "__staging-v=", [
         [(i, float(i % 7 + 1)) for i in range(0, 30)],
         [(i, float(i % 5 + 1)) for i in range(30, 60)],
         [(i, float(i % 3 + 1)) for i in range(60, 90)],
-    ]),
-    "domain_caps": (_caps, "batch=", [
+    ], 1),
+    "domain_caps": (_caps, "__staging-batch=", [
         [(1, "a"), (2, "a"), (3, "b")],
         [(10, "a"), (11, "a"), (12, "b")],
         [(20, "a"), (21, "b"), (22, "c")],
-    ]),
-    "overlap_index": (_overlap_fold, "batch=", _TEXT_BATCHES),
-    "span_index": (_span_fold, "batch=", _TEXT_BATCHES),
+    ], 1),
+    "overlap_index": (_overlap_fold, "__staging-batch=", _TEXT_BATCHES, 1),
+    "span_index": (_span_fold, "__staging-batch=", _TEXT_BATCHES, 1),
+    # the merge sink's one pointer swap, on the first merge and on an
+    # incremental one
+    "merge_first": (_merge_fold, "_current", _MERGE_BATCHES, 0),
+    "merge_incremental": (_merge_fold, "_current", _MERGE_BATCHES, 1),
 }
 
 
@@ -228,19 +230,19 @@ _CASES = {
 def test_publish_kill_and_replay_equals_uncrashed_run(
     spark, tmp_path, monkeypatch, case
 ):
-    """Kill the second fold inside publish (staging written, rename not
-    done), replay it, fold the third batch: every returned result
-    equals the uncrashed run's."""
-    fold, prefix, batches = _CASES[case]
+    """Kill one fold at its commit rename (the data is written, the
+    rename is not done), replay it, fold the remaining batches: every
+    returned result equals the uncrashed run's."""
+    fold, prefix, batches, k = _CASES[case]
     want = [fold(spark, str(tmp_path / "clean"), b) for b in batches]
     root = str(tmp_path / "crashed")
-    got = [fold(spark, root, batches[0])]
+    got = [fold(spark, root, b) for b in batches[:k]]
     killed = _kill_rename(monkeypatch, prefix)
     with pytest.raises(RuntimeError, match="injected kill"):
-        fold(spark, root, batches[1])
+        fold(spark, root, batches[k])
     monkeypatch.undo()
     assert killed == {"staged": True}
-    got += [fold(spark, root, b) for b in batches[1:]]
+    got += [fold(spark, root, b) for b in batches[k:]]
     assert got == want
 
 
@@ -254,7 +256,7 @@ def test_closure_fold_sweeps_staging_of_killed_compaction(
     fold = _closure(2)
     root = str(tmp_path / "closure")
     fold(spark, root, _CHAIN[:4])
-    _kill_rename(monkeypatch, "base-v")
+    _kill_rename(monkeypatch, "__staging-base-v")
     with pytest.raises(RuntimeError, match="injected kill"):
         fold(spark, root, _CHAIN[4:8])
     monkeypatch.undo()
@@ -270,12 +272,12 @@ def test_closure_fold_sweeps_staging_of_killed_compaction(
 # -- the definition pins survive a kill inside their write --------------
 
 
-def _meta_kill(monkeypatch) -> dict:
+def _meta_kill(monkeypatch, marker: str) -> dict:
     real = json.dump
     killed = {}
 
     def dying(obj, f, *a, **kw):
-        if "_meta.json" in getattr(f, "name", ""):
+        if marker in getattr(f, "name", ""):
             killed["n"] = killed.get("n", 0) + 1
             f.write(json.dumps(obj)[:5])
             raise RuntimeError("injected kill inside the meta write")
@@ -285,30 +287,30 @@ def _meta_kill(monkeypatch) -> dict:
     return killed
 
 
-_MERGE_BATCHES = [[(1, "a"), (2, "b")], [(2, "B"), (3, "c")]]
+_MANIFEST = os.sep + "snaps" + os.sep
 
 
 @pytest.mark.parametrize(
-    "fold, batches, killed_call",
+    "fold, batches, killed_call, marker, kills",
     [
-        (_overlap_fold, _TEXT_BATCHES[:2], 0),
-        (_span_fold, _TEXT_BATCHES[:2], 0),
-        (_merge_fold, _MERGE_BATCHES, 0),
-        (_merge_fold, _MERGE_BATCHES, 1),
+        (_overlap_fold, _TEXT_BATCHES[:2], 0, "_meta.json", 1),
+        (_span_fold, _TEXT_BATCHES[:2], 0, "_meta.json", 1),
+        (_merge_fold, _MERGE_BATCHES, 0, _MANIFEST, 1),
+        (_merge_fold, _MERGE_BATCHES, 1, _MANIFEST, 1),
     ],
     ids=["overlap_index", "span_index", "merge_create", "merge_incremental"],
 )
 def test_definition_pin_survives_kill_inside_meta_write(
-    spark, tmp_path, monkeypatch, fold, batches, killed_call
+    spark, tmp_path, monkeypatch, fold, batches, killed_call, marker, kills
 ):
     """A kill inside the meta write, then a re-run: the call succeeds
     and every later call returns what an uncrashed run returns. The
-    merge meta is written only while absent, so an incremental merge
-    has no meta write left to kill."""
+    merge sink records its layout in each snapshot's manifest, so both
+    the first and an incremental merge have a manifest write to kill."""
     want = [fold(spark, str(tmp_path / "clean"), b) for b in batches]
     root = str(tmp_path / "crashed")
     got = [fold(spark, root, b) for b in batches[:killed_call]]
-    killed = _meta_kill(monkeypatch)
+    killed = _meta_kill(monkeypatch, marker)
     try:
         got.append(fold(spark, root, batches[killed_call]))
     except RuntimeError as e:
@@ -316,6 +318,6 @@ def test_definition_pin_survives_kill_inside_meta_write(
         monkeypatch.undo()
         got.append(fold(spark, root, batches[killed_call]))
     monkeypatch.undo()
-    assert killed.get("n", 0) == (1 if killed_call == 0 else 0)
+    assert killed.get("n", 0) == kills
     got += [fold(spark, root, b) for b in batches[killed_call + 1:]]
     assert got == want
