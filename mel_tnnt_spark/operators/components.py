@@ -228,8 +228,7 @@ def incremental_components(
     fast path). Per-batch cost is O(|batch| + |labels| scan) instead of
     O(|graph| x diameter). changed_only=True returns just the rows
     whose label moves (plus new nodes) — feed that to merge_upsert for
-    O(touched) persistence (streaming.stream_maintain_components does
-    exactly this)."""
+    O(touched) persistence (maintain_components does exactly this)."""
     lab = labels.select(F.col(node_col).alias("_n"), F.col(comp_col).alias("_c"))
     e = new_edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
 
@@ -297,3 +296,44 @@ def incremental_components(
         .select(F.col(node_col), F.coalesce("_new", F.col(node_col)).alias(comp_col))
     )
     return updated.unionByName(new_nodes)
+
+
+def maintain_components(
+    spark,
+    labels_path: str,
+    edges: DataFrame,
+    src: str = "src",
+    dst: str = "dst",
+    txn: tuple[str, int] | None = None,
+) -> None:
+    """Fold a batch of edges into the persisted (node, component)
+    labeling at labels_path (a merge-sink table) via
+    incremental_components(changed_only=True) + the O(touched) MERGE
+    sink: the maintained twin of the north-star CC, at per-batch cost
+    O(|batch|) instead of a global recompute. Final labels equal
+    from-scratch CC over all edges folded so far (test-pinned in
+    tests/test_streaming.py). Only the last snapshot is kept.
+
+    Null-endpoint edges are dropped: outside edge sources can carry
+    them, and a null would poison the union-find. Exactly-once via
+    `txn`, recorded by `merge_upsert` in the same commit as the labels;
+    the fold is also idempotent on its own (a replayed batch's edges
+    already sit inside one component, so its delta is empty)."""
+    from mel_tnnt_spark.operators.merge_sink import (
+        current_snapshot,
+        expire_snapshots,
+        merge_upsert,
+        read_merged,
+    )
+
+    edges = edges.dropna(subset=[src, dst])
+    if current_snapshot(labels_path) is not None:
+        labels = read_merged(spark, labels_path)
+    else:  # first batch: empty labeling with the edge key type
+        labels = spark.createDataFrame(
+            [],
+            edges.select(F.col(src).alias("node"), F.col(src).alias("component")).schema,
+        )
+    delta = incremental_components(labels, edges, src=src, dst=dst, changed_only=True)
+    merge_upsert(spark, labels_path, delta, keys=("node",), txn=txn)
+    expire_snapshots(labels_path, keep_last=1)

@@ -282,7 +282,12 @@ def maintain_domain_caps(
     maintain_pack_layout pattern, would be needed to lift this —
     deliberately not paid until a caller needs out-of-order replay).
     Chained == scratch cap_per_group on the union whenever ids ascend
-    with arrival — q98 gates that equivalence."""
+    with arrival — q98 gates that equivalence. Rows with a null id are
+    dropped.
+
+    Streaming (`stream_maintain`): replay-safe for the last uncommitted
+    batch on its own, so it takes no `txn`; stream == scratch is pinned
+    in tests/test_corpus_composition.py."""
     import os
 
     from mel_tnnt_spark.operators.dedup import content_tag
@@ -292,7 +297,7 @@ def maintain_domain_caps(
         raise ValueError(f"maintain_domain_caps: cap must be >= 1, got {cap}")
     base = batch.select(
         F.col(id_col).alias("id"), F.col(group_col).alias("grp")
-    )
+    ).dropna(subset=["id"])
     tag = content_tag(base, F.col("id"), F.col("grp"))
     log_dir = os.path.join(state_path, "accepted")
     prior_dirs = [

@@ -867,7 +867,7 @@ def maintain_overlap_index(
     (test_maintain_overlap_index_chained_equals_scratch).
 
     O(BATCH) PER BATCH (the round-4 scale fix — per-batch cost must
-    not grow with corpus size, the property stream_maintain_components
+    not grow with corpus size, the property maintain_components
     already has). The index is an LSM-shaped pair:
 
     - `fp/` — the compacted BASE: a merge table keyed
@@ -911,7 +911,11 @@ def maintain_overlap_index(
 
     The fingerprint definition (n, window, algorithm version) and the
     bucket layout are pinned in index metadata; calls with a different
-    definition raise (round-4 advice)."""
+    definition raise (round-4 advice). Rows with a null id are dropped.
+
+    Streaming (`stream_maintain`): replay-safe for the last uncommitted
+    batch on its own, so it takes no `txn`; stream == chained batch is
+    pinned in tests/test_streaming.py."""
     import os
 
     from mel_tnnt_spark.operators.merge_sink import (
@@ -923,6 +927,7 @@ def maintain_overlap_index(
     n_buckets = _overlap_meta_check(index_path, n, window, n_buckets)
     fp_path = os.path.join(index_path, _FP_SUBDIR)
     log_path = os.path.join(index_path, _FP_LOG_SUBDIR)
+    batch = batch.dropna(subset=[id_col])
     bfp = winnowing_fingerprints(batch, id_col, text_col, n, window).persist()
     try:
         probe = bfp.select("fingerprint").distinct()
@@ -1235,7 +1240,12 @@ def maintain_span_index(
     the same way: the same `_fold_into_log` (crash windows in
     mel_tnnt_spark/state.py), and the rewritten batch is
     localCheckpoint-ed BEFORE the fold-in so eviction can never
-    recompute it against the mutated index."""
+    recompute it against the mutated index. Rows with a null id are
+    dropped.
+
+    Streaming (`stream_maintain`): replay-safe for the last uncommitted
+    batch on its own, so it takes no `txn`; stream == chained batch is
+    pinned in tests/test_streaming.py."""
     import os
 
     from mel_tnnt_spark.operators.merge_sink import current_snapshot, read_merged_pruned
@@ -1243,7 +1253,7 @@ def maintain_span_index(
     n_buckets = _span_meta_check(index_path, k, n_buckets)
     fp_path = os.path.join(index_path, _FP_SUBDIR)
     log_path = os.path.join(index_path, _FP_LOG_SUBDIR)
-    toks = _span_toks(batch, id_col, text_col).persist()
+    toks = _span_toks(batch.dropna(subset=[id_col]), id_col, text_col).persist()
     occ = _span_occ(toks, k).persist()
     try:
         probe = occ.select(F.col("h").alias("fingerprint")).distinct()

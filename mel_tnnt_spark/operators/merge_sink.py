@@ -20,6 +20,13 @@ semantics over parquet with Iceberg's commit design and cost model
   `state.write_json`. A kill before the swap leaves orphan data and
   manifest files that readers never see and the replay overwrites; a
   kill after it is the commit. Replaying a merge is idempotent.
+- a merge may carry `txn=(app_id, version)`, Delta Lake's `txn`
+  action (https://github.com/delta-io/delta/blob/master/PROTOCOL.md):
+  the manifest records `txn: {app_id: last_version}`, copied forward
+  from the parent, so the applied version commits in the same swap as
+  the data. A merge whose version is <= the recorded one for its app
+  id is a no-op, which makes a replayed additive merge (a streaming
+  micro-batch re-run after a kill past the swap) exactly-once.
 
 On top of that: time travel (`read_merged(..., as_of=N)`), schema
 evolution (a merge may add columns; older rows read NULL) and
@@ -172,6 +179,7 @@ def merge_upsert(
     op_col: str | None = "op",
     n_buckets: int = DEFAULT_N_BUCKETS,
     bucket_keys: tuple[str, ...] | None = None,
+    txn: tuple[str, int] | None = None,
 ) -> int:
     """MERGE changes into the bucketed parquet table at target_path and
     commit a new snapshot; returns its id. Matched + upsert -> replaced
@@ -188,7 +196,12 @@ def merge_upsert(
     (read_merged_pruned) — the Iceberg `bucket(n, fingerprint)` layout.
     Merge cost is unchanged: a change row's bucket is still a pure
     function of its key columns. The layout is fixed by the first
-    merge."""
+    merge.
+
+    txn: (app_id, version) of the writer's batch. When the current
+    manifest already records a version >= `version` for `app_id`, the
+    merge is skipped without running a Spark job and the current
+    snapshot id is returned."""
     op_col = op_col or "op"
     if op_col not in changes.columns:
         changes = changes.withColumn(op_col, F.lit("upsert"))
@@ -202,6 +215,12 @@ def merge_upsert(
 
     parent_sid = current_snapshot(target_path)
     parent = _manifest(target_path) if parent_sid is not None else None
+    applied = dict(parent.get("txn", {})) if parent is not None else {}
+    if txn is not None:
+        app_id, txn_version = txn
+        if app_id in applied and txn_version <= applied[app_id]:
+            return parent_sid
+        applied[app_id] = txn_version
     change_schema = StructType([
         StructField(f.name, f.dataType) for f in changes.schema.fields if f.name != op_col
     ])
@@ -293,6 +312,7 @@ def merge_upsert(
             "n_buckets": n_buckets,
             "schema": schema.jsonValue(),
             "buckets": buckets,
+            "txn": applied,
         })
         write_json(os.path.join(target_path, _CURRENT), sid)  # THE commit
         return sid

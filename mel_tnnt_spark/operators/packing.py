@@ -242,7 +242,11 @@ def maintain_pack_layout(
     rows (the state file is a `state.write_json` commit, never
     partially visible). Driver state is O(1) per applied batch;
     output rows are localCheckpoint-ed so callers can consume them
-    after the state advances."""
+    after the state advances. Rows with a null id are dropped.
+
+    Streaming (`stream_maintain`): replay-safe for the last uncommitted
+    batch on its own, so it takes no `txn`; stream == scratch is pinned
+    in tests/test_corpus_composition.py."""
     import os
 
     from mel_tnnt_spark.operators.dedup import content_tag
@@ -250,6 +254,7 @@ def maintain_pack_layout(
 
     state_file = os.path.join(state_path, "_state.json")
     state = read_json(state_file, {"total": 0, "applied": {}})
+    batch = batch.dropna(subset=[id_col])
     tag = content_tag(
         batch, F.col(id_col), F.coalesce(F.col(text_col).cast("string"), F.lit(""))
     )

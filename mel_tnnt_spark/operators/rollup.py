@@ -50,10 +50,18 @@ def maintain_rollup(
     dims: tuple[str, ...] = ("event_type",),
     value: str = "value",
     bucket: str = "1 hour",
+    txn: tuple[str, int] | None = None,
 ) -> None:
     """Incremental refresh: merge the batch's partial rollup into the
     stored table. Only buckets present in the batch are recomputed
-    (stored + delta re-aggregated); everything else is untouched."""
+    (stored + delta re-aggregated); everything else is untouched.
+
+    The merge ADDS, so re-applying a batch counts it twice. Exactly-once
+    via `txn` (app id, version), which `merge_upsert` records in the
+    same commit as the data: a replayed batch is a no-op
+    (`streaming.incremental.stream_maintain` passes its
+    (query id, batch id)). Stream == scratch and a kill after the
+    commit are pinned in tests/test_streaming.py."""
     from mel_tnnt_spark.operators.merge_sink import (
         current_snapshot,
         expire_snapshots,
@@ -73,5 +81,5 @@ def maintain_rollup(
         )
     else:
         merged = delta
-    merge_upsert(spark, rollup_path, merged, keys=keys)
+    merge_upsert(spark, rollup_path, merged, keys=keys, txn=txn)
     expire_snapshots(rollup_path, keep_last=1)  # no history kept

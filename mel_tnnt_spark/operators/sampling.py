@@ -108,7 +108,11 @@ def maintain_weighted_sample(
     n+1 through `state.publish` (crash windows in
     mel_tnnt_spark/state.py) with the last version retained, so a
     crash mid-write leaves v=n intact and the replay recreates v=n+1
-    identically."""
+    identically.
+
+    Streaming (`stream_maintain`): replay-safe for the last uncommitted
+    batch on its own, so it takes no `txn`; stream == scratch is pinned
+    in tests/test_graph_query.py."""
     import os
     import shutil
 

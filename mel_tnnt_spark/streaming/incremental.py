@@ -16,14 +16,22 @@ Design:
 - per-batch stages run in foreachBatch against the batch DataFrame,
   writing triples with append semantics keyed by batch_id (idempotent
   replay: Structured Streaming re-runs a failed batch with the same id).
+- maintained state (rollup, component labels, the dedup indexes, the
+  packing/caps/closure/sample operators) is driven by one scaffold,
+  `stream_maintain`, which hands each micro-batch and its
+  (query id, batch id) to the operator.
 - `mention_rate_stream` shows the event-time windowed-aggregation shape
   (watermark + tumbling window) used for monitoring pipelines.
 """
 
 from __future__ import annotations
 
+import json
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 
 from mel_tnnt_spark.datagen import CODE_FILES_SCHEMA
 from mel_tnnt_spark.operators import linking, mentions, metadata, summaries, triples
@@ -57,10 +65,10 @@ def run_incremental(
     source_dir: str,
     output_dir: str,
     checkpoint_dir: str,
-    once: bool = True,
 ):
-    """End-to-end incremental run: stream mentions, then per batch
-    canonicalize -> link -> triples -> append. Returns the query."""
+    """End-to-end incremental run over everything available now: stream
+    mentions, then per batch canonicalize -> link -> triples -> append.
+    Returns the started query."""
     ments = streaming_mentions(read_code_files_stream(spark, source_dir))
     label_map = summaries.label_classification_df(spark)
     aliases = linking.alias_dict_df(spark)
@@ -91,100 +99,62 @@ def run_incremental(
             .parquet(output_dir)
         )
 
-    writer = (
+    return (
         ments.writeStream.foreachBatch(process_batch)
         .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
     )
-    if once:
-        q = writer.trigger(availableNow=True).start()
-    else:
-        q = writer.trigger(processingTime="10 seconds").start()
-    return q
 
 
-def _replay_protected_stream(
+def stream_maintain(
     stream: DataFrame,
-    target_path: str,
+    apply,
     checkpoint_dir: str,
-    apply_fn,
-    once: bool,
-):
-    """Shared foreachBatch scaffold for the maintained-table streams
-    (rollup, component labels): at-least-once delivery is made
-    effectively exactly-once by applied-batch marker files NAMESPACED
-    BY THE QUERY ID read from the checkpoint — batch ids restart at 0
-    for every fresh checkpoint, so an un-namespaced marker would
-    silently drop the early batches of any later stream maintaining
-    the same table. Markers are written AFTER apply_fn commits (for
-    the `state.publish` writers, the commit and its crash windows are
-    in mel_tnnt_spark/state.py; for the merge sink, its one pointer
-    swap). The remaining window is a kill after that commit and before
-    the marker write: the restart applies the batch a second time.
-    That is harmless for idempotent writers (component labels,
-    content-addressed publishes), but stream_maintain_rollup's merge
-    adds, so that one batch is counted twice (a real Iceberg MERGE
-    commits data and ancestry in one snapshot and closes the window).
-    Empty batches are skipped without a marker (re-skipping is free)."""
-    import hashlib
-    import json as _json
-    import os
+    out_path: str | None = None,
+) -> DataStreamWriter:
+    """The one foreachBatch scaffold for maintained state: every
+    non-empty micro-batch is handed to `apply(batch_df, txn)`, where
+    `txn = (query id, batch id)`. The query id is read from the
+    checkpoint's `metadata` file, so it is stable across restarts of
+    this checkpoint and new for any fresh one. Returns the configured
+    writer; start it with `.trigger(availableNow=True).start()`.
 
-    applied_dir = target_path + "__applied"
+    Structured Streaming re-runs the last uncommitted batch after a
+    failure, with the same batch id. An operator whose commit is
+    additive passes `txn` to `merge_sink.merge_upsert`, which records
+    it in the manifest in the same pointer swap as the data, so the
+    replay is a no-op (`operators.rollup.maintain_rollup`,
+    `operators.components.maintain_components`). The other maintained
+    operators are replay-safe for that batch on their own and ignore
+    `txn`.
 
-    def _query_ns() -> str:
-        # the checkpoint's metadata file carries the stable query id
-        # (same across restarts of this checkpoint, different for any
-        # fresh checkpoint); fall back to a path hash before it exists
-        try:
-            with open(os.path.join(checkpoint_dir, "metadata")) as f:
-                return _json.load(f)["id"]
-        except (OSError, ValueError, KeyError):
-            return hashlib.sha1(checkpoint_dir.encode()).hexdigest()[:16]
+    With `out_path`, the frame `apply` returns is published as the
+    entry `batch=<query id>-<batch id>`; a replayed batch replaces its
+    entry. Read the published output with `read_stream_output`."""
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        marker = os.path.join(applied_dir, f"{_query_ns()}-batch-{batch_id}")
-        if os.path.exists(marker) or batch_df.isEmpty():
+        if batch_df.isEmpty():
             return
-        apply_fn(batch_df)
-        os.makedirs(applied_dir, exist_ok=True)
-        with open(marker, "w") as f:
-            f.write("done")
+        with open(os.path.join(checkpoint_dir, "metadata")) as f:
+            query_id = json.load(f)["id"]
+        out = apply(batch_df, (query_id, batch_id))
+        if out_path is not None:
+            publish(out, out_path, f"batch={query_id}-{batch_id}")
 
-    writer = stream.writeStream.foreachBatch(process_batch).option(
+    return stream.writeStream.foreachBatch(process_batch).option(
         "checkpointLocation", checkpoint_dir
     )
-    if once:
-        return writer.trigger(availableNow=True).start()
-    return writer.trigger(processingTime="10 seconds").start()
 
 
-def stream_maintain_rollup(
-    stream: DataFrame,
-    rollup_path: str,
-    checkpoint_dir: str,
-    ts: str = "ts",
-    dims: tuple[str, ...] = ("event_type",),
-    value: str = "value",
-    bucket: str = "1 hour",
-    once: bool = True,
-):
-    """Continuous-aggregate maintenance from a stream (the TimescaleDB
-    continuous-aggregate shape end to end): every micro-batch is merged
-    into the stored rollup via `operators.rollup.maintain_rollup`, so
-    only the time buckets the batch touches are re-aggregated and only
-    their key-hash partitions rewritten (the O(touched) MERGE sink).
-    Replay protection via _replay_protected_stream (the rollup merge
-    ADDS, so a re-delivered batch must skip, not re-merge).
-    Stream==batch equality is pinned in tests/test_streaming.py."""
-    from mel_tnnt_spark.operators.rollup import maintain_rollup
-
-    def apply(batch_df: DataFrame) -> None:
-        maintain_rollup(
-            batch_df.sparkSession, rollup_path, batch_df,
-            ts=ts, dims=dims, value=value, bucket=bucket,
-        )
-
-    return _replay_protected_stream(stream, rollup_path, checkpoint_dir, apply, once)
+def read_stream_output(spark: SparkSession, out_path: str) -> DataFrame:
+    """Everything `stream_maintain` published under `out_path`: the
+    union of the per-batch entries."""
+    return (
+        spark.read.option("basePath", out_path)
+        .parquet(f"{out_path}/batch=*")
+        .drop("batch")
+    )
 
 
 def mention_rate_stream(events: DataFrame, window: str = "1 minute", watermark: str = "2 minutes") -> DataFrame:
@@ -202,315 +172,4 @@ def mention_rate_stream(events: DataFrame, window: str = "1 minute", watermark: 
             "event_type",
             F.col("count").alias("cnt"),
         )
-    )
-
-
-def stream_maintain_components(
-    edge_stream: DataFrame,
-    labels_path: str,
-    checkpoint_dir: str,
-    src: str = "src",
-    dst: str = "dst",
-    once: bool = True,
-):
-    """Continuous identity maintenance: every micro-batch of similarity
-    edges folds into the persisted (node, component) table via
-    incremental_components(changed_only=True) + the O(touched) MERGE
-    sink — the streaming twin of the north-star CC, at per-batch cost
-    O(|batch|) instead of a global recompute (the rollup-maintenance
-    shape applied to the identity graph). Replay protection via
-    _replay_protected_stream. Stream==batch equality (final labels
-    equal from-scratch CC over all edges) is pinned in
-    tests/test_streaming.py.
-
-    Robustness: a kill inside a merge leaves the label table at its
-    last committed snapshot (the sink's one pointer swap), so the delta
-    is always computed from a whole labeling; only the last snapshot
-    is kept. Null-endpoint edges are dropped (externally-sourced edge
-    streams can carry them; a null would poison the union-find and
-    wedge the stream on one bad row)."""
-    from mel_tnnt_spark.operators.components import incremental_components
-    from mel_tnnt_spark.operators.merge_sink import (
-        current_snapshot,
-        expire_snapshots,
-        merge_upsert,
-        read_merged,
-    )
-
-    def apply(batch_df: DataFrame) -> None:
-        spark = batch_df.sparkSession
-        batch_df = batch_df.dropna(subset=[src, dst])
-        if current_snapshot(labels_path) is not None:
-            labels = read_merged(spark, labels_path)
-        else:  # first batch: empty labeling with the edge key type
-            labels = spark.createDataFrame(
-                [],
-                batch_df.select(
-                    F.col(src).alias("node"), F.col(src).alias("component")
-                ).schema,
-            )
-        delta = incremental_components(
-            labels, batch_df, src=src, dst=dst, changed_only=True
-        )
-        merge_upsert(spark, labels_path, delta, keys=("node",))
-        expire_snapshots(labels_path, keep_last=1)
-
-    return _replay_protected_stream(
-        edge_stream, labels_path, checkpoint_dir, apply, once
-    )
-
-
-def stream_maintain_overlap_index(
-    doc_stream: DataFrame,
-    index_path: str,
-    pairs_path: str,
-    checkpoint_dir: str,
-    id_col: str = "id",
-    text_col: str = "text",
-    n: int = 3,
-    window: int = 4,
-    min_shared: int = 2,
-    max_df: int | None = 50,
-    n_buckets: int = 16,
-    once: bool = True,
-):
-    """Continuous cross-corpus contamination checking: every
-    micro-batch of documents is checked against the persisted
-    fingerprint index and folded in via `maintain_overlap_index` (the
-    LSM-shaped O(batch)-per-batch index), with each batch's
-    contamination pairs appended under
-    `pairs_path/batch=<content-hash>/` — the streaming twin of
-    stream_maintain_components applied to the "check each new crawl
-    against the corpus" problem (q80's operator driven by
-    readStream).
-
-    Idempotency is two-layer: the scaffold's applied-batch markers
-    skip re-applies after restarts, and BOTH effects are replay-safe
-    on their own — maintain_overlap_index returns the original pairs
-    on a replayed batch (content-addressed append log + batch-id
-    anti-join, test-pinned), and the pairs are a `state.publish` entry
-    named by an order-independent content hash of the batch (crash
-    windows in mel_tnnt_spark/state.py), so a crash between the index
-    fold-in and the marker write re-creates the identical pairs
-    directory rather than duplicating it. Stream==batch equality is
-    pinned in tests/test_streaming.py."""
-    from mel_tnnt_spark.operators.dedup import maintain_overlap_index
-
-    def apply(batch_df: DataFrame) -> None:
-        from mel_tnnt_spark.operators.dedup import content_tag
-
-        spark = batch_df.sparkSession
-        batch_df = batch_df.dropna(subset=[id_col])
-        tag = content_tag(
-            batch_df, F.col(id_col), F.coalesce(F.col(text_col), F.lit(""))
-        )
-        pairs = maintain_overlap_index(
-            spark, index_path, batch_df, id_col, text_col,
-            n=n, window=window, min_shared=min_shared, max_df=max_df,
-            n_buckets=n_buckets,
-        )
-        publish(pairs, pairs_path, f"batch={tag}")
-
-    return _replay_protected_stream(
-        doc_stream, index_path, checkpoint_dir, apply, once
-    )
-
-
-def stream_excise_spans(
-    doc_stream: DataFrame,
-    index_path: str,
-    out_path: str,
-    checkpoint_dir: str,
-    id_col: str = "id",
-    text_col: str = "text",
-    k: int = 5,
-    n_buckets: int = 16,
-    once: bool = True,
-):
-    """Continuous exact duplicated-span excision: every micro-batch of
-    documents is rewritten against the persisted gram index via
-    maintain_span_index (previously seen k-token runs excised, batch's
-    grams folded in), with the rewritten docs appended under
-    `out_path/batch=<content-hash>/` — the streaming twin of q83's
-    batch-global operator, same state layout as the q84 contamination
-    stream. Idempotency is two-layer, exactly like
-    stream_maintain_overlap_index: applied-batch markers skip
-    re-applies, and both effects are replay-safe alone —
-    maintain_span_index returns the original rewrite on a replayed
-    batch (the index stores (gram, batch-min doc id) rows and the
-    probe anti-joins the batch's own ids out, so the batch's earlier
-    fold-in is invisible to its own replay; the fold-in itself is a
-    content-addressed no-op), and the output directory is a
-    content-addressed `state.publish` entry (crash windows in
-    mel_tnnt_spark/state.py).
-    Stream == chained-batch equality is pinned in
-    tests/test_streaming.py."""
-    from mel_tnnt_spark.operators.dedup import content_tag, maintain_span_index
-
-    def apply(batch_df: DataFrame) -> None:
-        batch_df = batch_df.dropna(subset=[id_col])
-        tag = content_tag(
-            batch_df, F.col(id_col), F.coalesce(F.col(text_col), F.lit(""))
-        )
-        out = maintain_span_index(
-            batch_df.sparkSession, index_path, batch_df, id_col, text_col,
-            k=k, n_buckets=n_buckets,
-        )
-        publish(out, out_path, f"batch={tag}")
-
-    return _replay_protected_stream(
-        doc_stream, index_path, checkpoint_dir, apply, once
-    )
-
-
-def read_overlap_pair_log(spark: SparkSession, pairs_path: str) -> DataFrame:
-    """All contamination pairs the stream has emitted (union of the
-    per-batch directories), with the batch tag attached."""
-    return (
-        spark.read.option("basePath", pairs_path)
-        .parquet(f"{pairs_path}/batch=*")
-    )
-
-
-def stream_pack_layout(
-    doc_stream: DataFrame,
-    state_path: str,
-    out_path: str,
-    checkpoint_dir: str,
-    id_col: str = "id",
-    text_col: str = "text",
-    capacity: int = 512,
-    once: bool = True,
-):
-    """Continuous sequence-packing layout: every micro-batch of
-    documents is appended to the concatenated-corpus layout via
-    maintain_pack_layout (persisted state = the corpus token total +
-    the applied-batch ledger, O(batch) per batch), with each batch's
-    layout rows landing under `out_path/batch=<content-hash>/` — the
-    streaming leg of the q87 dataloader layout, same two-layer
-    idempotency as stream_excise_spans: applied-batch markers skip
-    re-applies after restarts, and both effects are replay-safe alone
-    (maintain_pack_layout reuses a replayed batch's ORIGINAL base
-    offset without advancing the total; the output directory is a
-    content-addressed `state.publish` entry, crash windows in
-    mel_tnnt_spark/state.py). Stream == chained-batch
-    equality is pinned in tests/test_streaming.py."""
-    from mel_tnnt_spark.operators.dedup import content_tag
-    from mel_tnnt_spark.operators.packing import maintain_pack_layout
-
-    def apply(batch_df: DataFrame) -> None:
-        batch_df = batch_df.dropna(subset=[id_col])
-        tag = content_tag(
-            batch_df,
-            F.col(id_col),
-            F.coalesce(F.col(text_col).cast("string"), F.lit("")),
-        )
-        out = maintain_pack_layout(
-            batch_df.sparkSession, state_path, batch_df, id_col, text_col,
-            capacity=capacity,
-        )
-        publish(out, out_path, f"batch={tag}")
-
-    return _replay_protected_stream(
-        doc_stream, state_path, checkpoint_dir, apply, once
-    )
-
-
-def stream_domain_caps(
-    doc_stream: DataFrame,
-    state_path: str,
-    out_path: str,
-    checkpoint_dir: str,
-    group_col: str = "source",
-    id_col: str = "id",
-    cap: int = 10,
-    once: bool = True,
-):
-    """Continuous per-host frequency capping: every micro-batch of
-    arriving documents gets an accept/drop decision against the
-    persisted accepted-log via maintain_domain_caps (state bounded at
-    n_groups*cap rows BY THE POLICY regardless of crawl volume), with
-    each batch's decisions landing under `out_path/batch=<hash>/`.
-    Same two-layer idempotency as the other maintained streams:
-    applied-batch markers skip re-applies, and both effects are
-    replay-safe alone (the operator excludes its own content-addressed
-    log dir when computing prior counts; the decision write is a
-    content-addressed `state.publish` entry, crash windows in
-    mel_tnnt_spark/state.py)."""
-    from mel_tnnt_spark.operators.curation import maintain_domain_caps
-    from mel_tnnt_spark.operators.dedup import content_tag
-
-    def apply(batch_df: DataFrame) -> None:
-        batch_df = batch_df.dropna(subset=[id_col])
-        tag = content_tag(
-            batch_df, F.col(id_col), F.coalesce(F.col(group_col), F.lit(""))
-        )
-        out = maintain_domain_caps(
-            batch_df.sparkSession, state_path, batch_df, group_col, id_col,
-            cap=cap,
-        )
-        publish(out, out_path, f"batch={tag}")
-
-    return _replay_protected_stream(
-        doc_stream, state_path, checkpoint_dir, apply, once
-    )
-
-
-def stream_maintain_closure(
-    edge_stream: DataFrame,
-    state_path: str,
-    checkpoint_dir: str,
-    src_col: str = "child",
-    dst_col: str = "parent",
-    max_depth: int = 1024,
-    once: bool = True,
-):
-    """Streaming twin of `maintain_transitive_closure` (q106): each
-    micro-batch of containment edges folds into the persisted
-    (node, ancestor, depth) closure, per-batch work proportional to
-    the delta closure. Two replay layers, like the other maintained
-    tables: the scaffold's applied-batch markers skip re-applies, and
-    the fold itself is idempotent (a replayed batch's paths already
-    sit in the closure, so the delta loop starts empty and rewrites an
-    identical state version). Stream == scratch is pinned in
-    tests/test_streaming.py."""
-    from mel_tnnt_spark.operators.graph_query import maintain_transitive_closure
-
-    def apply(batch_df: DataFrame) -> None:
-        maintain_transitive_closure(
-            batch_df.sparkSession, state_path, batch_df,
-            src_col, dst_col, max_depth=max_depth,
-        )
-
-    return _replay_protected_stream(
-        edge_stream, state_path, checkpoint_dir, apply, once
-    )
-
-
-def stream_maintain_weighted_sample(
-    doc_stream: DataFrame,
-    state_path: str,
-    checkpoint_dir: str,
-    id_col: str = "id",
-    weight_col: str = "w",
-    k: int = 100,
-    once: bool = True,
-):
-    """Streaming twin of `maintain_weighted_sample` (q99): each
-    micro-batch folds into the persisted k-row A-ES reservoir. The
-    A-ES key is derived (id, weight)-only, so the reservoir is a
-    mergeable summary and stream == scratch holds with no
-    arrival-order caveat; replay layers are the scaffold markers plus
-    the fold's own set-union idempotency. Stream == scratch pinned in
-    tests/test_graph_query.py."""
-    from mel_tnnt_spark.operators.sampling import maintain_weighted_sample
-
-    def apply(batch_df: DataFrame) -> None:
-        maintain_weighted_sample(
-            batch_df.sparkSession, state_path, batch_df,
-            id_col, weight_col, k=k,
-        )
-
-    return _replay_protected_stream(
-        doc_stream, state_path, checkpoint_dir, apply, once
     )

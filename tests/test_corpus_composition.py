@@ -232,8 +232,8 @@ def test_stream_pack_layout_equals_scratch_and_restart_noop(spark, tmp_path):
     trigger), and a restart over the same source re-applies nothing."""
     import os
 
-    from mel_tnnt_spark.operators.packing import pack_sequences
-    from mel_tnnt_spark.streaming.incremental import stream_pack_layout
+    from mel_tnnt_spark.operators.packing import maintain_pack_layout, pack_sequences
+    from mel_tnnt_spark.streaming.incremental import read_stream_output, stream_maintain
 
     batches = [
         [(1, "a b c d e"), (2, "f g")],
@@ -254,16 +254,18 @@ def test_stream_pack_layout_equals_scratch_and_restart_noop(spark, tmp_path):
             .option("maxFilesPerTrigger", "1")
             .parquet(src)
         )
-        q = stream_pack_layout(
-            stream, state, out_path, str(tmp_path / "pckpt"), capacity=4
-        )
+        q = stream_maintain(
+            stream,
+            lambda df, _txn: maintain_pack_layout(
+                df.sparkSession, state, df, "id", "text", capacity=4
+            ),
+            str(tmp_path / "pckpt"),
+            out_path,
+        ).trigger(availableNow=True).start()
         q.awaitTermination(180)
 
     go()
-    got = sorted(
-        tuple(r) for r in spark.read.option("basePath", out_path)
-        .parquet(f"{out_path}/batch=*").drop("batch").collect()
-    )
+    got = sorted(tuple(r) for r in read_stream_output(spark, out_path).collect())
     scratch = sorted(tuple(r) for r in pack_sequences(
         spark.createDataFrame([r for bb in batches for r in bb], "id bigint, text string"),
         "id", "text", capacity=4,
@@ -274,7 +276,7 @@ def test_stream_pack_layout_equals_scratch_and_restart_noop(spark, tmp_path):
         d: sorted(os.listdir(os.path.join(out_path, d)))
         for d in os.listdir(out_path)
     }
-    go()  # restart: markers + content-addressed dirs -> no-op
+    go()  # restart: checkpoint -> no-op
     after = {
         d: sorted(os.listdir(os.path.join(out_path, d)))
         for d in os.listdir(out_path)
@@ -426,8 +428,8 @@ def test_maintain_domain_caps_chained_replay_and_bounded_state(spark, tmp_path):
 def test_stream_domain_caps_equals_scratch_and_restart_noop(spark, tmp_path):
     import os
 
-    from mel_tnnt_spark.operators.curation import cap_per_group
-    from mel_tnnt_spark.streaming.incremental import stream_domain_caps
+    from mel_tnnt_spark.operators.curation import cap_per_group, maintain_domain_caps
+    from mel_tnnt_spark.streaming.incremental import read_stream_output, stream_maintain
 
     batches = [
         [(1, "web"), (2, "web"), (3, "wiki")],
@@ -448,17 +450,20 @@ def test_stream_domain_caps_equals_scratch_and_restart_noop(spark, tmp_path):
             .option("maxFilesPerTrigger", "1")
             .parquet(src)
         )
-        q = stream_domain_caps(
-            stream, state, out_path, str(tmp_path / "capckpt"),
-            group_col="source", cap=2,
-        )
+        q = stream_maintain(
+            stream,
+            lambda df, _txn: maintain_domain_caps(
+                df.sparkSession, state, df, "source", "id", cap=2
+            ),
+            str(tmp_path / "capckpt"),
+            out_path,
+        ).trigger(availableNow=True).start()
         q.awaitTermination(180)
 
     go()
     got = {
         r["id"]: r["accepted"]
-        for r in spark.read.option("basePath", out_path)
-        .parquet(f"{out_path}/batch=*").drop("batch").collect()
+        for r in read_stream_output(spark, out_path).collect()
     }
     union = spark.createDataFrame(
         [r for bb in batches for r in bb], "id bigint, source string"

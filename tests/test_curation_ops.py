@@ -1422,7 +1422,7 @@ def test_maintain_span_index_chained_equals_scratch(spark, tmp_path):
 
 
 def test_maintain_span_index_replay_returns_original_rewrite(spark, tmp_path):
-    """A replayed batch (crash before the stream marker) must return
+    """A replayed batch (crash before the stream checkpoint) must return
     the ORIGINAL rewrite — the index already holds the batch's own
     grams, and the (fingerprint, id) anti-join keeps them invisible
     to the replay."""

@@ -447,7 +447,8 @@ def test_deterministic_walks_partitioning_invariant(spark):
 def test_stream_maintain_closure_equals_scratch_and_restart_noop(spark, tmp_path):
     import os
 
-    from mel_tnnt_spark.streaming.incremental import stream_maintain_closure
+    from mel_tnnt_spark.operators.graph_query import maintain_transitive_closure
+    from mel_tnnt_spark.streaming.incremental import stream_maintain
 
     edge_list = [(i, (i - 1) // 3) for i in range(1, 40)]
     batches = [edge_list[:13], edge_list[13:26], edge_list[26:]]
@@ -464,9 +465,13 @@ def test_stream_maintain_closure_equals_scratch_and_restart_noop(spark, tmp_path
             .option("maxFilesPerTrigger", "1")
             .parquet(src)
         )
-        q = stream_maintain_closure(
-            stream, state, str(tmp_path / "closureckpt"), max_depth=64
-        )
+        q = stream_maintain(
+            stream,
+            lambda df, _txn: maintain_transitive_closure(
+                df.sparkSession, state, df, "child", "parent", max_depth=64
+            ),
+            str(tmp_path / "closureckpt"),
+        ).trigger(availableNow=True).start()
         q.awaitTermination(180)
 
     go()
@@ -482,8 +487,8 @@ def test_stream_maintain_closure_equals_scratch_and_restart_noop(spark, tmp_path
         for r in transitive_closure(full, "child", "parent").collect()
     }
     assert got == scratch
-    # restart over the same source: markers skip every batch — state
-    # layout unchanged
+    # restart over the same source: the checkpoint skips every batch —
+    # state layout unchanged
     before = sorted(os.listdir(state))
     go()
     assert sorted(os.listdir(state)) == before
@@ -740,10 +745,8 @@ def test_bgp_partition_pruning_on_pred_partitioned_layout(spark, tmp_path):
 def test_stream_weighted_sample_equals_scratch(spark, tmp_path):
     import os
 
-    from mel_tnnt_spark.operators.sampling import weighted_sample
-    from mel_tnnt_spark.streaming.incremental import (
-        stream_maintain_weighted_sample,
-    )
+    from mel_tnnt_spark.operators.sampling import maintain_weighted_sample, weighted_sample
+    from mel_tnnt_spark.streaming.incremental import stream_maintain
 
     rows = [(i, float((i * 13) % 9 + 1)) for i in range(300)]
     batches = [rows[:100], rows[100:220], rows[220:]]
@@ -760,10 +763,13 @@ def test_stream_weighted_sample_equals_scratch(spark, tmp_path):
             .option("maxFilesPerTrigger", "1")
             .parquet(src)
         )
-        q = stream_maintain_weighted_sample(
-            stream, state, str(tmp_path / "wckpt"), id_col="id",
-            weight_col="w", k=40,
-        )
+        q = stream_maintain(
+            stream,
+            lambda df, _txn: maintain_weighted_sample(
+                df.sparkSession, state, df, "id", "w", k=40
+            ),
+            str(tmp_path / "wckpt"),
+        ).trigger(availableNow=True).start()
         q.awaitTermination(180)
 
     go()

@@ -268,3 +268,49 @@ def test_orphans_of_killed_first_merge_read_as_no_table(spark, tmp_path, monkeyp
     maintain_rollup(spark, t, half)
     assert current_snapshot(t) == 0
     assert _rollup_rows(read_merged(spark, t)) == _rollup_rows(time_rollup(half))
+
+
+def test_txn_version_commits_with_the_data_and_replays_are_noops(spark, tmp_path):
+    """`txn=(app_id, version)` is recorded in the manifest in the same
+    commit as the data: a merge at or below the recorded version of its
+    app id is a no-op returning the current snapshot id and running no
+    Spark job, another app id applies, and a merge without txn or an
+    expiry keeps the record."""
+    t = str(tmp_path / "txn")
+    sc = spark.sparkContext
+
+    def merge(rows, txn=None):
+        ch = spark.createDataFrame(rows, "id long, v string")
+        return merge_upsert(spark, t, ch, keys=("id",), n_buckets=4, txn=txn)
+
+    def jobs_of(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc._jsc.clearJobGroup()
+        return out, sc.statusTracker().getJobIdsForGroup(group)
+
+    s0 = merge([(1, "a")], txn=("app", 0))
+    s1, applied_jobs = jobs_of("txn-applied", lambda: merge([(2, "b")], txn=("app", 1)))
+    assert (s0, s1) == (0, 1) and applied_jobs  # the check below can see jobs
+
+    # the same (app, v) twice: one snapshot, same id, zero jobs
+    replayed, replay_jobs = jobs_of("txn-replay", lambda: merge([(2, "B")], txn=("app", 1)))
+    assert replayed == s1 and replay_jobs == []
+    # an older version after a newer one: no-op
+    assert merge([(1, "A")], txn=("app", 0)) == s1
+    assert current_snapshot(t) == s1 and len(snapshots(t)) == 2
+    assert _state(spark, t) == {(1, "a"), (2, "b")}
+
+    # another app id at version 0 applies
+    assert merge([(3, "c")], txn=("other", 0)) == 2
+    # a merge without txn applies and keeps the record
+    assert merge([(4, "d")]) == 3
+    assert snapshots(t)[-1]["txn"] == {"app": 1, "other": 0}
+
+    expire_snapshots(t, keep_last=1)
+    assert [m["snapshot_id"] for m in snapshots(t)] == [3]
+    assert snapshots(t)[-1]["txn"] == {"app": 1, "other": 0}
+    assert merge([(5, "e")], txn=("app", 1)) == 3
+    assert _state(spark, t) == {(1, "a"), (2, "b"), (3, "c"), (4, "d")}

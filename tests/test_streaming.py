@@ -26,7 +26,7 @@ def test_incremental_stream(spark, code_files, tmpdirs):
     ckpt = f"{tmpdirs}/ckpt"
     code_files.limit(40).write.mode("overwrite").parquet(src_dir)
 
-    q = run_incremental(spark, src_dir, out_dir, ckpt, once=True)
+    q = run_incremental(spark, src_dir, out_dir, ckpt)
     q.awaitTermination(120)
     got1 = spark.read.parquet(out_dir)
     n1 = got1.count()
@@ -34,13 +34,13 @@ def test_incremental_stream(spark, code_files, tmpdirs):
     assert set(got1.columns) == {"subj", "pred", "obj", "batch_id"}
 
     # restart with no new data: no duplicate triples appended
-    q2 = run_incremental(spark, src_dir, out_dir, ckpt, once=True)
+    q2 = run_incremental(spark, src_dir, out_dir, ckpt)
     q2.awaitTermination(120)
     assert spark.read.parquet(out_dir).count() == n1
 
     # append new files -> only the delta is processed
     code_files.limit(60).subtract(code_files.limit(40)).write.mode("append").parquet(src_dir)
-    q3 = run_incremental(spark, src_dir, out_dir, ckpt, once=True)
+    q3 = run_incremental(spark, src_dir, out_dir, ckpt)
     q3.awaitTermination(120)
     assert spark.read.parquet(out_dir).count() > n1
 
@@ -207,68 +207,118 @@ def test_sessionize_out_of_order_extends_start(spark, tmpdirs):
     assert got == {1: (t(10, 2), t(10, 10), 2)}
 
 
+def _rollup_source(spark, tmpdirs):
+    """The sf0.001 events split into three files, so three micro-batches
+    (maxFilesPerTrigger=1)."""
+    from tests.conftest import SF_DIR
+
+    ev = spark.read.parquet(f"{SF_DIR}/events.parquet")
+    src = f"{tmpdirs}/evsrc"
+    for i in range(3):
+        ev.where(F.col("event_id") % 3 == i).coalesce(1).write.mode("append").parquet(src)
+    return ev, src
+
+
+def _run_rollup_stream(spark, ev, src, rollup, ckpt):
+    from mel_tnnt_spark.operators.rollup import maintain_rollup
+    from mel_tnnt_spark.streaming.incremental import stream_maintain
+
+    stream = spark.readStream.schema(ev.schema).option("maxFilesPerTrigger", "1").parquet(src)
+    q = stream_maintain(
+        stream,
+        lambda df, txn: maintain_rollup(df.sparkSession, rollup, df, txn=txn),
+        ckpt,
+    ).trigger(availableNow=True).start()
+    q.awaitTermination(180)
+    return q
+
+
+def _rollup_rows(df):
+    return {
+        (r["bucket_start"], r["event_type"]): (r["n_events"], round(r["total_value"], 6))
+        for r in df.collect()
+    }
+
+
+def _recorded_txn(table):
+    from mel_tnnt_spark.operators.merge_sink import snapshots
+
+    ((app_id, version),) = snapshots(table)[-1]["txn"].items()
+    return app_id, version
+
+
+def _fail_second_expire(monkeypatch):
+    """Make merge_sink.expire_snapshots raise on its 2nd call: the
+    maintained operators call it right after their merge's pointer
+    swap, so batch 1 is committed and its micro-batch then fails."""
+    from mel_tnnt_spark.operators import merge_sink
+
+    real, calls = merge_sink.expire_snapshots, []
+
+    def flaky(*args, **kwargs):
+        calls.append(1)
+        if len(calls) == 2:
+            raise RuntimeError("killed after the pointer swap")
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(merge_sink, "expire_snapshots", flaky)
+
+
 def test_stream_maintain_rollup_equals_scratch(spark, tmpdirs):
     """Continuous aggregate from a stream: micro-batch maintenance
     through the O(touched) MERGE sink converges to the from-scratch
     rollup of the full history, and a restart (availableNow re-run over
-    the same source) re-merges NOTHING (batch markers skip re-delivered
-    batches — the merge is additive, so this is what keeps it
-    exactly-once)."""
-    import os
+    the same source) re-merges NOTHING (the checkpoint skips delivered
+    batches; the merge's txn record skips a re-delivered one — the
+    merge is additive, so this is what keeps it exactly-once)."""
+    from mel_tnnt_spark.operators.merge_sink import read_merged
+    from mel_tnnt_spark.operators.rollup import time_rollup
+
+    ev, src = _rollup_source(spark, tmpdirs)
+    rollup = f"{tmpdirs}/rollup"
+    ckpt = f"{tmpdirs}/ckpt"
+
+    q = _run_rollup_stream(spark, ev, src, rollup, ckpt)
+    want = _rollup_rows(time_rollup(ev))
+    assert _rollup_rows(read_merged(spark, rollup)) == want
+
+    app_id, version = _recorded_txn(rollup)
+    assert app_id == q.id
+    assert version >= 1  # really ran as multiple micro-batches
+
+    # restart over the same source: checkpoint + txn record -> no change
+    _run_rollup_stream(spark, ev, src, rollup, ckpt)
+    assert _rollup_rows(read_merged(spark, rollup)) == want
+
+
+def test_stream_maintain_rollup_kill_after_swap_replays_once(spark, tmpdirs, monkeypatch):
+    """A micro-batch killed after its merge committed is re-run by
+    Structured Streaming with the same batch id on restart; the txn
+    the merge recorded in the same commit makes that replay a no-op,
+    so the additive rollup equals the from-scratch one (no batch
+    counted twice)."""
+    from pyspark.errors import StreamingQueryException
 
     from mel_tnnt_spark.operators.merge_sink import read_merged
     from mel_tnnt_spark.operators.rollup import time_rollup
-    from mel_tnnt_spark.streaming.incremental import stream_maintain_rollup
 
-    ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    src = f"{tmpdirs}/evsrc"
-    # three files -> three micro-batches (maxFilesPerTrigger=1)
-    for i in range(3):
-        ev.where(F.col("event_id") % 3 == i).coalesce(1).write.mode("append").parquet(src)
-
+    ev, src = _rollup_source(spark, tmpdirs)
     rollup = f"{tmpdirs}/rollup"
+    ckpt = f"{tmpdirs}/ckpt"
 
-    def run():
-        stream = (
-            spark.readStream.schema(ev.schema).option("maxFilesPerTrigger", "1").parquet(src)
-        )
-        q = stream_maintain_rollup(stream, rollup, f"{tmpdirs}/ckpt")
-        q.awaitTermination(180)
+    with monkeypatch.context() as m:
+        _fail_second_expire(m)
+        with pytest.raises(StreamingQueryException):
+            _run_rollup_stream(spark, ev, src, rollup, ckpt)
+    assert _recorded_txn(rollup)[1] == 1  # batch 1 committed, then killed
 
-    run()
-    got = {
-        (r["bucket_start"], r["event_type"]): (r["n_events"], round(r["total_value"], 6))
-        for r in read_merged(spark, rollup).collect()
-    }
-    want = {
-        (r["bucket_start"], r["event_type"]): (r["n_events"], round(r["total_value"], 6))
-        for r in time_rollup(ev).collect()
-    }
-    assert got == want
-
-    markers = set(os.listdir(rollup + "__applied"))
-    assert len(markers) >= 2  # really ran as multiple micro-batches
-
-    # restart over the same source: checkpoint + markers -> no change
-    run()
-    got2 = {
-        (r["bucket_start"], r["event_type"]): (r["n_events"], round(r["total_value"], 6))
-        for r in read_merged(spark, rollup).collect()
-    }
-    assert got2 == want
+    q = _run_rollup_stream(spark, ev, src, rollup, ckpt)
+    assert _rollup_rows(read_merged(spark, rollup)) == _rollup_rows(time_rollup(ev))
+    assert _recorded_txn(rollup) == (q.id, 2)
 
 
-def test_stream_maintain_components_equals_scratch(spark, tmpdirs):
-    """Continuous identity maintenance: micro-batched edge arrivals
-    folded through incremental_components(changed_only) + the MERGE
-    sink converge to from-scratch CC over the full edge history, and a
-    restart over the same source re-merges nothing."""
-    import os
+def _edge_batches():
     import random
-
-    from mel_tnnt_spark.operators.components import connected_components
-    from mel_tnnt_spark.operators.merge_sink import read_merged
-    from mel_tnnt_spark.streaming.incremental import stream_maintain_components
 
     rng = random.Random(31)
     batches = []
@@ -276,64 +326,168 @@ def test_stream_maintain_components_equals_scratch(spark, tmpdirs):
         edges = [(rng.randint(0, 60), rng.randint(0, 60)) for _ in range(20)]
         edges.append((100 + b, rng.randint(0, 60)))  # a new node per batch
         batches.append(edges)
+    return batches
 
-    src = f"{tmpdirs}/edgesrc"
+
+def _run_components_stream(spark, src, labels_path, ckpt, max_files=None):
+    from mel_tnnt_spark.operators.components import maintain_components
+    from mel_tnnt_spark.streaming.incremental import stream_maintain
+
+    reader = spark.readStream.schema("src bigint, dst bigint")
+    if max_files is not None:
+        reader = reader.option("maxFilesPerTrigger", str(max_files))
+    q = stream_maintain(
+        reader.parquet(src),
+        lambda df, txn: maintain_components(df.sparkSession, labels_path, df, txn=txn),
+        ckpt,
+    ).trigger(availableNow=True).start()
+    q.awaitTermination(180)
+    return q
+
+
+def _write_edge_source(spark, batches, src):
     for edges in batches:
         spark.createDataFrame(edges, "src bigint, dst bigint").coalesce(1).write.mode(
             "append"
         ).parquet(src)
 
-    labels_path = f"{tmpdirs}/labels"
 
-    def run():
-        stream = (
-            spark.readStream.schema("src bigint, dst bigint")
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-        )
-        q = stream_maintain_components(stream, labels_path, f"{tmpdirs}/cc_ckpt")
-        q.awaitTermination(180)
+def _scratch_components(spark, batches):
+    from mel_tnnt_spark.operators.components import connected_components
 
-    run()
     all_edges = spark.createDataFrame(
         [e for b in batches for e in b], "src bigint, dst bigint"
     )
-    want = sorted(map(tuple, connected_components(all_edges).collect()))
+    return sorted(map(tuple, connected_components(all_edges).collect()))
+
+
+def test_stream_maintain_components_equals_scratch(spark, tmpdirs):
+    """Continuous identity maintenance: micro-batched edge arrivals
+    folded through incremental_components(changed_only) + the MERGE
+    sink converge to from-scratch CC over the full edge history, and a
+    restart over the same source re-merges nothing."""
+    from mel_tnnt_spark.operators.merge_sink import read_merged
+
+    batches = _edge_batches()
+    src = f"{tmpdirs}/edgesrc"
+    _write_edge_source(spark, batches, src)
+    labels_path = f"{tmpdirs}/labels"
+    ckpt = f"{tmpdirs}/cc_ckpt"
+
+    q = _run_components_stream(spark, src, labels_path, ckpt, max_files=1)
+    want = _scratch_components(spark, batches)
     got = sorted(map(tuple, read_merged(spark, labels_path).collect()))
     assert got == want
 
-    assert len(os.listdir(labels_path + "__applied")) >= 2
+    app_id, version = _recorded_txn(labels_path)
+    assert app_id == q.id and version >= 1
 
-    run()  # restart: markers + checkpoint -> no re-merge
+    _run_components_stream(spark, src, labels_path, ckpt, max_files=1)  # restart
     got2 = sorted(map(tuple, read_merged(spark, labels_path).collect()))
     assert got2 == want
+
+
+def test_stream_maintain_components_kill_after_swap(spark, tmpdirs, monkeypatch):
+    """The component-label stream killed after batch 1's commit and
+    restarted on the same checkpoint ends at from-scratch CC."""
+    from pyspark.errors import StreamingQueryException
+
+    from mel_tnnt_spark.operators.merge_sink import read_merged
+
+    batches = _edge_batches()
+    src = f"{tmpdirs}/edgesrc"
+    _write_edge_source(spark, batches, src)
+    labels_path = f"{tmpdirs}/labels"
+    ckpt = f"{tmpdirs}/cc_ckpt"
+
+    with monkeypatch.context() as m:
+        _fail_second_expire(m)
+        with pytest.raises(StreamingQueryException):
+            _run_components_stream(spark, src, labels_path, ckpt, max_files=1)
+    assert _recorded_txn(labels_path)[1] == 1
+
+    q = _run_components_stream(spark, src, labels_path, ckpt, max_files=1)
+    got = sorted(map(tuple, read_merged(spark, labels_path).collect()))
+    assert got == _scratch_components(spark, batches)
+    assert _recorded_txn(labels_path) == (q.id, 2)
 
 
 def test_stream_maintain_components_drops_null_endpoints(spark, tmpdirs):
     """A null src/dst row in an edge micro-batch must be dropped, not
     poison the union-find and wedge the stream (round-3 review)."""
     from mel_tnnt_spark.operators.merge_sink import read_merged
-    from mel_tnnt_spark.streaming.incremental import stream_maintain_components
 
     src = f"{tmpdirs}/nulledges"
-    spark.createDataFrame(
-        [(1, 2), (None, 5), (3, None)], "src bigint, dst bigint"
-    ).coalesce(1).write.mode("append").parquet(src)
+    _write_edge_source(spark, [[(1, 2), (None, 5), (3, None)]], src)
     labels_path = f"{tmpdirs}/nulllabels"
-    stream = spark.readStream.schema("src bigint, dst bigint").parquet(src)
-    q = stream_maintain_components(stream, labels_path, f"{tmpdirs}/nullckpt")
-    q.awaitTermination(120)
+    _run_components_stream(spark, src, labels_path, f"{tmpdirs}/nullckpt")
     got = sorted(map(tuple, read_merged(spark, labels_path).collect()))
     assert got == [(1, 1), (2, 1)]
 
 
+@pytest.mark.parametrize(
+    "op", ["overlap_index", "span_index", "pack_layout", "domain_caps", "components"]
+)
+def test_maintained_operators_drop_null_keys(spark, tmpdirs, op):
+    """Outside input can carry a null key. Each maintained operator
+    drops it itself, so a batch call and a stream call agree: every
+    batch with an extra null-key row gives the same result as without
+    it."""
+    from collections import Counter
+
+    from mel_tnnt_spark.operators.components import maintain_components
+    from mel_tnnt_spark.operators.curation import maintain_domain_caps
+    from mel_tnnt_spark.operators.dedup import maintain_overlap_index, maintain_span_index
+    from mel_tnnt_spark.operators.merge_sink import read_merged
+    from mel_tnnt_spark.operators.packing import maintain_pack_layout
+
+    para = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+    docs = "id bigint, text string"
+    doc_batches = [
+        [(1, para + " origin tail"), (2, "unrelated words about nothing")],
+        [(10, "copied opener " + para), (11, "more unrelated filler text")],
+    ]
+
+    def components(path, df):
+        maintain_components(spark, path, df)
+        return read_merged(spark, path)
+
+    schema, batches, null_row, run = {
+        "overlap_index": (docs, doc_batches, (None, para), lambda path, df: (
+            maintain_overlap_index(spark, path, df, min_shared=1, max_df=None))),
+        "span_index": (docs, doc_batches, (None, para), lambda path, df: (
+            maintain_span_index(spark, path, df, k=5))),
+        "pack_layout": (docs, doc_batches, (None, "x y z"), lambda path, df: (
+            maintain_pack_layout(spark, path, df, "id", "text", capacity=4))),
+        "domain_caps": (
+            "id bigint, source string",
+            [[(1, "web"), (2, "wiki")], [(3, "web"), (4, "web")]],
+            (None, "web"),
+            lambda path, df: maintain_domain_caps(spark, path, df, "source", "id", cap=2),
+        ),
+        "components": (
+            "src bigint, dst bigint", [[(1, 2), (3, 4)], [(2, 3), (5, 6)]], (None, 1),
+            components,
+        ),
+    }[op]
+
+    def results(name, extra):
+        path = f"{tmpdirs}/{name}"
+        return [
+            Counter(map(tuple, run(path, spark.createDataFrame(rows + extra, schema)).collect()))
+            for rows in batches
+        ]
+
+    assert results("plain", []) == results("with_null", [null_row])
+
+
 def test_stream_maintain_overlap_index_equals_scratch(spark, tmpdirs):
     """Continuous contamination checking: micro-batched document
-    arrivals through stream_maintain_overlap_index emit exactly the
+    arrivals through maintain_overlap_index emit exactly the
     cross-step pairs a from-scratch chained run produces, the
     persisted index converges to the same logical contents, and a
-    restart over the same source re-applies nothing (markers +
-    content-addressed pairs dirs)."""
+    restart over the same source re-applies nothing (the checkpoint;
+    a replayed batch republishes its own pairs entry)."""
     import os
 
     from mel_tnnt_spark.operators.dedup import (
@@ -341,10 +495,8 @@ def test_stream_maintain_overlap_index_equals_scratch(spark, tmpdirs):
         read_overlap_index,
         winnowing_fingerprints,
     )
-    from mel_tnnt_spark.streaming.incremental import (
-        read_overlap_pair_log,
-        stream_maintain_overlap_index,
-    )
+    from mel_tnnt_spark.operators.dedup import maintain_overlap_index
+    from mel_tnnt_spark.streaming.incremental import read_stream_output, stream_maintain
 
     para = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
     batches = [
@@ -367,10 +519,14 @@ def test_stream_maintain_overlap_index_equals_scratch(spark, tmpdirs):
             .option("maxFilesPerTrigger", "1")
             .parquet(src)
         )
-        q = stream_maintain_overlap_index(
-            stream, idx, pairs_path, f"{tmpdirs}/ov_ckpt",
-            min_shared=1, max_df=None,
-        )
+        q = stream_maintain(
+            stream,
+            lambda df, _txn: maintain_overlap_index(
+                df.sparkSession, idx, df, min_shared=1, max_df=None
+            ),
+            f"{tmpdirs}/ov_ckpt",
+            pairs_path,
+        ).trigger(availableNow=True).start()
         q.awaitTermination(180)
 
     run()
@@ -396,7 +552,7 @@ def test_stream_maintain_overlap_index_equals_scratch(spark, tmpdirs):
         seen += rows
     got = {
         (r["corpus_id"], r["batch_id"])
-        for r in read_overlap_pair_log(spark, pairs_path).collect()
+        for r in read_stream_output(spark, pairs_path).collect()
     }
     assert got == want
     assert (1, 10) in got and (1, 20) in got and (10, 20) in got
@@ -405,12 +561,12 @@ def test_stream_maintain_overlap_index_equals_scratch(spark, tmpdirs):
     n_pair_dirs = len(os.listdir(pairs_path))
     assert n_index > 0 and n_pair_dirs >= 2  # >=2 non-empty batches paired
 
-    run()  # restart: checkpoint + markers -> nothing re-applied
+    run()  # restart: checkpoint -> nothing re-applied
     assert read_overlap_index(spark, idx).count() == n_index
     assert len(os.listdir(pairs_path)) == n_pair_dirs
     got2 = {
         (r["corpus_id"], r["batch_id"])
-        for r in read_overlap_pair_log(spark, pairs_path).collect()
+        for r in read_stream_output(spark, pairs_path).collect()
     }
     assert got2 == want
 
@@ -423,8 +579,8 @@ def test_stream_excise_spans_equals_scratch_and_restart_noop(spark, tmpdirs):
     same source re-applies nothing."""
     import os
 
-    from mel_tnnt_spark.operators.dedup import excise_duplicate_spans
-    from mel_tnnt_spark.streaming.incremental import stream_excise_spans
+    from mel_tnnt_spark.operators.dedup import excise_duplicate_spans, maintain_span_index
+    from mel_tnnt_spark.streaming.incremental import read_stream_output, stream_maintain
 
     run = "one two three four five six seven"
     batches = [
@@ -448,16 +604,18 @@ def test_stream_excise_spans_equals_scratch_and_restart_noop(spark, tmpdirs):
             .option("maxFilesPerTrigger", "1")
             .parquet(src)
         )
-        q = stream_excise_spans(
-            stream, idx, out_path, f"{tmpdirs}/ex_ckpt", k=5
-        )
+        q = stream_maintain(
+            stream,
+            lambda df, _txn: maintain_span_index(df.sparkSession, idx, df, k=5),
+            f"{tmpdirs}/ex_ckpt",
+            out_path,
+        ).trigger(availableNow=True).start()
         q.awaitTermination(180)
 
     go()
     got = {
         r["id"]: (r["clean_text"], r["n_tokens_removed"])
-        for r in spark.read.option("basePath", out_path)
-        .parquet(f"{out_path}/batch=*").drop("batch").collect()
+        for r in read_stream_output(spark, out_path).collect()
     }
     scratch = {
         r["id"]: (r["clean_text"], r["n_tokens_removed"])
@@ -476,7 +634,7 @@ def test_stream_excise_spans_equals_scratch_and_restart_noop(spark, tmpdirs):
         d: sorted(os.listdir(os.path.join(out_path, d)))
         for d in os.listdir(out_path)
     }
-    go()  # restart: markers + content-addressed dirs -> no-op
+    go()  # restart: checkpoint -> no-op
     after = {
         d: sorted(os.listdir(os.path.join(out_path, d)))
         for d in os.listdir(out_path)
