@@ -160,7 +160,7 @@ def main() -> None:
     out = tempfile.mkdtemp(prefix="bench_triples_")
     t0 = time.time()
     res = run_pipeline(spark, src)
-    write_triples(res.triples, f"{out}/triples", n_buckets=8)
+    write_triples(res.triples, f"{out}/triples")
     kg_sec = time.time() - t0
     n_triples = spark.read.parquet(f"{out}/triples").count()
     shutil.rmtree(out, ignore_errors=True)

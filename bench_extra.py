@@ -64,7 +64,7 @@ def main() -> None:
             spark.sparkContext.setJobDescription("kg_pipeline timed")
             t0 = time.time()
             res = run_pipeline(spark, src)
-            write_triples(res.triples, f"{tmp}/triples", n_buckets=8)
+            write_triples(res.triples, f"{tmp}/triples")
             times.append(round(time.time() - t0, 3))
             shutil.rmtree(tmp, ignore_errors=True)
         out["kg_pipeline"] = times

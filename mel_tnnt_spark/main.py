@@ -7,7 +7,9 @@ Usage (cluster):
 
 On a real deployment `--source-table catalog.db.code_files` replaces
 the synthetic generator. Prints one JSON line of run metrics
-(triples/sec — the BASELINE.md throughput headline).
+(triples/sec — the BASELINE.md throughput headline), with `calls`
+saying where the time went: wall seconds and Spark jobs per call
+(pipeline, write, record, quarantine).
 """
 
 from __future__ import annotations
@@ -15,8 +17,40 @@ from __future__ import annotations
 import argparse
 import json
 import time
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
+
+
+class CallTimer:
+    """Runs each named call under its own Spark job group and records
+    its wall time. The job counts are read back from the status
+    tracker once the listener bus has caught up — no Spark action."""
+
+    def __init__(self, spark: SparkSession):
+        self.sc = spark.sparkContext
+        self.wall: dict[str, float] = {}
+
+    @contextmanager
+    def call(self, name: str):
+        self.sc.setJobGroup(f"kg-{name}", name)
+        t0 = time.perf_counter()
+        try:
+            yield
+        finally:
+            self.wall[name] = time.perf_counter() - t0
+            self.sc._jsc.clearJobGroup()
+
+    def report(self) -> dict[str, dict[str, float]]:
+        self.sc._jsc.sc().listenerBus().waitUntilEmpty()
+        tracker = self.sc.statusTracker()
+        return {
+            name: {
+                "wall_s": round(wall, 3),
+                "jobs": len(tracker.getJobIdsForGroup(f"kg-{name}")),
+            }
+            for name, wall in self.wall.items()
+        }
 
 
 def main() -> None:
@@ -45,8 +79,10 @@ def main() -> None:
     import os
 
     src = code_files_df(spark, n_rows=args.rows, seed=args.seed)
+    timer = CallTimer(spark)
     t0 = time.time()
-    res = run_pipeline(spark, src, lineage_path=args.lineage)
+    with timer.call("pipeline"):
+        res = run_pipeline(spark, src, lineage_path=args.lineage)
     # One consistent batch_id=/pred= layout for fresh AND resume runs
     # (mixing layouts in one dir breaks partition discovery). A fresh
     # run statically overwrites the whole table; resume runs write ONLY
@@ -89,22 +125,26 @@ def main() -> None:
             )
             next_idx = int(prev) + 1 if prev is not None else 0
         batch_id = f"batch-{next_idx}"
-    res.triples.persist()  # consumed by count + write + metrics
-    n_triples = res.triples.count()
-    if n_triples:
-        write_triples(
-            res.triples, args.output, batch_id=batch_id, full=not resuming
-        )
-    n_quarantined = res.quarantined.count()
+    with timer.call("write"):
+        res.triples.persist()  # consumed by count + write + metrics
+        n_triples = res.triples.count()
+        if n_triples:
+            write_triples(
+                res.triples, args.output, batch_id=batch_id, full=not resuming
+            )
+    with timer.call("quarantine"):
+        n_quarantined = res.quarantined.count()
     elapsed = time.time() - t0
     if args.lineage is not None:
-        record_done(res.metadata, args.lineage, "kg", batch_id)
-        # per-partition counters next to the lineage table: skew in the
-        # mention stage shows up as an outlier (partition_id, rows) row
-        if n_triples:
-            record_partition_metrics(
-                res.triples, args.lineage + "_pmetrics", "triples", batch_id
-            )
+        with timer.call("record"):
+            record_done(res.metadata, args.lineage, "kg", batch_id)
+            # per-partition counters next to the lineage table: skew in
+            # the mention stage shows up as an outlier (partition_id,
+            # rows) row
+            if n_triples:
+                record_partition_metrics(
+                    res.triples, args.lineage + "_pmetrics", "triples", batch_id
+                )
     res.triples.unpersist()
     print(
         json.dumps(
@@ -113,6 +153,7 @@ def main() -> None:
                 "quarantined": n_quarantined,
                 "elapsed_sec": round(elapsed, 2),
                 "triples_per_sec": round(n_triples / elapsed, 2) if elapsed else None,
+                "calls": timer.report(),
             }
         )
     )

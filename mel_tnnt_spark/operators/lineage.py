@@ -47,9 +47,13 @@ def enforce_sha_invariant(src: DataFrame) -> tuple[DataFrame, DataFrame]:
 
 
 def read_lineage(spark: SparkSession, lineage_path: str) -> DataFrame:
+    """The lineage table; empty when none is recorded yet. The empty
+    frame carries a false filter so the optimizer sees it is empty and
+    folds a resume anti-join against it away (an empty parallelized
+    frame alone still plans the join and runs a broadcast job for it)."""
     if os.path.exists(lineage_path):
         return spark.read.parquet(lineage_path)
-    return spark.createDataFrame([], LINEAGE_SCHEMA)
+    return spark.createDataFrame([], LINEAGE_SCHEMA).where(F.lit(False))
 
 
 def pending_only(docs: DataFrame, lineage: DataFrame, stage: str) -> DataFrame:

@@ -10,9 +10,11 @@ table, queryable with Spark SQL (FIXTURES.md §4 golden shape):
     (entity_id,  tnnt:label,    canonical surface)
     (doc_id,     tnnt:partOf,   repo)
 
-Write layout: partition by `pred` (few, large partitions) and bucket-ish
-hash distribution on subj via repartition — predicate-pruned scans for
-per-predicate queries at 100 TB.
+Write layout: partition by `pred` (few, large partitions) for
+predicate-pruned scans, and a rebalance on subj whose partition count
+AQE sizes from the shuffled bytes (coalescing small partitions and
+splitting skewed ones to the advisory size), so the file count follows
+the data rather than a constant.
 """
 
 from __future__ import annotations
@@ -28,15 +30,43 @@ def build_triples(
     linked: DataFrame,
     entities: DataFrame,
     ent_dim: DataFrame | None = None,
+    ent_triples: DataFrame | None = None,
 ) -> DataFrame:
-    """docs: (doc_id, repo) rows; linked: output of link_mentions;
-    entities: (entity_id, canonical_id) from canonical_entities;
-    ent_dim: optional pre-distincted (entity_id, canonical, linked_label)
-    dim (pass it to avoid recomputing the distinct).
+    """docs: one (doc_id, repo) row per doc; linked: output of
+    link_mentions; entities: (entity_id, canonical_id) from
+    canonical_entities; ent_dim: optional pre-distincted (entity_id,
+    canonical, linked_label) dim (pass it to avoid recomputing the
+    distinct); ent_triples: optional deduplicated rdf:type/tnnt:label
+    (subj, pred, obj) rows built on the driver, with `entities` then
+    covering every entity_id of `linked`.
 
-    Shuffle budget: exactly ONE wide shuffle over the mention table (the
-    doc-entity distinct); the entity-level triples derive from the tiny
-    dim and everything else is broadcast."""
+    Shuffle budget: with `ent_triples`, exactly ONE shuffle — the
+    distinct of the broadcast-joined (doc_id, canonical_id) pairs; the
+    entity rows are used as given and the partOf rows need no distinct
+    because `docs` is one row per doc. Without it, the mention branch
+    distincts (doc_id, entity_id) before the join and once more after
+    it, and the entity-level triples derive from the tiny dim."""
+
+    def mentions_of(doc_ent: DataFrame, canonical: DataFrame) -> DataFrame:
+        return (
+            doc_ent.join(F.broadcast(canonical), "entity_id")
+            .select(
+                F.col("doc_id").alias("subj"),
+                F.lit("tnnt:mentions").alias("pred"),
+                F.col("canonical_id").alias("obj"),
+            )
+            .distinct()  # several entity_ids may share a canonical_id
+        )
+
+    part_t = docs.select(
+        F.col("doc_id").alias("subj"),
+        F.lit("tnnt:partOf").alias("pred"),
+        F.col("repo").alias("obj"),
+    )
+    if ent_triples is not None:
+        mentions_t = mentions_of(linked.select("doc_id", "entity_id"), entities)
+        return mentions_t.unionByName(ent_triples).unionByName(part_t)
+
     pin = ent_dim is None
     if ent_dim is None:
         ent_dim = linked.select("entity_id", "canonical", "linked_label").distinct()
@@ -50,15 +80,9 @@ def build_triples(
         # the caller passes a pre-materialized (or driver-local) dim,
         # re-evaluating it per branch is free and the extra job isn't.
         ent_resolved = ent_resolved.localCheckpoint(eager=True)
-    doc_ent = linked.select("doc_id", "entity_id").distinct()  # the one big shuffle
-    mentions_t = (
-        doc_ent.join(F.broadcast(ent_resolved.select("entity_id", "canonical_id")), "entity_id")
-        .select(
-            F.col("doc_id").alias("subj"),
-            F.lit("tnnt:mentions").alias("pred"),
-            F.col("canonical_id").alias("obj"),
-        )
-        .distinct()  # cheap: several entity_ids may share a canonical_id
+    mentions_t = mentions_of(
+        linked.select("doc_id", "entity_id").distinct(),  # the big shuffle
+        ent_resolved.select("entity_id", "canonical_id"),
     )
     type_t = ent_resolved.select(
         F.col("canonical_id").alias("subj"),
@@ -70,22 +94,17 @@ def build_triples(
         F.lit("tnnt:label").alias("pred"),
         F.col("canonical").alias("obj"),
     ).distinct()
-    part_t = docs.select(
-        F.col("doc_id").alias("subj"),
-        F.lit("tnnt:partOf").alias("pred"),
-        F.col("repo").alias("obj"),
-    ).distinct()
     return mentions_t.unionByName(type_t).unionByName(label_t).unionByName(part_t)
 
 
 def write_triples(
     triples: DataFrame,
     path: str,
-    n_buckets: int = 32,
     batch_id: str | None = None,
     full: bool = False,
 ) -> None:
-    """Persist partitioned by pred, hash-distributed on subj.
+    """Persist partitioned by pred, rebalanced on subj into as many
+    partitions as AQE's advisory size gives for the data.
 
     Modes:
     - batch_id=None: one-shot full run — static overwrite, `pred=`
@@ -102,7 +121,7 @@ def write_triples(
       snapshot commit; on a real cluster this is
       `triples.writeTo("catalog.kg.triples").partitionedBy(bucket(256,'subj'),'pred')`.
     """
-    out = triples.repartition(n_buckets, "subj")
+    out = triples.hint("rebalance", "subj")
     if batch_id is None:
         out.write.mode("overwrite").partitionBy("pred").parquet(path)
         return

@@ -6,8 +6,9 @@ code/MEL/__init__.py:2719-2723, re-expressed as one lazy DataFrame DAG).
            -> linking (broadcast alias dict) -> connected components
            -> triples + summaries
 
-Every stage returns a DataFrame; nothing collects on the driver except
-the connected-components convergence counter.
+Every stage returns a DataFrame. Two tables are always pinned: the
+per-doc table and the distinct linked mention rows. The driver collects
+only the entity dim, bounded by the alias dictionary.
 """
 
 from __future__ import annotations
@@ -41,24 +42,33 @@ def run_pipeline(
     stage: str = "kg",
 ) -> PipelineResult:
     valid, quarantined = lineage.enforce_sha_invariant(src)
-    meta_raw = metadata.latest_commit_only(
-        metadata.filter_processable(metadata.with_general_metadata(valid))
-    )
+    proc = metadata.filter_processable(metadata.with_general_metadata(valid))
+    meta_raw = metadata.latest_commit_only(proc)
+    docs = metadata.latest_commit_keys(proc)
 
     if lineage_path is not None:
         lin = lineage.read_lineage(spark, lineage_path)
         meta_raw = lineage.pending_only(meta_raw, lin, stage)
+        docs = lineage.pending_only(docs, lin, stage)
 
-    # No checkpoint here: the text columns have exactly ONE consumer
-    # (the mention stage, whose output is checkpointed below), so MEL →
-    # mentions → linking fuses into a single pass over the source. The
-    # doc-dim / lineage consumers of `meta` re-derive only pruned
-    # columns — Catalyst drops the text-analysis UDFs for them.
-    # The exposed metadata frame carries the text-analysis columns
-    # lazily; the mention stage takes RAW content and fuses
-    # clean+preprocess into its own mapInPandas (one Arrow crossing of
-    # the content bytes instead of three — see detect_mentions).
-    meta = metadata.with_text_analysis(meta_raw).select(
+    # The per-doc table, derived once: the key-only dedup (no content
+    # byte shuffles) pinned as (doc_id, repo, content_sha). The partOf
+    # triples, the exposed metadata and `record_done` all read it, so
+    # none of them re-runs sha256, the dedup or the resume anti-join.
+    docs = docs.select("doc_id", "repo", "content_sha").localCheckpoint(eager=True)
+
+    # The exposed metadata frame is the pinned table left-joined to the
+    # lazy text-analysis columns. A consumer that reads only the pinned
+    # columns (record_done's `select(doc_id, content_sha).distinct()`)
+    # gets the join removed by the optimizer and never scans the
+    # source; one that reads text re-derives it from `meta_raw`. The
+    # mention stage takes RAW content and fuses clean+preprocess into
+    # its own mapInPandas (one Arrow crossing of the content bytes
+    # instead of three — see detect_mentions).
+    text = metadata.with_text_analysis(meta_raw).select(
+        "doc_id", "path", "commit", "lang", "preproc_text"
+    )
+    meta = docs.join(text, "doc_id", "left").select(
         "doc_id", "repo", "path", "commit", "lang", "content_sha", "preproc_text"
     )
 
@@ -70,29 +80,29 @@ def run_pipeline(
 
     aliases = linking.alias_dict_df(spark)
     linked = linking.link_mentions(canon, aliases)
-    # linking feeds CC + triples; materialize ONCE — but only the four
-    # columns those consumers read (doc_id, entity_id, canonical,
-    # linked_label). The full 10-column mention-level table is 7.2M
-    # rows at the 1M-doc bench (model/category/surface/offsets/score
-    # roughly double the materialized bytes) and checkpointing all of
-    # it paid block-manager churn for columns nobody downstream
-    # touches — guide §8's "materialize the small decision table"
-    # applied to the pipeline spine. The exposed `linked` frame keeps
-    # the full schema lazily; consumers of the slim columns hit the
-    # checkpoint through it only via the internal projections below.
-    linked_slim = linked.select(
-        "doc_id", "entity_id", "canonical", "linked_label"
-    ).localCheckpoint(eager=True)
+    # linking feeds CC + triples; materialize ONCE — but only the
+    # distinct values of the four columns those consumers read (doc_id,
+    # entity_id, canonical, linked_label). Every consumer reads distinct
+    # values anyway, and the full 10-column mention-level table (7.2M
+    # rows at the 1M-doc bench) paid block-manager churn for columns and
+    # repeats nobody downstream touches — guide §8's "materialize the
+    # small decision table" applied to the pipeline spine. The exposed
+    # `linked` frame keeps the full schema lazily.
+    linked_slim = (
+        linked.select("doc_id", "entity_id", "canonical", "linked_label")
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
 
     # One distinct over the big table yields the tiny entity dim shared
     # by identity canonicalization and the entity-level triples. The
     # dim is bounded by the alias dictionary, so when it fits on the
-    # driver we collect it ONCE and do identity canonicalization there
-    # (one job instead of three tiny materialization jobs — at 10^12
-    # files the per-job scheduling cost is noise, but the collected dim
-    # is exactly as small, so the fast path holds at every scale as
-    # long as the dictionary does). Distributed CC remains the fallback
-    # for unbounded entity universes.
+    # driver we collect it ONCE and build the canonical mapping and the
+    # rdf:type / tnnt:label triples there (no job and no shuffle for
+    # them — at 10^12 files the per-job scheduling cost is noise, but
+    # the collected dim is exactly as small, so the fast path holds at
+    # every scale as long as the dictionary does). Distributed CC
+    # remains the fallback for unbounded entity universes.
     ENT_DIM_DRIVER_LIMIT = 200_000
     dim_rows = (
         linked_slim.select("entity_id", "canonical", "linked_label")
@@ -100,18 +110,25 @@ def run_pipeline(
         .limit(ENT_DIM_DRIVER_LIMIT + 1)
         .collect()
     )
-    dim_schema = "entity_id string, canonical string, linked_label string"
+    doc_repo = docs.select("doc_id", "repo")
     if len(dim_rows) <= ENT_DIM_DRIVER_LIMIT:
         from mel_tnnt_spark.session import local_dim
 
-        ent_dim = local_dim(spark, dim_rows, dim_schema)
-        ents = local_dim(
-            spark,
+        canon_of = dict(
             components.canonical_entities_local(
                 [(r["entity_id"], r["canonical"]) for r in dim_rows]
-            ),
-            "entity_id string, canonical_id string",
+            )
         )
+        ents = local_dim(
+            spark, list(canon_of.items()), "entity_id string, canonical_id string"
+        )
+        ent_triples = local_dim(
+            spark,
+            {(canon_of[r["entity_id"]], "rdf:type", r["linked_label"]) for r in dim_rows}
+            | {(canon_of[r["entity_id"]], "tnnt:label", r["canonical"]) for r in dim_rows},
+            "subj string, pred string, obj string",
+        )
+        trip = triples.build_triples(doc_repo, linked_slim, ents, ent_triples=ent_triples)
     else:
         ent_dim = (
             linked_slim.select("entity_id", "canonical", "linked_label")
@@ -121,16 +138,7 @@ def run_pipeline(
         ents = components.canonical_entities(
             linked_slim, ent_dim=ent_dim
         ).localCheckpoint(eager=True)
-    # Doc dim via the key-only dedup: no content bytes shuffle for this
-    # consumer (the wide max_by would drag `content` through the wire
-    # just to emit (doc_id, repo)). Resume filtering applies here too.
-    docs = metadata.latest_commit_keys(
-        metadata.filter_processable(metadata.with_general_metadata(valid))
-    )
-    if lineage_path is not None:
-        docs = lineage.pending_only(docs, lin, stage)
-    docs = docs.select("doc_id", "repo")
-    trip = triples.build_triples(docs, linked_slim, ents, ent_dim=ent_dim)
+        trip = triples.build_triples(doc_repo, linked_slim, ents, ent_dim=ent_dim)
 
     return PipelineResult(
         source_valid=valid,

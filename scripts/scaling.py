@@ -76,7 +76,7 @@ def run_once(
     out = tempfile.mkdtemp(prefix=f"scaling_{cores}_", dir="/dev/shm")
     t0 = time.time()
     res = run_pipeline(spark, src)
-    write_triples(res.triples, f"{out}/triples", n_buckets=8)
+    write_triples(res.triples, f"{out}/triples")
     dt = time.time() - t0
     n = spark.read.parquet(f"{out}/triples").count()
     shutil.rmtree(out, ignore_errors=True)

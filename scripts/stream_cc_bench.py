@@ -20,12 +20,20 @@ stats (min/median/p90/max), first-10 vs last-10 mean (drift = cost
 growing with table size), equality verdict, wall time.
 
 Usage: python scripts/stream_cc_bench.py [--batches 105] [--edges-per-batch 10000]
+
+Cores come from $SPARK_GRAFT_CPUS (local[*] when unset); Spark's
+scratch space from $SPARK_LOCAL_DIRS (the system temp dir when unset).
+Exits 1, naming the failed condition on stderr, unless the labeling
+equals the from-scratch one AND at least 100 batches ran (the evidence
+gate); a smaller `--batches` run is a smoke test and exits 1 on the
+second condition by design.
 """
 
 from __future__ import annotations
 
 import argparse
 import json
+import os
 import shutil
 import statistics
 import sys
@@ -52,19 +60,19 @@ def main() -> int:
     from mel_tnnt_spark.streaming.incremental import stream_maintain
 
     spark = (
-        SparkSession.builder.master("local[32]")
+        SparkSession.builder.master(
+            f"local[{os.environ.get('SPARK_GRAFT_CPUS', '*')}]"
+        )
         .appName("stream-cc-bench")
         # batch-sized work: 8 post-shuffle partitions, not 32 — per-batch
         # latency here is task-count overhead, not data volume
         .config("spark.sql.shuffle.partitions", "8")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.driver.memory", "8g")
-        .config("spark.local.dir", "/dev/shm/spark-stream-cc")
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
 
-    work = tempfile.mkdtemp(prefix="stream_cc_bench_", dir="/dev/shm")
+    work = tempfile.mkdtemp(prefix="stream_cc_bench_")
     src_dir = f"{work}/edges"
     labels_path = f"{work}/labels"
     ckpt = f"{work}/ckpt"
@@ -156,7 +164,14 @@ def main() -> int:
     print(json.dumps(out))
     shutil.rmtree(work, ignore_errors=True)
     spark.stop()
-    return 0 if (diff == 0 and len(ls) >= 100) else 1
+    failed = []
+    if diff:
+        failed.append(f"labeling differs from scratch in {diff} rows")
+    if len(ls) < 100:
+        failed.append(f"{len(ls)} non-empty batches ran, the evidence gate needs >= 100")
+    for why in failed:
+        print(f"stream_cc_bench: FAILED: {why}", file=sys.stderr)
+    return 1 if failed else 0
 
 
 if __name__ == "__main__":

@@ -229,17 +229,17 @@ def test_write_triples_batch_idempotent(spark, result):
         t = result.triples.cache()
         n = t.count()
 
-        write_triples(t, path, n_buckets=4, batch_id="b1")
+        write_triples(t, path, batch_id="b1")
         assert spark.read.parquet(path).count() == n
 
         # crash-mid-write replay: same batch_id again -> same rows, not 2n
-        write_triples(t, path, n_buckets=4, batch_id="b1")
+        write_triples(t, path, batch_id="b1")
         got = spark.read.parquet(path)
         assert got.count() == n
         assert {r["batch_id"] for r in got.select("batch_id").distinct().collect()} == {"b1"}
 
         # next batch appends its own partition; b1 rows survive
-        write_triples(t.limit(5), path, n_buckets=4, batch_id="b2")
+        write_triples(t.limit(5), path, batch_id="b2")
         got = spark.read.parquet(path)
         assert got.where(F.col("batch_id") == "b1").count() == n
         assert got.where(F.col("batch_id") == "b2").count() == 5
@@ -260,13 +260,13 @@ def test_write_triples_full_then_incremental_layout(spark, result):
         path = f"{tmp}/triples"
         t = result.triples.cache()
         n = t.count()
-        write_triples(t, path, n_buckets=4, batch_id="b0", full=True)
-        write_triples(t.limit(7), path, n_buckets=4, batch_id="b1")
+        write_triples(t, path, batch_id="b0", full=True)
+        write_triples(t.limit(7), path, batch_id="b1")
         got = spark.read.parquet(path)
         assert got.count() == n + 7
         assert got.where(F.col("batch_id") == "b0").count() == n
         # a later FULL run resets the whole table (static overwrite)
-        write_triples(t.limit(3), path, n_buckets=4, batch_id="b0", full=True)
+        write_triples(t.limit(3), path, batch_id="b0", full=True)
         assert spark.read.parquet(path).count() == 3
         t.unpersist()
     finally:
@@ -294,6 +294,20 @@ def test_canonical_entities_local_vs_distributed(spark, result):
         for r in canonical_entities(result.linked).collect()
     }
     assert local == dist and local
+
+
+def test_driver_entity_triples_equal_distributed_path(spark, result):
+    """The driver-built rdf:type/tnnt:label rows plus the one-shuffle
+    mention branch give the same triples, each once, as build_triples'
+    distributed path (distributed CC, dim distincts on the cluster)."""
+    from mel_tnnt_spark.operators.components import canonical_entities
+    from mel_tnnt_spark.operators.triples import build_triples
+
+    docs = result.metadata.select("doc_id", "repo")
+    dist = build_triples(docs, result.linked, canonical_entities(result.linked))
+    got = sorted(map(tuple, result.triples.collect()))
+    assert len(got) == len(set(got))
+    assert got == sorted(map(tuple, dist.collect()))
 
 
 def test_latest_wins_uses_committed_at_not_hash_order(spark):
@@ -408,3 +422,125 @@ def test_distributed_cc_converges_on_deep_graph(spark):
     comps = {r["component"] for r in out.collect()}
     assert comps == {0}
     assert out.count() == 4000
+
+
+# ---------------------------------------------------------------------------
+# One derivation per document: the pinned per-doc table feeds the partOf
+# triples and record_done; the write is sized by AQE.
+# ---------------------------------------------------------------------------
+
+
+def _plan_leaves_and_nodes(df):
+    plan = df._jdf.queryExecution().optimizedPlan()
+    leaves = plan.collectLeaves().iterator()
+    names = []
+    while leaves.hasNext():
+        names.append(leaves.next().nodeName())
+    return names, plan.toString()
+
+
+@pytest.mark.parametrize("resume", [False, True], ids=["fresh", "resume"])
+def test_record_done_input_reads_only_the_pinned_doc_table(spark, code_files, result, resume):
+    """record_done's `select(doc_id, content_sha).distinct()` over
+    `res.metadata` must plan as a read of the pinned per-doc table: the
+    left join to the text columns is removed and the source is never
+    scanned again (no sha256, no dedup, no resume anti-join)."""
+    from mel_tnnt_spark.operators.lineage import record_done
+
+    tmp = tempfile.mkdtemp(prefix="lineage_plan_")
+    try:
+        lineage_path = None
+        if resume:
+            lineage_path = f"{tmp}/lineage"
+            record_done(result.metadata.limit(5), lineage_path, "kg", "b0")
+        res = run_pipeline(spark, code_files, lineage_path=lineage_path)
+        leaves, plan = _plan_leaves_and_nodes(
+            res.metadata.select("doc_id", "content_sha").distinct()
+        )
+        assert "Join" not in plan, plan
+        assert leaves and set(leaves) == {"LogicalRDD"}, (leaves, plan)
+        if resume:
+            assert res.metadata.count() == result.metadata.count() - 5
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+# Jobs of run_pipeline + write_triples(full=True) + record_done on the
+# 120-row fixture with no lineage recorded yet (measured: 13 on Spark
+# 4.1.2, local[4]; 21 before the per-doc table was pinned, the write
+# sized by AQE and the empty lineage made foldable).
+KG_JOB_BUDGET = 13
+
+
+def test_kg_call_sequence_job_budget(spark, code_files, result):
+    """main.py's fresh-build sequence runs no more Spark jobs than the
+    budget; the jobs are counted through a job group."""
+    from mel_tnnt_spark.operators.lineage import record_done
+    from mel_tnnt_spark.operators.triples import write_triples
+
+    code_files.count()  # the cached fixture is materialized outside the group
+    sc = spark.sparkContext
+    tmp = tempfile.mkdtemp(prefix="kg_jobs_")
+    group = "test-kg-job-budget"
+    try:
+        sc.setJobGroup(group, group)
+        try:
+            res = run_pipeline(spark, code_files, lineage_path=f"{tmp}/lineage")
+            write_triples(res.triples, f"{tmp}/triples", batch_id="b0", full=True)
+            record_done(res.metadata, f"{tmp}/lineage", "kg", "b0")
+        finally:
+            sc._jsc.clearJobGroup()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        assert 0 < jobs <= KG_JOB_BUDGET, jobs
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+def test_full_write_is_sized_by_the_data(spark, result):
+    """At fixture size a full write leaves at most one data file per
+    `pred=` partition (a fixed bucket count left up to 32)."""
+    import os
+
+    from mel_tnnt_spark.operators.triples import write_triples
+
+    tmp = tempfile.mkdtemp(prefix="triples_files_")
+    try:
+        write_triples(result.triples, f"{tmp}/t", batch_id="b0", full=True)
+        batch = f"{tmp}/t/batch_id=b0"
+        preds = sorted(os.listdir(batch))
+        assert len(preds) == 4, preds
+        for p in preds:
+            data = [f for f in os.listdir(f"{batch}/{p}") if not f.startswith((".", "_"))]
+            assert len(data) == 1, (p, data)
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+def test_duplicated_source_row_changes_nothing(spark, code_files, result):
+    """A source row duplicated verbatim gives the same mentions, triples
+    and lineage rows as the source without the duplicate (the
+    latest-commit dedup collapses it before the mention stage)."""
+    from mel_tnnt_spark.operators.lineage import record_done
+    from mel_tnnt_spark.operators.metadata import with_general_metadata
+
+    hit = result.mentions.select("doc_id").distinct().limit(1)
+    dup = (
+        with_general_metadata(code_files)
+        .join(hit, "doc_id", "left_semi")
+        .select(*code_files.columns)
+    )
+    assert dup.count() == 1
+    tmp = tempfile.mkdtemp(prefix="dup_row_")
+    try:
+        runs = {}
+        for name, src in (("clean", code_files), ("dup", code_files.unionByName(dup))):
+            res = run_pipeline(spark, src)
+            record_done(res.metadata, f"{tmp}/{name}", "kg", "b0")
+            runs[name] = (res.mentions, res.triples, spark.read.parquet(f"{tmp}/{name}"))
+        for clean, dup_df in zip(runs["clean"], runs["dup"]):
+            assert clean.count() == dup_df.count() > 0
+            assert clean.exceptAll(dup_df).count() == 0
+            assert dup_df.exceptAll(clean).count() == 0
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
