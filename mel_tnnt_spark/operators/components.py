@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from mel_tnnt_spark.session import pin_observed
+from mel_tnnt_spark.session import collect_small, pin_observed
 
 
 def _driver_union_find(rows: list[tuple], spark, schema) -> DataFrame:
@@ -61,14 +61,15 @@ def connected_components(
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 25,
-    driver_threshold: int = 200_000,
 ) -> DataFrame:
     """edges(src, dst) -> (node, component) where component is the min
     node id of the component. Isolated nodes only via self-loops.
 
     Two physical strategies behind one contract (like AQE join picks):
-    - |edges| <= driver_threshold: collect + union-find on the driver
-      (fixed-cost Spark rounds dominate at this size).
+    - at most session.DRIVER_ROWS symmetric edges (`collect_small`,
+      the size gate graph_query and run_pipeline share): collect +
+      union-find on the driver (fixed-cost Spark rounds dominate at
+      this size).
     - else: distributed iterative min-label propagation below.
     Both produce identical results; tests pin equivalence."""
     sym = (
@@ -79,13 +80,11 @@ def connected_components(
     schema = sym.select(
         F.col("a").alias("node"), F.col("a").alias("component")
     ).schema
-    if driver_threshold > 0:
-        small = sym.limit(driver_threshold + 1).collect()
-        if len(small) <= driver_threshold:
-            return _driver_union_find(
-                [(r["a"], r["b"]) for r in small], edges.sparkSession, schema
-            )
-        del small
+    small = collect_small(sym)
+    if small is not None:
+        return _driver_union_find(
+            [(r["a"], r["b"]) for r in small], edges.sparkSession, schema
+        )
     sym = sym.localCheckpoint(eager=True)
 
     labels = (

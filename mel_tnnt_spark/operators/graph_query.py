@@ -58,6 +58,26 @@ The four doubling loops (`reachability_pairs`, `transitive_closure`,
 helper, `_fixpoint`: a seed, a one-line step over `_compose`, and one
 eager localCheckpoint per round that observes (rows, value sum) in the
 same job — converged when that pair repeats, with no separate count.
+
+Two physical strategies behind one contract, as in
+components.connected_components: those four and `pagerank_micro` first
+collect their edges with one bounded take (`session.collect_small`, at
+most `session.DRIVER_ROWS` rows, no shuffle). When the edges fit, the
+answer is computed on the driver in plain Python (Kahn's order for the
+closure, one BFS per source for pairs and distances, the same integer
+ops for PageRank, the same delta recurrence for the fold) and returned
+as a LocalRelation; the driver result also stops once it passes
+DRIVER_ROWS rows and hands over to `_fixpoint`. Both tiers give the
+same columns, types, rows and ValueErrors (tests pin each function on
+both), and the fold writes the same `state.publish` entries either
+way. `bgp_match` p+ legs and `khop_aggregate` inherit the gate through
+the functions they call. On a 2k-doc KG this cuts the query mix from
+102 Spark jobs to 27 (kgbench kg_query). Past the gate a call pays for
+finding out: the take alone when the edges are over it (0.3 s for the
+1M PageRank edge rows of scripts/graph_bench.py on a 4-vCPU VM), and
+when the edges fit but the result does not, their collect plus the
+driver work up to DRIVER_ROWS result rows (2.6-2.9 s for its
+199,999-edge tree, 1.3-1.8 s for its first 30k-edge fold batch).
 """
 
 from __future__ import annotations
@@ -65,31 +85,178 @@ from __future__ import annotations
 import math
 import os
 import shutil
+from collections import Counter, defaultdict, deque
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
-from mel_tnnt_spark.session import pin_observed
+from mel_tnnt_spark import session
+from mel_tnnt_spark.session import local_dim, pin_observed
 from mel_tnnt_spark.state import numbered, publish, sweep
 
 VAR_PREFIX = "?"
 _CLOSURE_COLS = ("node", "ancestor", "depth")
+# pagerank_micro's fixed point: rank 1.0 in micro-units, and the
+# (1 - 17/20) * 1.0 every node gets before its inflow
+_MICRO = 1_000_000_000_000
+_BASE = _MICRO * 3 // 20
 # checkpoint cadence of pagerank_micro and deterministic_walks: every
 # iteration serializes them into barriers, never grows plans unbounded
 _CHECKPOINT_EVERY = 4
 
 
-def _edge_set(edges: DataFrame, src_col: str, dst_col: str, value_col=None):
-    """Distinct non-null (src, dst) edges, plus a unit path length in
-    `value_col` when given: the seed of every graph loop here."""
+def _edges(edges: DataFrame, src_col: str, dst_col: str, value_col=None):
+    """The non-null (src, dst) edges, plus a unit path length in
+    `value_col` when given."""
     cols = [F.col(src_col).alias("src"), F.col(dst_col).alias("dst")]
     if value_col:
         cols.append(F.lit(1).cast("long").alias(value_col))
-    return (
-        edges.select(*cols)
-        .where(F.col("src").isNotNull() & F.col("dst").isNotNull())
-        .distinct()
+    return edges.select(*cols).where(
+        F.col("src").isNotNull() & F.col("dst").isNotNull()
     )
+
+
+def _edge_set(edges: DataFrame, src_col: str, dst_col: str, value_col=None):
+    """`_edges`, distinct: the seed of every graph loop here."""
+    return _edges(edges, src_col, dst_col, value_col).distinct()
+
+
+# -- the driver tier ---------------------------------------------------
+
+
+def _on_driver(edges: DataFrame, src_col: str, dst_col: str, solve):
+    """`solve` over the distinct non-null (src, dst) edges as a Python
+    set, or None past DRIVER_ROWS input rows (`solve` returns None past
+    DRIVER_ROWS result rows). The edges are collected by
+    `session.collect_small`, a bounded take with no shuffle that keeps
+    the input's partitioning (duplicates are dropped here)."""
+    rows = session.collect_small(_edges(edges, src_col, dst_col))
+    return None if rows is None else solve({tuple(r) for r in rows})
+
+
+def _local(seed: DataFrame, rows) -> DataFrame:
+    """Driver-computed `rows` as a LocalRelation with the column names
+    and types of `seed`, the distributed tier's frame."""
+    schema = StructType([StructField(f.name, f.dataType) for f in seed.schema])
+    return local_dim(seed.sparkSession, rows, schema)
+
+
+def _covered(rounds: int) -> int:
+    # the longest path `_fixpoint` closes within `rounds` doubling
+    # rounds: after i rounds the state holds every path of length
+    # <= 2^i, and round i repeats the state iff nothing is longer
+    # than 2^(i-1)
+    return 2 ** (rounds - 1)
+
+
+def _closure_local(pairs: set, rounds: int):
+    """transitive_closure on the driver: (src, dst, depth) for every
+    distinct path length of the acyclic child -> parent `pairs`. The
+    paths of a node are its parents at depth 1 plus their paths one
+    deeper, so nodes are finished parents first (Kahn's order). Returns
+    (rows, converged) as `_fixpoint` would decide it (not converged on
+    a cycle or a path longer than `rounds` cover), or None once the
+    rows pass DRIVER_ROWS."""
+    parents, kids, waiting = defaultdict(list), defaultdict(list), Counter()
+    for c, p in pairs:
+        parents[c].append(p)
+        kids[p].append(c)
+        waiting[c] += 1
+    nodes = parents.keys() | kids.keys()
+    ready = deque(n for n in nodes if not waiting[n])
+    paths: dict = {}
+    total = longest = 0
+    while ready:
+        v = ready.popleft()
+        got = set()
+        for p in parents.get(v, ()):
+            got.add((p, 1))
+            got.update((a, d + 1) for a, d in paths[p])
+        paths[v] = got
+        total += len(got)
+        if total > session.DRIVER_ROWS:
+            return None
+        longest = max([longest] + [d for _, d in got])
+        for c in kids.get(v, ()):
+            waiting[c] -= 1
+            if not waiting[c]:
+                ready.append(c)
+    if len(paths) < len(nodes) or longest > _covered(rounds):
+        return [], False
+    return [(v, a, d) for v, got in paths.items() for a, d in got], True
+
+
+def _bfs_local(pairs: set, max_hops: int | None = None):
+    """(src, dst, dist) with the shortest positive path length of every
+    pair within `max_hops` (unbounded when None), cycles included: one
+    breadth-first search per source. None once the rows pass
+    DRIVER_ROWS."""
+    adj = defaultdict(list)
+    for s, t in pairs:
+        adj[s].append(t)
+    out = []
+    for s, nbrs in adj.items():
+        dist = {}
+        level, d = set(nbrs), 1
+        while level and (max_hops is None or d <= max_hops):
+            dist.update(dict.fromkeys(level, d))
+            level = {u for t in level for u in adj.get(t, ()) if u not in dist}
+            d += 1
+        out.extend((s, t, k) for t, k in dist.items())
+        if len(out) > session.DRIVER_ROWS:
+            return None
+    return out
+
+
+def _pagerank_local(pairs: set, iterations: int) -> list:
+    """pagerank_micro on the driver, the same integer ops in the same
+    order: iteration 1 sends `MICRO div outdeg` along each edge, later
+    ones `(BASE + in * 17 div 20) div outdeg`."""
+    outdeg = Counter(s for s, _ in pairs)
+    nodes = outdeg.keys() | {t for _, t in pairs}
+    if iterations == 0:
+        return [(n, _MICRO) for n in nodes]
+    inflow = None
+    for _ in range(iterations):
+        nxt = defaultdict(int)
+        for s, t in pairs:
+            rank = _MICRO if inflow is None else _BASE + inflow.get(s, 0) * 17 // 20
+            nxt[t] += rank // outdeg[s]
+        inflow = nxt
+    return [(n, _BASE + inflow.get(n, 0) * 17 // 20) for n in nodes]
+
+
+def _fold_local(closure: set, pairs: set, rounds: int):
+    """maintain_transitive_closure's delta on the driver: the same
+    recurrence N <- N u N.C u C.N u N.N minus C from N = new edges
+    minus C, over dicts. Returns (delta rows, converged), or None once
+    closure plus delta, or one round's grown paths, pass DRIVER_ROWS."""
+    by_src, by_dst = defaultdict(list), defaultdict(list)
+    for s, t, d in closure:
+        by_src[s].append((t, d))
+        by_dst[t].append((s, d))
+    delta = {(s, t, 1) for s, t in pairs} - closure
+    if not delta:
+        return delta, True
+    for _ in range(rounds):
+        if len(closure) + len(delta) > session.DRIVER_ROWS:
+            return None
+        new_by_src = defaultdict(list)
+        for s, t, d in delta:
+            new_by_src[s].append((t, d))
+        grown = set()
+        for s, m, d in delta:
+            grown.update((s, t, d + e) for t, e in by_src.get(m, ()))
+            grown.update((s, t, d + e) for t, e in new_by_src.get(m, ()))
+            grown.update((a, m, e + d) for a, e in by_dst.get(s, ()))
+            if len(grown) > session.DRIVER_ROWS:
+                return None
+        nxt = (grown - closure) | delta
+        if len(nxt) == len(delta):
+            return delta, True
+        delta = nxt
+    return delta, False
 
 
 def _compose(a: DataFrame, b: DataFrame, value_col=None) -> DataFrame:
@@ -270,11 +437,16 @@ def reachability_pairs(
     length of the shortest path that must be covered: the loop gets
     ceil(log2(max_depth)) + 1 growing rounds and raises ValueError if
     the pairs still grow past them."""
-    pairs, _, converged = _fixpoint(
-        _edge_set(edges, src_col, dst_col),
-        lambda p: p.unionByName(_compose(p, p)).distinct(),
-        _depth_rounds(max_depth),
-    )
+    seed = _edge_set(edges, src_col, dst_col)
+    rounds = _depth_rounds(max_depth)
+    local = _on_driver(edges, src_col, dst_col, _bfs_local)
+    if local is None:
+        pairs, _, converged = _fixpoint(
+            seed, lambda p: p.unionByName(_compose(p, p)).distinct(), rounds
+        )
+    else:
+        pairs = _local(seed, [(s, t) for s, t, _ in local])
+        converged = max((d for _, _, d in local), default=0) <= _covered(rounds)
     if not converged:
         raise ValueError(
             f"reachability_pairs: still growing past max_depth={max_depth} — "
@@ -302,12 +474,21 @@ def transitive_closure(
     a cycle would diverge, hence the max_depth round bound raises
     rather than looping forever. The closure's output size is the
     inherent O(n * depth) of the answer itself."""
-    paths, _, converged = _fixpoint(
-        _edge_set(edges, src_col, dst_col, "depth"),
-        lambda p: p.unionByName(_compose(p, p, "depth")).distinct(),
-        _depth_rounds(max_depth),
-        "depth",
+    seed = _edge_set(edges, src_col, dst_col, "depth")
+    rounds = _depth_rounds(max_depth)
+    local = _on_driver(
+        edges, src_col, dst_col, lambda pairs: _closure_local(pairs, rounds)
     )
+    if local is None:
+        paths, _, converged = _fixpoint(
+            seed,
+            lambda p: p.unionByName(_compose(p, p, "depth")).distinct(),
+            rounds,
+            "depth",
+        )
+    else:
+        rows, converged = local
+        paths = _local(seed, rows)
     if not converged:
         raise ValueError(
             f"transitive_closure: still growing past max_depth={max_depth} — "
@@ -329,19 +510,22 @@ def _closure_parts(state_path: str):
     return base, [f"seg-{s}" for s in segs if not bases or s > bases[-1]], nxt
 
 
-def read_transitive_closure(spark, state_path: str) -> DataFrame | None:
-    """Current maintained closure: newest compacted base plus the
-    append-log segments since it, distinct (absorbs the
-    compaction-crash duplicate window). None when no state exists."""
+def _read_parts(spark, state_path: str) -> DataFrame | None:
+    """The newest compacted base plus the append-log segments since
+    it, duplicates kept; None when no state exists."""
     base, segs, _ = _closure_parts(state_path)
-    parts = ([base] if base else []) + segs
-    if not parts:
-        return None
     df = None
-    for p in parts:
+    for p in ([base] if base else []) + segs:
         part = spark.read.parquet(os.path.join(state_path, p))
         df = part if df is None else df.unionByName(part)
-    return df.distinct()
+    return df
+
+
+def read_transitive_closure(spark, state_path: str) -> DataFrame | None:
+    """Current maintained closure: `_read_parts`, distinct (absorbs the
+    compaction-crash duplicate window). None when no state exists."""
+    df = _read_parts(spark, state_path)
+    return None if df is None else df.distinct()
 
 
 def maintain_transitive_closure(
@@ -386,18 +570,86 @@ def maintain_transitive_closure(
 
     Idempotent replay for free: a replayed batch's paths are already
     rows of C, so the delta shrinks to empty and the fold writes
-    nothing at all."""
+    nothing at all.
+
+    When the batch and the stored closure (duplicates included) each
+    have at most DRIVER_ROWS rows, and closure plus delta stay within
+    it, the delta is computed by the same recurrence on the driver and
+    the returned closure is a LocalRelation; the writes are the same."""
     fresh = _edge_set(edge_batch, src_col, dst_col, "depth")
     sweep(state_path)
     base, segs, nxt = _closure_parts(state_path)
-    stored = read_transitive_closure(spark, state_path)
-    # pin the view ONCE: the delta loop probes the closure in ~3 joins
-    # per round — without this, every probe re-reads base + segs from
-    # parquet and re-runs the distinct
+    # read once for both tiers: each part's read runs a schema job
+    parts = _read_parts(spark, state_path)
+    rounds = _depth_rounds(max_depth)
+    local = _on_driver(
+        edge_batch, src_col, dst_col,
+        lambda pairs: _fold_on_driver(parts, pairs, rounds),
+    )
+    if local is not None:
+        stored, new, converged = local
+        # one partition, so a seg is one file (a LocalRelation scan
+        # splits over every core)
+        delta = _local(fresh, new).coalesce(1)
+        closure, n_delta = _local(fresh, stored), len(new)
+    else:
+        closure, delta, n_delta, converged = _fold_distributed(
+            parts, fresh, rounds
+        )
+    if not converged:
+        raise ValueError(
+            "maintain_transitive_closure: delta still growing past "
+            f"max_depth={max_depth} — cyclic input or raise max_depth"
+        )
+    closure = closure.toDF(*_CLOSURE_COLS)
+    if n_delta == 0:
+        # replayed (or fully-known) batch: nothing to write — the
+        # no-op IS the idempotency
+        return closure
+    delta = delta.toDF(*_CLOSURE_COLS)
+
+    publish(delta, state_path, f"seg-{nxt}")
+    # LAZY return: both inputs are checkpointed (or driver-local), and
+    # only the caller who actually consumes the full closure pays for
+    # the union — the fold itself writes O(delta)
+    updated = closure.unionByName(delta)
+    if len(segs) + 1 >= compact_every:
+        # compaction: merge base + segs + this delta into a new base,
+        # THEN drop the absorbed parts — leftover segs have numbers
+        # <= the new base version, so reads exclude them exactly
+        publish(updated.distinct(), state_path, f"base-v{nxt}")
+        for d in ([base] if base else []) + segs + [f"seg-{nxt}"]:
+            shutil.rmtree(os.path.join(state_path, d), ignore_errors=True)
+    return updated
+
+
+def _fold_on_driver(parts: DataFrame | None, pairs: set, rounds: int):
+    """(stored closure rows, delta rows, converged) of one fold of the
+    edge set `pairs` computed on the driver, or None when the stored
+    `parts` or the result are over DRIVER_ROWS. The parts are collected
+    by `session.collect_small`, duplicates dropped here."""
+    stored = (
+        [] if parts is None
+        else session.collect_small(parts.select(*_CLOSURE_COLS))
+    )
+    if stored is None:
+        return None
+    stored = {tuple(r) for r in stored}
+    local = _fold_local(stored, pairs, rounds)
+    return None if local is None else (stored, *local)
+
+
+def _fold_distributed(parts: DataFrame | None, fresh: DataFrame, rounds: int):
+    """(stored closure, delta, delta rows, converged) of one fold of
+    the stored `parts` as `_fixpoint` over pinned frames."""
+    # distinct absorbs the compaction-crash duplicate window, as in
+    # read_transitive_closure. Pin the view ONCE: the delta loop probes
+    # the closure in ~3 joins per round — without this, every probe
+    # re-reads base + segs from parquet and re-runs the distinct
     closure = (
-        stored.select(*_CLOSURE_COLS).toDF("src", "dst", "depth")
+        parts.distinct().select(*_CLOSURE_COLS).toDF("src", "dst", "depth")
         .localCheckpoint(eager=True)
-        if stored is not None
+        if parts is not None
         else fresh.limit(0)
     )
 
@@ -422,34 +674,8 @@ def maintain_transitive_closure(
 
     # same round bound as transitive_closure: each growing round doubles
     # the number of new-edge segments a discovered path can contain
-    delta, n_delta, converged = _fixpoint(
-        _minus(fresh), _step, _depth_rounds(max_depth), "depth"
-    )
-    if not converged:
-        raise ValueError(
-            "maintain_transitive_closure: delta still growing past "
-            f"max_depth={max_depth} — cyclic input or raise max_depth"
-        )
-    closure = closure.toDF(*_CLOSURE_COLS)
-    if n_delta == 0:
-        # replayed (or fully-known) batch: nothing to write — the
-        # no-op IS the idempotency
-        return closure
-    delta = delta.toDF(*_CLOSURE_COLS)
-
-    publish(delta, state_path, f"seg-{nxt}")
-    # LAZY return: both inputs are checkpointed, and only the caller
-    # who actually consumes the full closure pays for the union —
-    # the fold itself writes O(delta)
-    updated = closure.unionByName(delta)
-    if len(segs) + 1 >= compact_every:
-        # compaction: merge base + segs + this delta into a new base,
-        # THEN drop the absorbed parts — leftover segs have numbers
-        # <= the new base version, so reads exclude them exactly
-        publish(updated.distinct(), state_path, f"base-v{nxt}")
-        for d in ([base] if base else []) + segs + [f"seg-{nxt}"]:
-            shutil.rmtree(os.path.join(state_path, d), ignore_errors=True)
-    return updated
+    delta, n_delta, converged = _fixpoint(_minus(fresh), _step, rounds, "depth")
+    return closure, delta, n_delta, converged
 
 
 def pagerank_micro(
@@ -479,6 +705,16 @@ def pagerank_micro(
     if iterations < 0:
         raise ValueError(f"pagerank_micro: iterations must be >= 0, got {iterations}")
     e = _edge_set(edges, src_col, dst_col)
+    ranks = _on_driver(
+        edges, src_col, dst_col, lambda pairs: _pagerank_local(pairs, iterations)
+    )
+    if ranks is not None:
+        node = e.select(F.col("src").alias("node")).unionByName(
+            e.select(F.col("dst").alias("node"))
+        )
+        return _local(
+            node.select("node", F.lit(0).cast("long").alias("rank_micro")), ranks
+        )
     # Hoist the out-degree join OUT of the iteration loop (guide §2.4:
     # remove shuffles outright): the degree of an edge's source is
     # loop-invariant, so attach it to the edge list ONCE — each
@@ -502,10 +738,8 @@ def pagerank_micro(
         .unionByName(e_deg.select(F.col("dst").alias("node")).distinct())
         .distinct()
     )
-    MICRO = 1_000_000_000_000
-    BASE = MICRO * 3 // 20  # (1 - 17/20) * 1.0 in micro-units
     if iterations == 0:
-        return nodes.withColumn("rank_micro", F.lit(MICRO).cast("long"))
+        return nodes.withColumn("rank_micro", F.lit(_MICRO).cast("long"))
     # SPARSE rank representation (guide §2.4 — remove shuffles
     # outright): after any iteration, a node absent from the inflow
     # table has rank exactly BASE (BASE + 17/20 * 0), a constant — so
@@ -521,7 +755,7 @@ def pagerank_micro(
         if inflow is None:
             contrib = e_deg.select(
                 F.col("dst").alias("node"),
-                F.expr(f"{MICRO}L div outdeg").alias("c"),
+                F.expr(f"{_MICRO}L div outdeg").alias("c"),
             )
         else:
             contrib = (
@@ -531,7 +765,7 @@ def pagerank_micro(
                 .select(
                     F.col("dst").alias("node"),
                     F.expr(
-                        f"({BASE}L + coalesce(in_micro, 0L) * 17 div 20)"
+                        f"({_BASE}L + coalesce(in_micro, 0L) * 17 div 20)"
                         " div outdeg"
                     ).alias("c"),
                 )
@@ -548,7 +782,7 @@ def pagerank_micro(
     return nodes.join(inflow, "node", "left").select(
         "node",
         (
-            F.lit(BASE) + F.expr("coalesce(in_micro, 0L) * 17 div 20")
+            F.lit(_BASE) + F.expr("coalesce(in_micro, 0L) * 17 div 20")
         ).cast("long").alias("rank_micro"),
     )
 
@@ -583,12 +817,13 @@ def shortest_paths(
             .agg(F.min("dist").alias("dist"))
         )
 
-    d, _, _ = _fixpoint(
-        _edge_set(edges, src_col, dst_col, "dist"),
-        _step,
-        math.ceil(math.log2(max_hops)),
-        "dist",
+    seed = _edge_set(edges, src_col, dst_col, "dist")
+    local = _on_driver(
+        edges, src_col, dst_col, lambda pairs: _bfs_local(pairs, max_hops)
     )
+    if local is not None:
+        return _local(seed, local)
+    d, _, _ = _fixpoint(seed, _step, math.ceil(math.log2(max_hops)), "dist")
     return d
 
 

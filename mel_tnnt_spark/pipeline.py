@@ -18,6 +18,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 
 from mel_tnnt_spark.operators import components, linking, lineage, mentions, metadata, summaries, triples
+from mel_tnnt_spark.session import collect_small, local_dim
 
 
 @dataclass
@@ -97,23 +98,19 @@ def run_pipeline(
     # One distinct over the big table yields the tiny entity dim shared
     # by identity canonicalization and the entity-level triples. The
     # dim is bounded by the alias dictionary, so when it fits on the
-    # driver we collect it ONCE and build the canonical mapping and the
+    # driver (`collect_small`: at most session.DRIVER_ROWS rows, the
+    # same size gate as graph_query and connected_components) we
+    # collect it ONCE and build the canonical mapping and the
     # rdf:type / tnnt:label triples there (no job and no shuffle for
     # them — at 10^12 files the per-job scheduling cost is noise, but
     # the collected dim is exactly as small, so the fast path holds at
     # every scale as long as the dictionary does). Distributed CC
     # remains the fallback for unbounded entity universes.
-    ENT_DIM_DRIVER_LIMIT = 200_000
-    dim_rows = (
-        linked_slim.select("entity_id", "canonical", "linked_label")
-        .distinct()
-        .limit(ENT_DIM_DRIVER_LIMIT + 1)
-        .collect()
+    dim_rows = collect_small(
+        linked_slim.select("entity_id", "canonical", "linked_label").distinct()
     )
     doc_repo = docs.select("doc_id", "repo")
-    if len(dim_rows) <= ENT_DIM_DRIVER_LIMIT:
-        from mel_tnnt_spark.session import local_dim
-
+    if dim_rows is not None:
         canon_of = dict(
             components.canonical_entities_local(
                 [(r["entity_id"], r["canonical"]) for r in dim_rows]

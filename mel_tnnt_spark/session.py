@@ -17,8 +17,17 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
+# The one "small enough for the driver" size, in rows: an input this
+# small (graph edges, the entity dim, a similarity graph) is collected
+# and finished in plain Python, because a Spark loop over it pays a
+# fixed per-job cost many times over ("Scalability! But at what
+# COST?", McSherry et al., HotOS 2015). Read at call time, so a test
+# can set it to 0 to run the distributed tier on small inputs.
+DRIVER_ROWS = 200_000
 
 
 def get_spark(
@@ -123,7 +132,7 @@ def get_spark(
     return b.getOrCreate()
 
 
-def local_dim(spark: SparkSession, rows, schema: str):
+def local_dim(spark: SparkSession, rows, schema: str | StructType):
     """Config-sized dimension table as a JVM LocalRelation.
 
     Plain `createDataFrame(list)` parallelizes even 20 rows over
@@ -135,18 +144,23 @@ def local_dim(spark: SparkSession, rows, schema: str):
     round-4 "q82 cost anomaly"; the suspected md5 gram hash A/B'd as
     a null result). The Arrow path converts the rows driver-side into
     a LocalRelation: zero runtime job, constant-foldable, and a
-    crossJoin of two such dims plans 1x1, not 32x32 tasks. Falls back
-    to single-slice parallelize when pandas/Arrow is unavailable."""
+    crossJoin of two such dims plans 1x1, not 32x32 tasks. Zero rows
+    plan as an empty LocalRelation (the Arrow path would not), so a
+    join against an empty dim folds away. Falls back to single-slice
+    parallelize when pandas/Arrow is unavailable. `schema` is a DDL
+    string or a StructType."""
     # Materialize up front: the pandas attempt below consumes `rows`,
     # and a generator input would otherwise leave the fallback an
     # exhausted iterator (silently-empty dim).
     rows = list(rows)
+    if not rows:
+        return spark.createDataFrame([], schema).where(F.lit(False))
     try:
         import pandas as pd
 
         from pyspark.sql.types import _parse_datatype_string
 
-        st = _parse_datatype_string(schema)
+        st = _parse_datatype_string(schema) if isinstance(schema, str) else schema
         pdf = pd.DataFrame(
             [tuple(r) for r in rows], columns=[f.name for f in st.fields]
         )
@@ -158,6 +172,26 @@ def local_dim(spark: SparkSession, rows, schema: str):
     return spark.createDataFrame(
         spark.sparkContext.parallelize(rows, 1), schema
     )
+
+
+def collect_small(df: DataFrame) -> list | None:
+    """The rows of `df` when it has at most DRIVER_ROWS of them, else
+    None. One `limit(DRIVER_ROWS + 1)` take, which Spark runs
+    incrementally (one partition first, then a growing share of the
+    rest) and stops once it holds more. The take is held on the JVM,
+    and only a result that fits crosses to Python as a no-job
+    LocalRelation collect: a frame over the gate costs its take and no
+    Python Row objects (200,001 of them cost ~1 s on a 4-vCPU VM, the
+    take ~0.2 s). No job at all when DRIVER_ROWS is 0 (the driver tier
+    is off)."""
+    if DRIVER_ROWS <= 0:
+        return None
+    rows = df.limit(DRIVER_ROWS + 1)._jdf.collectAsList()
+    if rows.size() > DRIVER_ROWS:
+        return None
+    spark = df.sparkSession
+    jdf = spark._jsparkSession.createDataFrame(rows, df._jdf.schema())
+    return DataFrame(jdf, spark).collect()
 
 
 def pin_observed(df: DataFrame, *metrics: Column) -> tuple[DataFrame, tuple]:

@@ -4,15 +4,20 @@ against an independent closed-form or brute-force computation."""
 
 from __future__ import annotations
 
+import inspect
 import itertools
 import random
 
 import pytest
 from pyspark.sql import functions as F
 
+from mel_tnnt_spark import session
 from mel_tnnt_spark.operators.graph_query import (
     bgp_match,
+    maintain_transitive_closure,
     pagerank_micro,
+    reachability_pairs,
+    shortest_paths,
     transitive_closure,
     triangle_count,
 )
@@ -902,9 +907,7 @@ def _loop_case(spark, tmp_path, op):
         )
     # the tree is one component, labelled by its root 0
     return (
-        lambda: connected_components(
-            df(_LOOP_EDGES), "child", "parent", driver_threshold=0
-        ),
+        lambda: connected_components(df(_LOOP_EDGES), "child", "parent"),
         {(n, 0) for n in range(40)},
     )
 
@@ -921,7 +924,10 @@ def _loop_case(spark, tmp_path, op):
 )
 def test_graph_loops_run_no_extra_actions(spark, tmp_path, monkeypatch, op):
     """Convergence is read from each round's checkpoint job: a loop that
-    calls count() or collect() per round fails here."""
+    calls count() or collect() per round fails here. The gate is at 0,
+    so every loop takes its distributed tier (the driver tier's one
+    bounded collect is pinned by the job-count tests below)."""
+    monkeypatch.setattr(session, "DRIVER_ROWS", 0)
     call, want = _loop_case(spark, tmp_path, op)
 
     def _refuse(self, *args, **kwargs):
@@ -933,3 +939,187 @@ def test_graph_loops_run_no_extra_actions(spark, tmp_path, monkeypatch, op):
         m.setattr(cls, "collect", _refuse)
         out = call()
     assert {tuple(r) for r in out.collect()} == want
+
+
+# -- the two tiers behind the size gate ----------------------------------
+#
+# Below session.DRIVER_ROWS the five gated functions run on the driver;
+# the tests above feed them small inputs, so at the default gate they
+# test the driver tier. Each runs again here with the gate at 0, which
+# sends every call through `_fixpoint`: both tiers answer to the same
+# assertions (the _LOOP_EDGES DAG, the cyclic cases, the max_depth
+# raises, string and long ids).
+
+_GATED_TESTS = [
+    test_bgp_property_path_cyclic_predicate,
+    test_bgp_property_path_one_or_more,
+    test_bgp_property_path_max_depth_bounds_the_leg,
+    test_transitive_closure_chain_depth_exact,
+    test_transitive_closure_ternary_tree,
+    test_transitive_closure_cycle_raises,
+    test_pagerank_micro_matches_integer_reference,
+    test_pagerank_micro_dangling_and_zero_iters,
+    test_maintain_closure_chained_equals_scratch_any_order,
+    test_maintain_closure_multi_depth_pair_kept,
+    test_maintain_closure_cycle_raises,
+    test_maintain_closure_lsm_compaction_and_crash_leftovers,
+    test_stream_maintain_closure_equals_scratch_and_restart_noop,
+    test_shortest_paths_matches_bfs_on_cyclic_graph,
+    test_shortest_paths_hop_bound_and_ring,
+    test_khop_aggregate_matches_bfs_reference,
+]
+
+
+@pytest.fixture
+def fixpoint_tier(monkeypatch):
+    """The gate at 0: every gated call takes the `_fixpoint` tier."""
+    monkeypatch.setattr(session, "DRIVER_ROWS", 0)
+
+
+@pytest.mark.parametrize(
+    "case", _GATED_TESTS, ids=lambda t: t.__name__[len("test_"):]
+)
+def test_fixpoint_tier(fixpoint_tier, request, case):
+    case(**{n: request.getfixturevalue(n) for n in inspect.signature(case).parameters})
+
+
+def _jobs(spark, fn, group):
+    """(fn(), ids of the Spark jobs it ran), counted through a job
+    group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _edges(spark, rows=_LOOP_EDGES, schema="child long, parent long"):
+    return spark.createDataFrame(rows, schema)
+
+
+_GATED_CALLS = {
+    "transitive_closure": lambda e, _: transitive_closure(e, "child", "parent"),
+    "reachability_pairs": lambda e, _: reachability_pairs(e, "child", "parent"),
+    "shortest_paths": lambda e, _: shortest_paths(e, "child", "parent", 3),
+    "pagerank_micro": lambda e, _: pagerank_micro(e, "child", "parent", 4),
+    "maintain_transitive_closure": lambda e, state: maintain_transitive_closure(
+        e.sparkSession, state, e, "child", "parent"
+    ),
+}
+
+
+def _fold_state(spark, path):
+    """A stored closure of the first 20 _LOOP_EDGES, for a fold of the
+    rest."""
+    maintain_transitive_closure(
+        spark, path, _edges(spark, _LOOP_EDGES[:20]), "child", "parent"
+    )
+    return path
+
+
+def _probe_jobs(spark, group, edges, state=None):
+    """The jobs of the driver tier's bounded collects alone: one
+    `session.collect_small` of the edges, plus, for the fold, one of the
+    stored parts (whose read runs `spark.read.parquet`'s schema job).
+    Spark's take reads one partition first and then more, so the count
+    follows the input's partitioning."""
+    from mel_tnnt_spark.operators import graph_query
+
+    def probe():
+        session.collect_small(graph_query._edges(edges, "child", "parent"))
+        if state:
+            session.collect_small(graph_query._read_parts(spark, state))
+
+    return len(_jobs(spark, probe, group)[1])
+
+
+@pytest.mark.parametrize("op", list(_GATED_CALLS))
+def test_driver_tier_runs_only_its_bounded_collects(spark, tmp_path, monkeypatch, op):
+    """Below the gate a call runs its bounded collects plus, for the
+    fold, the seg write. The fold has two inputs, the batch and the
+    stored closure, and reading the stored parts costs the schema job
+    of `spark.read.parquet`, as on the distributed tier. Everything
+    else is driver work, and the result is a LocalRelation that costs
+    the caller no job to collect."""
+    from mel_tnnt_spark.operators import graph_query
+
+    state = _fold_state(spark, str(tmp_path / "s")) if op.startswith("maintain") else None
+    edges = _edges(spark, _LOOP_EDGES[20:] if state else _LOOP_EDGES)
+    writes = []
+    publish = graph_query.publish
+
+    def _publish(df, root, name, *a, **kw):
+        # the write runs under its own group, so the call's group below
+        # holds only the collects
+        writes.append(_jobs(spark, lambda: publish(df, root, name, *a, **kw), f"w-{op}")[1])
+        spark.sparkContext.setJobGroup(f"a-{op}", f"a-{op}")
+
+    monkeypatch.setattr(graph_query, "publish", _publish)
+    probe = _probe_jobs(spark, f"p-{op}", edges, state)
+    out, jobs = _jobs(spark, lambda: _GATED_CALLS[op](edges, state), f"a-{op}")
+    assert 0 < len(jobs) == probe, (jobs, probe)
+    assert len(writes) == (1 if state else 0) and all(writes)
+    if not state:
+        assert "LocalRelation" in out._jdf.queryExecution().optimizedPlan().toString()
+        assert _jobs(spark, out.collect, f"c-{op}")[1] == []
+
+
+@pytest.mark.parametrize("op", list(_GATED_CALLS))
+def test_gate_just_below_the_input_costs_one_collect(spark, tmp_path, monkeypatch, op):
+    """An input one row over the gate falls back to `_fixpoint`, and the
+    bounded collect of the edges that found out is the only extra
+    cost."""
+    fold = op.startswith("maintain")
+    edges = _edges(spark, _LOOP_EDGES[20:] if fold else _LOOP_EDGES)
+    n = len(_LOOP_EDGES) - 20 if fold else len(_LOOP_EDGES)
+    # both folds start from the same stored closure, built at the
+    # default gate
+    states = {g: _fold_state(spark, str(tmp_path / f"s{g}")) if fold else None
+              for g in (0, n - 1)}
+    counts, rows = [], []
+    for gate, state in states.items():
+        monkeypatch.setattr(session, "DRIVER_ROWS", gate)
+        out, jobs = _jobs(spark, lambda: _GATED_CALLS[op](edges, state), f"b-{op}-{gate}")
+        counts.append(len(jobs))
+        rows.append({tuple(r) for r in out.collect()})
+    probe = _probe_jobs(spark, f"q-{op}", edges)
+    assert probe >= 1 and counts[1] == counts[0] + probe, (counts, probe)
+    assert rows[0] == rows[1]
+
+
+def test_closure_falls_back_on_output_size(spark, monkeypatch):
+    """100 chain edges fit a gate of 1,000 rows, their 5,050 closure
+    rows do not: the driver tier stops there and the `_fixpoint` tier
+    answers, equal to the distributed result."""
+    chain = [(i, i - 1) for i in range(1, 101)]
+    edges = _edges(spark, chain)
+    monkeypatch.setattr(session, "DRIVER_ROWS", 1_000)
+    got = transitive_closure(edges, "child", "parent")
+    assert "LocalRelation" not in got._jdf.queryExecution().optimizedPlan().toString()
+    monkeypatch.setattr(session, "DRIVER_ROWS", 0)
+    want = transitive_closure(edges, "child", "parent")
+    rows = {tuple(r) for r in got.collect()}
+    assert len(rows) == 5_050
+    assert rows == {tuple(r) for r in want.collect()} == _closure_ref(chain)
+
+
+@pytest.mark.parametrize("schema", ["child long, parent long", "child string, parent string"])
+@pytest.mark.parametrize("op", list(_GATED_CALLS))
+def test_both_tiers_give_equal_schema(spark, tmp_path, monkeypatch, op, schema):
+    """Same column names and types, and the same rows, from both tiers;
+    null endpoints are dropped by both."""
+    cast = str if "string" in schema else int
+    rows = [(cast(a), cast(b)) for a, b in _LOOP_EDGES] + [(None, cast(1)), (cast(2), None)]
+    got = {}
+    for gate in (session.DRIVER_ROWS, 0):
+        monkeypatch.setattr(session, "DRIVER_ROWS", gate)
+        out = _GATED_CALLS[op](_edges(spark, rows, schema), str(tmp_path / f"s{gate}"))
+        got[gate] = (
+            [(f.name, f.dataType) for f in out.schema],
+            {tuple(r) for r in out.collect()},
+        )
+    driver, fixpoint = got.values()
+    assert driver == fixpoint

@@ -331,7 +331,8 @@ def test_latest_wins_uses_committed_at_not_hash_order(spark):
     assert out[0]["committed_at"] == 200
 
 
-def test_connected_components_basic(spark):
+def test_connected_components_basic(spark, monkeypatch):
+    from mel_tnnt_spark import session
     from mel_tnnt_spark.operators.components import connected_components
 
     edges = spark.createDataFrame(
@@ -341,10 +342,10 @@ def test_connected_components_basic(spark):
     # driver union-find fast path
     got = {(r["node"], r["component"]) for r in connected_components(edges).collect()}
     assert got == expect
-    # distributed iterative path must agree exactly
+    # distributed iterative path (the size gate at 0) must agree exactly
+    monkeypatch.setattr(session, "DRIVER_ROWS", 0)
     got_dist = {
-        (r["node"], r["component"])
-        for r in connected_components(edges, driver_threshold=0).collect()
+        (r["node"], r["component"]) for r in connected_components(edges).collect()
     }
     assert got_dist == expect
 
@@ -408,17 +409,19 @@ def test_incremental_components_never_shuffles_labels(spark):
     assert got[400] == 6 and got[5] == 0 and got[4] == 0
 
 
-def test_distributed_cc_converges_on_deep_graph(spark):
+def test_distributed_cc_converges_on_deep_graph(spark, monkeypatch):
     """Pointer jumping (label <- label(label)) must turn O(diameter)
     min-label propagation into O(log diameter): a 4000-node path has
     diameter 4000 and would need 4000 plain rounds — far beyond
     max_iter — but converges in ~log2 rounds with jumping."""
+    from mel_tnnt_spark import session
     from mel_tnnt_spark.operators.components import connected_components
 
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(3999)], "src bigint, dst bigint"
     )
-    out = connected_components(edges, driver_threshold=0, max_iter=20)
+    monkeypatch.setattr(session, "DRIVER_ROWS", 0)
+    out = connected_components(edges, max_iter=20)
     comps = {r["component"] for r in out.collect()}
     assert comps == {0}
     assert out.count() == 4000

@@ -139,13 +139,19 @@ def test_only_state_module_renames_or_spells_staging():
 # -- every maintained operator, killed between its write and rename ---
 
 
-def _closure(compact_every):
+def _closure(compact_every, driver_rows=None):
+    """The closure fold; `driver_rows=0` turns its driver tier off, so
+    the fold runs through `_fixpoint` and writes the same entries."""
     def fold(spark, root, rows):
+        from mel_tnnt_spark import session
         from mel_tnnt_spark.operators.graph_query import maintain_transitive_closure
 
         b = spark.createDataFrame(rows, "child long, parent long")
-        return _rows(maintain_transitive_closure(
-            spark, root, b, "child", "parent", compact_every=compact_every))
+        with pytest.MonkeyPatch.context() as m:
+            if driver_rows is not None:
+                m.setattr(session, "DRIVER_ROWS", driver_rows)
+            return _rows(maintain_transitive_closure(
+                spark, root, b, "child", "parent", compact_every=compact_every))
 
     return fold
 
@@ -207,6 +213,11 @@ _CASES = {
                     [_CHAIN[:4], _CHAIN[4:8], _CHAIN[8:]], 1),
     "closure_compaction": (
         _closure(2), "__staging-base-v", [_CHAIN[:4], _CHAIN[4:8], _CHAIN[8:]], 1),
+    "closure_seg_fixpoint": (_closure(8, driver_rows=0), "__staging-seg-",
+                             [_CHAIN[:4], _CHAIN[4:8], _CHAIN[8:]], 1),
+    "closure_compaction_fixpoint": (
+        _closure(2, driver_rows=0), "__staging-base-v",
+        [_CHAIN[:4], _CHAIN[4:8], _CHAIN[8:]], 1),
     "weighted_sample": (_sample, "__staging-v=", [
         [(i, float(i % 7 + 1)) for i in range(0, 30)],
         [(i, float(i % 5 + 1)) for i in range(30, 60)],
